@@ -21,7 +21,7 @@ Physical strategy — the standard distributed as-of, NOT a range join:
 Cost: O(n log n) per partition for the sort, shuffle volume = |left|+|right|
 — versus a naive range join's per-key quadratic blowup.  Skewed keys are
 split by AQE; at 100 TB pre-bucketing both sides by the key makes step 2
-shuffle-free (see sources/bucketing.py).
+shuffle-free.
 """
 
 from __future__ import annotations

@@ -5,7 +5,7 @@ after parquet.  Built from the public Apache Avro 1.11 specification
 (avro.apache.org/docs — file container format + binary encoding); no
 avro library exists in this environment, so both the writer (fixture)
 and reader implement the spec directly, the same discipline as every
-other codec here (operators/mp3.py, operators/mkv.py).
+other codec here.
 
 Format walked:
 
@@ -176,7 +176,7 @@ def _decode_field(ftype, buf: bytes, pos: int):
     raise ValueError(f"unsupported avro type {ftype!r}")
 
 
-_MAX_SCHEMA_DEPTH = 40  # same walk cap as mp4/mkv — no hostile recursion
+_MAX_SCHEMA_DEPTH = 40  # walk cap — no hostile recursion
 
 
 def _compile_type(ft, depth: int = 0):

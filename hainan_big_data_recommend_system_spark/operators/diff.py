@@ -5,7 +5,7 @@ audits ("did the backfill change anything it shouldn't?"): given OLD
 and NEW versions of a keyed table, classify every key as ``added``,
 ``removed``, ``changed`` or ``unchanged`` and say WHICH columns
 changed.  One full-outer join on the key — shuffle on both sides,
-co-locatable via bucketing (sources/bucketing.py) — plus scan-local
+co-locatable via bucketing — plus scan-local
 null-safe comparisons; no windows, no Python.
 
 Null-safety matters twice: the OUTER join's presence test must use the

@@ -149,6 +149,18 @@ def lsh_signatures(
     """
     if planes is None:
         planes = pinned_hyperplanes()
+    n_tables = 1 + max(t for t, _, _ in planes)
+    bits = 1 + max(j for _, j, _ in planes)
+    # plane matrix in (t, j) row order — pinned_hyperplanes emits t-major
+    plane_rows = sorted(planes, key=lambda p: (p[0], p[1]))
+    grid = [(t, j) for t in range(n_tables) for j in range(bits)]
+    if [(t, j) for t, j, _ in plane_rows] != grid:
+        # a missing or repeated (t, j) would shift every later plane into
+        # the wrong bit and compute wrong buckets without any error
+        raise ValueError(
+            f"planes must list every (table, bit) pair of the "
+            f"{n_tables} x {bits} grid exactly once"
+        )
     plane_dim = len(planes[0][2])
     if data_dim is None:
         data_dim = _vec_dim(df, vec_col)
@@ -159,10 +171,6 @@ def lsh_signatures(
         )
     from .multimodal import _spread
 
-    n_tables = 1 + max(t for t, _, _ in planes)
-    bits = 1 + max(j for _, j, _ in planes)
-    # plane matrix in (t, j) row order — pinned_hyperplanes emits t-major
-    plane_rows = sorted(planes, key=lambda p: (p[0], p[1]))
     base = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vid"),
         quantize_vec(F.col(vec_col), scale).alias("__qv"),

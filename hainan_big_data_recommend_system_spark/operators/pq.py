@@ -76,17 +76,18 @@ def _books_np(codebooks: list[list[list[int]]]):
 
 def _to_matrix(series, need_dim: int):
     """Arrow column of vectors → (n, need_dim) int64 matrix, rejecting
-    ragged rows (mixed dimensionality builds an object-dtype array —
-    the in-kernel backstop behind the one-row driver probe)."""
+    ragged rows — the in-kernel backstop behind the one-row driver probe.
+    Row lengths are checked before stacking: numpy >= 1.24 raises its
+    own ValueError on ragged input instead of building an object array."""
     import numpy as np
 
-    x = np.array(series.tolist())
-    if x.dtype == object or x.ndim != 2 or x.shape[1] != need_dim:
+    rows = series.tolist()
+    if any(r is None or len(r) != need_dim for r in rows):
         raise ValueError(
             f"mixed or wrong vector dimensionality in batch (need "
             f"{need_dim} per row); clean the corpus or refit codebooks"
         )
-    return x.astype(np.int64, copy=False)
+    return np.array(rows).astype(np.int64, copy=False)
 
 
 def _encode_np(x, books):

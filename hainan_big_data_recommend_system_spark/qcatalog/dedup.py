@@ -419,7 +419,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental dedup — the operational shape at 100 TB: hash only the
     NEW batch and join it against the existing corpus's fingerprint index
     (in production a bucketed table on fp, making this scan-and-merge with
-    no corpus-side shuffle; `sources/bucketing.py`).  Never re-dedups the
+    no corpus-side shuffle).  Never re-dedups the
     corpus itself."""
     docs = load_table(spark, sf_dir, "documents")
     fp = F.md5(F.col("text").cast("binary"))

@@ -964,8 +964,8 @@ def q_data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_shipping_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-to-ship latency SLOs per priority: the fact-to-fact join
-    (orders ⋈ lineitem on the order key — co-locatable via bucketing,
-    sources/bucketing.py) feeds exact integer day gaps into the
+    (orders ⋈ lineitem on the order key — co-locatable via bucketing)
+    feeds exact integer day gaps into the
     value-compressed quantiles (operators/anomaly.py) — p50/p90 at
     ceil(q·n) ranks plus min/max, all joined back as one-row-per-group
     broadcasts.  The operational-analytics complement to

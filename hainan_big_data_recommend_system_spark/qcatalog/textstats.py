@@ -363,6 +363,11 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             for did, text in zip(pdf["doc_id"], pdf["text"]):
                 did = int(did)
                 tb = str(text).encode("utf-8")
+                # the media payloads keep the generators' str() encoding,
+                # but NULL text has NULL length and digest (sha2/length
+                # over a NULL column)
+                n_bytes = None if text is None else len(tb)
+                sha = None if text is None else hashlib.sha256(tb).hexdigest()
                 gif_dec = decode_any(
                     make_gif(
                         1 + did % 21, 1 + did % 13, tb,
@@ -385,9 +390,9 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 rows.append({
                     "doc_id": did,
-                    "n_bytes": len(tb),
-                    "content_sha256": hashlib.sha256(tb).hexdigest(),
-                    "size_class": "large" if len(tb) >= 1024 else "small",
+                    "n_bytes": n_bytes,
+                    "content_sha256": sha,
+                    "size_class": "large" if (n_bytes or 0) >= 1024 else "small",
                     "img_w": bw,
                     "img_h": bh,
                     "img_bpp": bc * 8,
@@ -1289,109 +1294,6 @@ def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "audio_fingerprint_dedup",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 7 = 3 AND doc_id > 0
-                    THEN doc_id - 1 ELSE doc_id END AS src,
-               doc_id % 7 = 3 AND doc_id > 0 AS twin
-        FROM documents
-    ),
-    geo AS (
-        SELECT doc_id, src,
-               528 + (src % 3) * 16
-                   + CASE WHEN twin THEN 32 ELSE 0 END AS n_samples
-        FROM d
-    ),
-    s AS (
-        SELECT g.doc_id, g.src, i // 16 AS w,
-               ('0x' || substr(md5(CAST(g.src AS VARCHAR) || ':afp1:'
-                                   || CAST(i AS VARCHAR)), 1, 4))::BIGINT
-               - 32768 AS v
-        FROM geo g, LATERAL (SELECT unnest(range(0, 528)) AS i)
-    ),
-    e AS (
-        SELECT doc_id, w, sum(v * v) AS en
-        FROM s GROUP BY doc_id, w
-    ),
-    b AS (
-        SELECT doc_id, w, en,
-               lead(en) OVER (PARTITION BY doc_id ORDER BY w) AS nen
-        FROM e
-    ),
-    fp AS (
-        SELECT doc_id,
-               sum(CASE WHEN w < 32 AND nen > en
-                        THEN CAST(1 AS BIGINT) << w ELSE 0 END) AS fp
-        FROM b GROUP BY doc_id
-    ),
-    ranked AS (
-        SELECT f.doc_id, f.fp, g.n_samples // 16 AS n_windows,
-               count(*) OVER (PARTITION BY f.fp) AS group_size,
-               row_number() OVER (
-                   PARTITION BY f.fp ORDER BY f.doc_id
-               ) AS rn
-        FROM fp f JOIN geo g ON g.doc_id = f.doc_id
-    )
-    SELECT doc_id,
-           CAST(n_windows AS BIGINT) AS n_windows,
-           CAST(fp AS BIGINT) AS fp,
-           CAST(group_size AS BIGINT) AS group_size,
-           rn > 1 AS is_dup
-    FROM ranked
-    """,
-)
-def q_audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio near-dup via energy-delta fingerprints
-    (operators/audiofp.py, round 7): every doc gets a REAL PCM WAV;
-    docs with ``doc_id % 7 == 3`` are a re-issue of the previous doc's
-    track with a longer tail (extra trailing samples — the "same song,
-    different padding" crawl duplicate), which the 32-bit envelope
-    fingerprint collapses while the byte-level payload differs.  Dedup
-    is an O(n) groupBy over (doc_id, fp) — the exact-dedup shuffle shape
-    applied to perceptual identity.  The oracle replays the generative
-    PCM formula, the frame energies, the delta-sign bits, AND the group
-    ranking; a framing bug, wrong window stride, or sign-convention slip
-    breaks the hash."""
-    import pandas as pd
-
-    from pyspark.sql import Window
-
-    from ..operators.audiofp import audio_fingerprint
-    from ..operators.multimodal import _spread
-    from ..operators.wav import make_wav
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_fp(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                twin = did % 7 == 3 and did > 0
-                src = did - 1 if twin else did
-                n = 528 + (src % 3) * 16 + (32 if twin else 0)
-                fp, nw = audio_fingerprint(make_wav(f"{src}:afp1", n, 8000))
-                rows.append({"doc_id": did, "n_windows": nw, "fp": fp})
-            if rows:
-                yield pd.DataFrame(rows)
-
-    fps = _spread(docs, "doc_id").mapInPandas(
-        gen_and_fp, "doc_id long, n_windows long, fp long"
-    )
-    grp = Window.partitionBy("fp")
-    rn = Window.partitionBy("fp").orderBy(F.asc("doc_id"))
-    return fps.select(
-        "doc_id",
-        "n_windows",
-        "fp",
-        F.count(F.lit(1)).over(grp).cast("long").alias("group_size"),
-        (F.row_number().over(rn) > 1).alias("is_dup"),
-    )
-
-
-@register_extra(
     "video_meta",
     r"""
     WITH d AS (
@@ -1818,77 +1720,6 @@ def q_weighted_sample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "image_exif_meta",
-    r"""
-    SELECT doc_id,
-           'Cam' || CAST(doc_id % 5 AS VARCHAR) AS make,
-           'M-' || CAST(doc_id % 13 AS VARCHAR) AS model,
-           CAST(1 + doc_id % 8 AS INT) AS orientation,
-           '2024:0' || CAST(1 + doc_id % 9 AS VARCHAR) || ':0'
-               || CAST(1 + doc_id % 9 AS VARCHAR) || ' 0'
-               || CAST(doc_id % 10 AS VARCHAR) || ':00:00' AS datetime,
-           doc_id % 2 = 1 AS big_endian
-    FROM documents
-    """,
-)
-def q_image_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXIF metadata extraction (operators/exif.py, round 6): every doc
-    gets a real JPEG with a spliced APP1/TIFF segment — little-endian on
-    even ids, big-endian on odd, out-of-line ASCII values at real
-    offsets — and make/model/orientation/datetime are parsed BACK from
-    the binary IFD walk.  The oracle predicts the fields from the id
-    formulas, so a wrong endianness branch, offset miscalculation, or
-    inline/out-of-line confusion breaks the hash."""
-    import pandas as pd
-
-    from ..operators.exif import add_exif, parse_exif
-    from ..operators.jpeg import make_jpeg
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.to_dict("records"):
-                did = int(r["doc_id"])
-                payload = add_exif(
-                    make_jpeg(
-                        1 + did % 11,
-                        1 + did % 7,
-                        str(r["text"]).encode("utf-8"),
-                    ),
-                    make=f"Cam{did % 5}",
-                    model=f"M-{did % 13}",
-                    orientation=1 + did % 8,
-                    datetime_str=(
-                        f"2024:0{1 + did % 9}:0{1 + did % 9} "
-                        f"0{did % 10}:00:00"
-                    ),
-                    big_endian=(did % 2 == 1),
-                )
-                meta = parse_exif(payload)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "make": meta["make"],
-                        "model": meta["model"],
-                        "orientation": meta["orientation"],
-                        "datetime": meta["datetime"],
-                        "big_endian": did % 2 == 1,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, make string, model string, orientation int, "
-        "datetime string, big_endian boolean",
-    )
-
-
-@register_extra(
     "gif_meta",
     r"""
     WITH d AS (
@@ -2054,142 +1885,6 @@ def q_stereo_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, sample_rate long, n_frames long, "
         "peak_l long, zc_l long, energy_l long, "
         "peak_r long, zc_r long, energy_r long",
-    )
-
-
-# ---------------------------------------------------------------------------
-# IMA-ADPCM (round 6, operators/adpcm.py): compressed audio decoded by a
-# pure-integer state machine — lossy yet bit-exact reproducible, so the
-# oracle replays encoder+decoder as a recursive CTE from the generative
-# samples without ever seeing the encoded bytes.
-# ---------------------------------------------------------------------------
-
-_ADPCM_SQL = rf"""
-    WITH RECURSIVE
-    d AS (SELECT doc_id, 17 + doc_id % 48 AS n FROM documents),
-    src AS (
-        SELECT doc_id, n, i,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':adpcm:'
-                                   || CAST(i AS VARCHAR)), 1, 4))::BIGINT
-               - 32768 AS s
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS i)
-    ),
-    sm(doc_id, i, pred, idx) AS (
-        SELECT doc_id, 0, s, 0 FROM src WHERE i = 0
-        UNION ALL
-        SELECT doc_id, i,
-               CASE WHEN sgn
-                    THEN greatest(pred0 - diffq, -32768)
-                    ELSE least(pred0 + diffq, 32767) END,
-               least(greatest(idx0 + CASE WHEN NOT c4 THEN -1
-                                          WHEN NOT c2 AND NOT c1 THEN 2
-                                          WHEN NOT c2 AND c1 THEN 4
-                                          WHEN c2 AND NOT c1 THEN 6
-                                          ELSE 8 END, 0), 88)
-        FROM (
-            SELECT doc_id, i, pred0, idx0, sgn, step, c4, c2,
-                   ad3 >= step // 4 AS c1,
-                   step // 8
-                   + CASE WHEN c4 THEN step ELSE 0 END
-                   + CASE WHEN c2 THEN step // 2 ELSE 0 END
-                   + CASE WHEN ad3 >= step // 4 THEN step // 4 ELSE 0 END
-                       AS diffq
-            FROM (
-                SELECT doc_id, i, pred0, idx0, sgn, step, c4,
-                       ad2 >= step // 2 AS c2,
-                       ad2 - CASE WHEN ad2 >= step // 2
-                                  THEN step // 2 ELSE 0 END AS ad3
-                FROM (
-                    SELECT doc_id, i, pred0, idx0, sgn, step,
-                           ad >= step AS c4,
-                           ad - CASE WHEN ad >= step THEN step ELSE 0 END
-                               AS ad2
-                    FROM (
-                        SELECT sm.doc_id, sm.i + 1 AS i,
-                               sm.pred AS pred0, sm.idx AS idx0,
-                               src.s - sm.pred < 0 AS sgn,
-                               abs(src.s - sm.pred) AS ad,
-                               ([7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767])[sm.idx + 1] AS step
-                        FROM sm
-                        JOIN src ON src.doc_id = sm.doc_id
-                               AND src.i = sm.i + 1
-                    )
-                )
-            )
-        )
-    ),
-    joined AS (
-        SELECT sm.doc_id, sm.i, sm.pred, src.s,
-               lag(sm.pred) OVER (PARTITION BY sm.doc_id ORDER BY sm.i)
-                   AS pv
-        FROM sm JOIN src ON src.doc_id = sm.doc_id AND src.i = sm.i
-    )
-    SELECT doc_id,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           CAST(count(*) AS BIGINT) AS n_samples,
-           CAST(max(abs(pred)) AS BIGINT) AS peak_abs,
-           CAST(sum(CASE WHEN pv IS NOT NULL AND ((pv >= 0) <> (pred >= 0))
-                         THEN 1 ELSE 0 END) AS BIGINT) AS n_zero_cross,
-           CAST(sum(pred * pred) AS BIGINT) AS energy,
-           CAST(sum((s - pred) * (s - pred)) AS BIGINT) AS noise_energy
-    FROM joined GROUP BY doc_id
-"""
-
-
-@register_extra("adpcm_audio_meta", _ADPCM_SQL)
-def q_adpcm_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed-audio decode (operators/adpcm.py): every doc gets a
-    real mono IMA-ADPCM WAV (format tag 0x11 — 4-byte block headers,
-    two 4-bit codes per byte, fact chunk) whose SOURCE samples follow
-    the generative md5 chain; Spark decodes the actual bytes through
-    the block walk + state machine and reports exact-integer features
-    of the RECONSTRUCTED signal plus the quantization noise energy
-    against the source.  The DuckDB oracle replays the identical
-    encoder/decoder state machine as a recursive CTE — any drift in
-    the step tables, clamping, nibble order, or index adaptation
-    breaks the hash."""
-    import pandas as pd
-
-    from ..operators.adpcm import make_adpcm_wav, parse_adpcm_wav
-    from ..operators.multimodal import _spread
-    from ..operators.wav import _sample
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_decode(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 17 + did % 48
-                seed = f"{did}:adpcm"
-                rate, ns, dec = parse_adpcm_wav(make_adpcm_wav(seed, n))
-                src = [_sample(seed, i) for i in range(n)]
-                zc = sum(
-                    1
-                    for a, b in zip(dec, dec[1:])
-                    if (a >= 0) != (b >= 0)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": rate,
-                        "n_samples": ns,
-                        "peak_abs": max(abs(v) for v in dec),
-                        "n_zero_cross": zc,
-                        "energy": sum(v * v for v in dec),
-                        "noise_energy": sum(
-                            (a - b) * (a - b) for a, b in zip(src, dec)
-                        ),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_decode,
-        "doc_id long, sample_rate long, n_samples long, peak_abs long, "
-        "n_zero_cross long, energy long, noise_energy long",
     )
 
 
@@ -2870,177 +2565,6 @@ def q_warc_html_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "mp3_audio_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               2 + doc_id % 5 AS n_frames,
-               1 + doc_id % 14 AS bi0,
-               CAST(doc_id % 3 AS INT) AS si,
-               doc_id % 4 = 0 AS has_id3,
-               ([44100, 48000, 32000])[1 + doc_id % 3] AS rate
-    FROM documents
-    ),
-    f AS (
-        SELECT doc_id, n_frames, si, has_id3, rate,
-               sum(([0,32,40,48,56,64,80,96,112,128,160,192,224,256,320]
-                   )[1 + (1 + (doc_id + k) % 14)]) AS bsum
-        FROM d, LATERAL (SELECT unnest(range(0, n_frames)) AS k)
-        GROUP BY doc_id, n_frames, si, has_id3, rate
-    )
-    SELECT doc_id,
-           CAST(n_frames AS BIGINT) AS n_frames,
-           CAST(CASE WHEN has_id3 THEN 10 + 22 ELSE 0 END AS BIGINT)
-               AS id3_bytes,
-           CAST(rate AS BIGINT) AS sample_rate,
-           CAST(bsum AS BIGINT) AS bitrate_sum_kbps,
-           CAST(n_frames * 1152 * 1000 // rate AS BIGINT) AS duration_ms
-    FROM f
-    """,
-)
-def q_mp3_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP3 metadata walk (operators/mp3.py, round 6): per doc a real
-    MPEG-1 Layer III stream — frame count, per-frame bitrate index and
-    padding varying by formula, an ID3v2.3 tag (syncsafe size!) on 1/4
-    of docs — walked by the self-framing header parser.  The oracle
-    resolves the same index tables; a frame-length miscalculation,
-    syncsafe-size bug, or table error desynchronizes the walk and the
-    row vanishes or mismatches."""
-    import pandas as pd
-
-    from ..operators.mp3 import make_mp3, parse_mp3
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 2 + did % 5
-                si = did % 3
-                frames = [
-                    (1 + (did + k) % 14, si, (did + k) % 2, 1)
-                    for k in range(n)
-                ]
-                id3 = b"TAG padding bytes here" if did % 4 == 0 else b""
-                m = parse_mp3(make_mp3(frames, id3_payload=id3))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": m["n_frames"],
-                        "id3_bytes": m["id3_bytes"],
-                        "sample_rate": m["sample_rate"],
-                        "bitrate_sum_kbps": m["bitrate_sum_kbps"],
-                        "duration_ms": m["duration_ms"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, n_frames long, id3_bytes long, sample_rate long, "
-        "bitrate_sum_kbps long, duration_ms long",
-    )
-
-
-@register_extra(
-    "mp3_vbr_audio_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               2 + doc_id % 5 AS n,
-               CAST(doc_id % 3 AS INT) AS si,
-               CASE WHEN doc_id % 3 = 0 THEN 'Xing'
-                    WHEN doc_id % 3 = 1 THEN 'Info' END AS tag,
-               ([44100, 48000, 32000])[1 + doc_id % 3] AS rate
-        FROM documents
-    ),
-    f AS (
-        SELECT doc_id, n, si, tag, rate,
-               sum(144 * ([0,32,40,48,56,64,80,96,112,128,160,192,224,256,
-                           320])[1 + (1 + (doc_id + k) % 14)] * 1000 // rate
-                   + (doc_id + k) % 2) AS audio_bytes
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS k)
-        GROUP BY doc_id, n, si, tag, rate
-    )
-    SELECT doc_id,
-           CAST(n + CASE WHEN tag IS NULL THEN 0 ELSE 1 END AS BIGINT)
-               AS n_frames,
-           CAST(n AS BIGINT) AS audio_frames,
-           tag AS vbr_tag,
-           CASE WHEN tag IS NULL THEN NULL ELSE CAST(n AS BIGINT) END
-               AS xing_frames,
-           CASE WHEN tag IS NULL THEN NULL
-                ELSE CAST(144 * ([0,32,40,48,56,64,80,96,112,128,160,192,
-                                  224,256,320])[1 + (1 + doc_id % 14)]
-                          * 1000 // rate + audio_bytes AS BIGINT) END
-               AS xing_bytes,
-           CAST(rate AS BIGINT) AS sample_rate,
-           CAST(n * 1152 * 1000 // rate AS BIGINT) AS duration_ms
-    FROM f
-    """,
-)
-def q_mp3_vbr_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP3 Xing/Info VBR headers (operators/mp3.py, round 7 — the r6
-    verdict's #8): docs cycle CBR (no tag), LAME 'Info', and true-VBR
-    'Xing' streams; the parser must find the tag at the side-info
-    offset inside the FIRST frame, surface the declared frame/byte
-    counts, exclude the tag frame from audio accounting, and derive the
-    duration from the declared count.  The oracle recomputes every
-    field — including the declared byte count, which requires the same
-    per-frame length formula the self-framing walk uses — from the
-    construction alone."""
-    import pandas as pd
-
-    from ..operators.mp3 import make_mp3, parse_mp3
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 2 + did % 5
-                si = did % 3
-                frames = [
-                    (1 + (did + k) % 14, si, (did + k) % 2, 1)
-                    for k in range(n)
-                ]
-                tag = (
-                    "Xing" if did % 3 == 0
-                    else "Info" if did % 3 == 1
-                    else None
-                )
-                m = parse_mp3(make_mp3(frames, vbr_tag=tag))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": m["n_frames"],
-                        "audio_frames": m["audio_frames"],
-                        "vbr_tag": m["vbr_tag"],
-                        "xing_frames": m["xing_frames"],
-                        "xing_bytes": m["xing_bytes"],
-                        "sample_rate": m["sample_rate"],
-                        "duration_ms": m["duration_ms"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, n_frames long, audio_frames long, vbr_tag string, "
-        "xing_frames long, xing_bytes long, sample_rate long, "
-        "duration_ms long",
-    )
-
-
-@register_extra(
     "srt_transcripts",
     r"""
     WITH chunks AS (
@@ -3260,115 +2784,6 @@ def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "mp4_video_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               10 + (doc_id % 3) * 5 AS fps,
-               2 + doc_id % 4 AS n,
-               CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 0 END AS ver,
-               1 + doc_id % 2 AS n_tracks,
-               CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'mp4v' END
-                   AS video_codec,
-               16 + (doc_id % 4) * 8 AS w,
-               8 + (doc_id % 3) * 8 AS h,
-               doc_id % 2 = 1 AS has_audio,
-               3 + doc_id % 5 AS m
-        FROM documents
-    ),
-    v AS (
-        SELECT doc_id,
-               sum(50 + (doc_id * 31 + i * 17) % 100) AS video_bytes,
-               sum((doc_id * 7 + i * 31) % 256) AS fold
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS i)
-        GROUP BY doc_id
-    ),
-    a AS (
-        SELECT doc_id,
-               sum(20 + (doc_id * 13 + j * 7) % 40) AS audio_bytes
-        FROM d, LATERAL (SELECT unnest(range(0, m)) AS j)
-        WHERE has_audio
-        GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(ver AS BIGINT) AS mvhd_version,
-           CAST(n * (600 // fps) AS BIGINT) AS movie_duration,
-           CAST(n * (600 // fps) * 1000 // 600 AS BIGINT) AS duration_ms,
-           CAST(n_tracks AS BIGINT) AS n_tracks,
-           video_codec,
-           CAST(w AS BIGINT) AS width,
-           CAST(h AS BIGINT) AS height,
-           CAST(fps AS BIGINT) AS fps_timescale,
-           CAST(n AS BIGINT) AS n_frames,
-           CAST(video_bytes AS BIGINT) AS video_sample_bytes,
-           CASE WHEN has_audio THEN 'mp4a' ELSE '' END AS audio_codec,
-           CAST(CASE WHEN has_audio THEN m ELSE 0 END AS BIGINT)
-               AS n_audio_samples,
-           CAST(coalesce(a.audio_bytes, 0) AS BIGINT) AS audio_sample_bytes,
-           CAST(video_bytes + coalesce(a.audio_bytes, 0) AS BIGINT)
-               AS mdat_bytes,
-           CAST(fold AS BIGINT) AS first_byte_fold
-    FROM d JOIN v USING (doc_id) LEFT JOIN a USING (doc_id)
-    """,
-)
-def q_mp4_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ISO-BMFF / MP4 box-tree walk (operators/mp4.py, round 7): every
-    doc gets a REAL two-layout MP4 — v0+stco vs v1+co64+largesize-mdat,
-    optional AAC-shaped audio track — and Spark walks the full box tree
-    including the LOAD-BEARING sample reads: the first byte of every
-    video sample resolved through stco/co64 + stsz absolute offsets
-    (``first_byte_fold``), with the stsz mass cross-checked against the
-    actual mdat payload.  A header-only parse, a version-width slip, or
-    a largesize miss moves the reads and breaks the fold; the oracle
-    predicts every column from the generative formulas alone."""
-    import pandas as pd
-
-    from ..operators.mp4 import make_fixture_mp4, parse_mp4
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                out = parse_mp4(make_fixture_mp4(did))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "mvhd_version": out["mvhd_version"],
-                        "movie_duration": out["movie_duration"],
-                        "duration_ms": out["duration_ms"],
-                        "n_tracks": out["n_tracks"],
-                        "video_codec": out["video_codec"],
-                        "width": out["width"],
-                        "height": out["height"],
-                        "fps_timescale": out["fps_timescale"],
-                        "n_frames": out["n_frames"],
-                        "video_sample_bytes": out["video_sample_bytes"],
-                        "audio_codec": out["audio_codec"],
-                        "n_audio_samples": out["n_audio_samples"],
-                        "audio_sample_bytes": out["audio_sample_bytes"],
-                        "mdat_bytes": out["mdat_bytes"],
-                        "first_byte_fold": out["first_byte_fold"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, mvhd_version long, movie_duration long, "
-        "duration_ms long, n_tracks long, video_codec string, "
-        "width long, height long, fps_timescale long, n_frames long, "
-        "video_sample_bytes long, audio_codec string, "
-        "n_audio_samples long, audio_sample_bytes long, mdat_bytes long, "
-        "first_byte_fold long",
-    )
-
-
-@register_extra(
     "flac_audio_meta",
     r"""
     WITH d AS (
@@ -3550,108 +2965,6 @@ def q_webp_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, variant string, width long, height long, "
         "has_alpha boolean, is_animated boolean, n_chunks long, "
         "riff_size long",
-    )
-
-
-@register_extra(
-    "ogg_opus_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               1 + doc_id % 2 AS channels,
-               312 + (doc_id % 4) * 60 AS pre_skip,
-               ([8000, 16000, 44100, 48000])[1 + doc_id % 4] AS input_rate,
-               2 + doc_id % 4 AS n,
-               doc_id % 3 = 0 AS span,
-               doc_id % 2 = 1 AS has_tags
-        FROM documents
-    ),
-    f AS (
-        SELECT doc_id,
-               sum(CASE WHEN i = 0 AND span THEN 300
-                        ELSE 40 + (doc_id * 19 + i * 11) % 150 END)
-                   AS audio_bytes
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS i)
-        GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(channels AS BIGINT) AS channels,
-           CAST(pre_skip AS BIGINT) AS pre_skip,
-           CAST(input_rate AS BIGINT) AS input_rate,
-           CAST(2 + n + CASE WHEN span THEN 1 ELSE 0 END AS BIGINT)
-               AS n_pages,
-           CAST(n AS BIGINT) AS n_packets,
-           CAST(n * 960 AS BIGINT) AS last_granule,
-           CAST((n * 960 - pre_skip) * 1000 // 48000 AS BIGINT)
-               AS duration_ms,
-           CASE WHEN has_tags THEN 'TITLE=ep ' || doc_id ELSE '' END
-               AS tags_joined,
-           -- OpusHead 19 + OpusTags (8+4+20+4 [+4+9+len(id)]) + audio
-           CAST(19 + 36
-                + CASE WHEN has_tags
-                       THEN 13 + length(CAST(doc_id AS VARCHAR))
-                       ELSE 0 END
-                + audio_bytes AS BIGINT) AS payload_bytes
-    FROM d JOIN f USING (doc_id)
-    """,
-)
-def q_ogg_opus_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ogg/Opus page walk (operators/ogg.py, round 7): docs cycle
-    channel counts, pre-skips, input rates, and frame counts; every
-    third doc's first audio packet SPANS two pages via a 255-lacing
-    continuation, and every page's RFC 3533 CRC (unreflected
-    0x04C11DB7 — not zlib's) is recomputed and enforced, so the walk is
-    load-bearing down to the payload bits.  The oracle predicts page/
-    packet counts, the 48 kHz granule duration, the tag roundtrip, and
-    the exact payload byte count including the spanning split."""
-    import pandas as pd
-
-    from ..operators.multimodal import _spread
-    from ..operators.ogg import make_ogg_opus, parse_ogg_opus
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 2 + did % 4
-                payload = make_ogg_opus(
-                    1 + did % 2,
-                    312 + (did % 4) * 60,
-                    [8000, 16000, 44100, 48000][did % 4],
-                    [40 + (did * 19 + i * 11) % 150 for i in range(n)],
-                    comments=(
-                        [("title", f"ep {did}")] if did % 2 == 1 else []
-                    ),
-                    span_pages=did % 3 == 0,
-                )
-                out = parse_ogg_opus(payload)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "channels": out["channels"],
-                        "pre_skip": out["pre_skip"],
-                        "input_rate": out["input_rate"],
-                        "n_pages": out["n_pages"],
-                        "n_packets": out["n_packets"],
-                        "last_granule": out["last_granule"],
-                        "duration_ms": out["duration_ms"],
-                        "tags_joined": ";".join(
-                            f"{k}={v}" for k, v in out["tags"]
-                        ),
-                        "payload_bytes": out["payload_bytes"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, channels long, pre_skip long, input_rate long, "
-        "n_pages long, n_packets long, last_granule long, "
-        "duration_ms long, tags_joined string, payload_bytes long",
     )
 
 
@@ -4138,184 +3451,6 @@ def q_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "id3_tag_scan",
-    """
-    SELECT doc_id,
-           'Track ' || CAST(doc_id % 97 AS VARCHAR) AS title,
-           'Artist-' || CAST(doc_id % 13 AS VARCHAR)
-               || CASE WHEN doc_id % 2 = 1 THEN ' 測試' ELSE '' END
-               AS artist,
-           'Album ' || CAST(doc_id % 7 AS VARCHAR) AS album,
-           CAST(1 + doc_id % 20 AS VARCHAR) || '/20' AS track,
-           CAST(CASE WHEN doc_id % 2 = 1 THEN 1 ELSE 0 END AS BIGINT)
-               AS artist_utf16
-    FROM documents
-    """,
-)
-def q_id3_tag_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ID3v2.3 tag extraction (operators/mp3.py parse_id3_frames): per
-    doc a real MP3 whose tag carries TIT2/TPE1/TALB/TRCK frames —
-    artists on odd docs are UTF-16-with-BOM (CJK text), the rest
-    ISO-8859-1; frame sizes are PLAIN 32-bit (v2.3), the syncsafe
-    confusion with v2.4 being the classic bug this pins.  The walk
-    skips a planted non-text frame by size and stops at padding; the
-    oracle regenerates the expected strings directly."""
-    import pandas as pd
-
-    from ..operators.mp3 import (
-        make_id3_frames,
-        make_mp3,
-        parse_id3_frames,
-        parse_mp3,
-    )
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                utf16 = did % 2 == 1
-                artist = f"Artist-{did % 13}" + (" 測試" if utf16 else "")
-                tag = make_id3_frames(
-                    [
-                        ("TIT2", f"Track {did % 97}", 0),
-                        ("TPE1", artist, 1 if utf16 else 0),
-                        ("TALB", f"Album {did % 7}", 0),
-                        ("TRCK", f"{1 + did % 20}/20", 0),
-                    ]
-                )
-                # a non-text frame (APIC-shaped) + padding: both must
-                # be skipped by the walk
-                tag += b"APIC" + (6).to_bytes(4, "big") + b"\x00\x00" + b"binary" + b"\x00" * 8
-                mp3 = make_mp3([(5, 0, 0, 1), (9, 0, 1, 1)], id3_payload=tag)
-                meta = parse_mp3(mp3)
-                frames = parse_id3_frames(
-                    mp3[10 : meta["id3_bytes"]]
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "title": frames["TIT2"],
-                        "artist": frames["TPE1"],
-                        "album": frames["TALB"],
-                        "track": frames["TRCK"],
-                        "artist_utf16": 1 if utf16 else 0,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, title string, artist string, album string, "
-        "track string, artist_utf16 long",
-    )
-
-
-@register_extra(
-    "tiff_image_meta",
-    """
-    WITH d AS (
-        SELECT doc_id,
-               CASE WHEN doc_id % 2 = 0 THEN 'II' ELSE 'MM' END
-                   AS endian,
-               CAST(1 + doc_id % 3 AS BIGINT) AS n_pages
-        FROM documents
-    ),
-    pages AS (
-        SELECT doc_id, p,
-               8 + (doc_id + p) % 32 AS w,
-               4 + (doc_id + 3 * p) % 16 AS h
-        FROM d, LATERAL (SELECT unnest(range(0, n_pages)) AS p)
-    ),
-    strips AS (
-        SELECT doc_id, p, w, h, y0,
-               least(4, h - y0) AS rows
-        FROM pages, LATERAL (
-            SELECT unnest(range(0, CAST(h AS BIGINT), 4)) AS y0
-        )
-    ),
-    agg AS (
-        SELECT doc_id,
-               count(*) AS n_strips,
-               sum((doc_id + p * 7 + y0 * w) % 251
-                   + (doc_id + p * 7 + (y0 + rows) * w - 1) % 251)
-                   AS strip_fold
-        FROM strips GROUP BY 1
-    ),
-    pagg AS (
-        SELECT doc_id, sum(w * h) AS pixel_bytes,
-               sum(w) AS total_width, sum(h) AS total_height
-        FROM pages GROUP BY 1
-    )
-    SELECT d.doc_id, d.endian, d.n_pages,
-           CAST(p.total_width AS BIGINT) AS total_width,
-           CAST(p.total_height AS BIGINT) AS total_height,
-           CAST(a.n_strips AS BIGINT) AS n_strips,
-           CAST(p.pixel_bytes AS BIGINT) AS pixel_bytes,
-           CAST(a.strip_fold AS BIGINT) AS strip_fold
-    FROM d JOIN agg a USING (doc_id) JOIN pagg p USING (doc_id)
-    """,
-)
-def q_tiff_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-page TIFF walk (operators/tiff.py): per doc a real TIFF —
-    IFD chains across 1-3 pages, both byte orders, strip offsets and
-    byte counts RESOLVED with every strip's first/last byte folded into
-    the result, so an offset-interpretation bug cannot pass.  The
-    oracle recomputes geometry and the fold from the fixture formulas;
-    scope is the archival baseline (uncompressed 8-bit gray) with
-    compressed layouts quarantining loudly."""
-    import pandas as pd
-
-    from ..operators.tiff import make_tiff, parse_tiff
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                np_ = 1 + did % 3
-                pages = []
-                for p in range(np_):
-                    w = 8 + (did + p) % 32
-                    h = 4 + (did + 3 * p) % 16
-                    px = bytes(
-                        (did + p * 7 + i) % 251 for i in range(w * h)
-                    )
-                    pages.append((w, h, px))
-                m = parse_tiff(
-                    make_tiff(pages, little_endian=did % 2 == 0)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "endian": m["endian"],
-                        "n_pages": m["n_pages"],
-                        "total_width": sum(m["widths"]),
-                        "total_height": sum(m["heights"]),
-                        "n_strips": m["n_strips"],
-                        "pixel_bytes": m["pixel_bytes"],
-                        "strip_fold": m["strip_fold"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, endian string, n_pages long, total_width long, "
-        "total_height long, n_strips long, pixel_bytes long, "
-        "strip_fold long",
-    )
-
-
-@register_extra(
     "sitemap_scan",
     """
     SELECT doc_id,
@@ -4558,84 +3693,6 @@ def q_compressed_text_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "bson_log_scan",
-    """
-    WITH d AS (
-        SELECT doc_id, 1 + doc_id % 4 AS g FROM documents
-    ),
-    f AS (
-        SELECT doc_id, g,
-               sum((doc_id * 13 + j)
-                   * (CASE WHEN j % 2 = 0 THEN 1 ELSE -1 END)
-                   + doc_id % 7 + doc_id % 11) AS sum_ints,
-               sum((doc_id + j) % 6) AS blob_bytes,
-               sum(CASE WHEN j % 2 = 0 THEN 1 ELSE 0 END) AS n_true
-        FROM d, LATERAL (SELECT unnest(range(0, g)) AS j)
-        GROUP BY 1, 2
-    )
-    SELECT doc_id,
-           CAST(g AS BIGINT) AS n_docs,
-           CAST(sum_ints AS BIGINT) AS sum_ints,
-           CAST(g AS BIGINT) AS n_strings,
-           CAST(g AS BIGINT) AS n_nested,
-           CAST(blob_bytes AS BIGINT) AS blob_bytes,
-           CAST(g - n_true AS BIGINT) AS n_nulls,
-           CAST(n_true AS BIGINT) AS n_true
-    FROM f
-    """,
-)
-def q_bson_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BSON dump walk (operators/bson.py — the mongodump shape,
-    completing the serialization trio with protobuf and MessagePack):
-    per doc a real stream of concatenated BSON documents — total-length
-    framing that INCLUDES the length field and terminator (the
-    off-by-four pinned in tests), little-endian int32/int64 by width,
-    dense-indexed arrays, binary subtypes, bool/null — walked
-    recursively with a depth guard.  The oracle replays the per-doc
-    formulas; doubles and unknown tags quarantine loudly."""
-    import pandas as pd
-
-    from ..operators.bson import pack_document, parse_bson_stream
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ds = []
-                for j in range(1 + did % 4):
-                    ds.append(
-                        {
-                            "id": (did * 13 + j)
-                            * (1 if j % 2 == 0 else -1),
-                            "tag": f"t{(did + j) % 5}",
-                            "items": [did % 7, did % 11],
-                            "blob": bytes(
-                                (did + i) % 251
-                                for i in range((did + j) % 6)
-                            ),
-                            "flag": True if j % 2 == 0 else None,
-                        }
-                    )
-                m = parse_bson_stream(
-                    b"".join(pack_document(x) for x in ds)
-                )
-                m["doc_id"] = did
-                rows.append(m)
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "n_docs long, sum_ints long, n_strings long, n_nested long, "
-        "blob_bytes long, n_nulls long, n_true long, doc_id long",
-    )
-
-
-@register_extra(
     "uuid7_time_scan",
     """
     WITH u AS (
@@ -4814,95 +3871,6 @@ def q_access_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "referer_host"
         ),
         g(8).contains("bot").cast("long").alias("is_bot"),
-    )
-
-
-@register_extra(
-    "orc_container_scan",
-    """
-    WITH d AS (
-        SELECT doc_id, 1 + doc_id % 2 AS ns FROM documents
-    ),
-    sz AS (
-        SELECT doc_id, ns, sum(3 + (doc_id + s) % 5) AS g
-        FROM d, LATERAL (SELECT unnest(range(0, ns)) AS s)
-        GROUP BY 1, 2
-    ),
-    r AS (
-        SELECT d.doc_id,
-               sum((d.doc_id * 17 + i)
-                   * (CASE WHEN i % 3 = 0 THEN -1 ELSE 1 END))
-                   AS sum_ids,
-               count(DISTINCT (d.doc_id + i) % 9) AS n_names,
-               sum(1 + length(CAST((d.doc_id + i) % 9 AS VARCHAR)))
-                   AS name_bytes
-        FROM d JOIN sz USING (doc_id),
-             LATERAL (SELECT unnest(range(0, CAST(sz.g AS BIGINT)))
-                      AS i)
-        GROUP BY 1
-    )
-    SELECT d.doc_id,
-           CAST(d.ns AS BIGINT) AS n_stripes,
-           CAST(sz.g AS BIGINT) AS n_rows,
-           CAST(r.sum_ids AS BIGINT) AS sum_ids,
-           CAST(r.n_names AS BIGINT) AS n_names,
-           CAST(r.name_bytes AS BIGINT) AS name_bytes
-    FROM d JOIN sz USING (doc_id) JOIN r USING (doc_id)
-    """,
-)
-def q_orc_container_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC-lite walk (operators/orclite.py): per doc a real mini-ORC
-    file — tail-first postscript, protobuf footers decoded by the
-    pbwire wire walk, stripe stream resolution, RLEv1 runs AND literal
-    groups with zigzag signed ids — read back and aggregated.  The
-    oracle replays the row formulas; a tail-offset, RLE, or
-    stream-geometry bug mismatches rows.  Closes the 'remaining
-    big-data format' note from the round-8 suggestions."""
-    import pandas as pd
-
-    from ..operators.orclite import make_orc, parse_orc
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                ns = 1 + did % 2
-                g = 0
-                stripes = []
-                for s in range(ns):
-                    rows_s = []
-                    for _ in range(3 + (did + s) % 5):
-                        rows_s.append(
-                            (
-                                (did * 17 + g)
-                                * (-1 if g % 3 == 0 else 1),
-                                f"n{(did + g) % 9}",
-                            )
-                        )
-                        g += 1
-                    stripes.append(rows_s)
-                m = parse_orc(make_orc(stripes))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_stripes": m["n_stripes"],
-                        "n_rows": m["n_rows"],
-                        "sum_ids": m["sum_ids"],
-                        "n_names": m["n_names"],
-                        "name_bytes": m["name_bytes"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, n_stripes long, n_rows long, sum_ids long, "
-        "n_names long, name_bytes long",
     )
 
 
@@ -5701,245 +4669,6 @@ def q_delta_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         plan,
         "doc_id long, n_tombstones long, n_eligible long, "
         "bytes_reclaimable long",
-    )
-
-
-def _build_eml(did: int, m: int) -> str:
-    """Deterministic fixture message: folded Subject every third, an
-    extra 7bit part every second, UTF-8 text through quoted-printable,
-    binary through base64, and a preamble line starting 'From ' so the
-    mboxrd stuffing layer is load-bearing."""
-    from ..operators.mime import qp_encode
-    import base64 as _b64
-
-    subj = f"Report {(did + m) % 7}"
-    folded = (did + m) % 3 == 0
-    text = f"Price café {did * 3 + m}: total"
-    nbin = 5 + (did + m) % 9
-    bin_data = bytes((did + m + j) % 256 for j in range(nbin))
-    lines = ["From: sender@example.com", "To: list@example.org"]
-    if folded:
-        lines += [f"Subject: {subj}", " extended"]
-    else:
-        lines += [f"Subject: {subj}"]
-    lines += [
-        "MIME-Version: 1.0",
-        'Content-Type: multipart/mixed; boundary="B42"',
-        "",
-        "From the archives (preamble, ignored)",
-        "--B42",
-        "Content-Type: text/plain; charset=utf-8",
-        "Content-Transfer-Encoding: quoted-printable",
-        "",
-        qp_encode(text.encode("utf-8")),
-    ]
-    if (did + m) % 2 == 0:
-        lines += [
-            "--B42",
-            "Content-Type: text/plain",
-            "Content-Transfer-Encoding: 7bit",
-            "",
-            "extra part data",
-        ]
-    lines += [
-        "--B42",
-        "Content-Type: application/octet-stream",
-        "Content-Transfer-Encoding: base64",
-        "",
-        _b64.b64encode(bin_data).decode(),
-        "--B42--",
-        "epilogue ignored",
-    ]
-    return "\n".join(lines)
-
-
-@register_extra(
-    "eml_corpus_scan",
-    """
-    WITH d AS (
-        SELECT doc_id, 1 + doc_id % 3 AS n_msgs FROM documents
-    ),
-    m AS (
-        SELECT d.doc_id, d.n_msgs, mm,
-               CASE WHEN (d.doc_id + mm) % 3 = 0 THEN 17 ELSE 8 END
-                   AS subj_chars,
-               18 + length(CAST(d.doc_id * 3 + mm AS VARCHAR))
-                   + CASE WHEN (d.doc_id + mm) % 2 = 0 THEN 15
-                          ELSE 0 END AS text_chars,
-               5 + (d.doc_id + mm) % 9 AS bin_bytes,
-               2 + CASE WHEN (d.doc_id + mm) % 2 = 0 THEN 1 ELSE 0 END
-                   AS n_parts
-        FROM d, LATERAL (SELECT unnest(range(0, n_msgs)) AS mm)
-    )
-    SELECT doc_id,
-           CAST(any_value(n_msgs) AS BIGINT) AS n_msgs,
-           CAST(sum(n_parts) AS BIGINT) AS n_parts_total,
-           CAST(sum(subj_chars) AS BIGINT) AS subject_chars_total,
-           CAST(sum(text_chars) AS BIGINT) AS text_chars_total,
-           CAST(sum(bin_bytes) AS BIGINT) AS bin_bytes_total
-    FROM m GROUP BY 1
-    """,
-)
-def q_eml_corpus_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mailing-list archive ingestion (operators/mime.py): per doc a
-    real mboxrd file — envelope framing with From-stuffing actually
-    exercised (the preamble line starts 'From '), RFC 5322 header
-    UNFOLDING (every third Subject folds across lines), multipart
-    boundary splitting with required terminal marker, quoted-printable
-    (non-ASCII é goes through =C3=A9) and base64 decoding.  The oracle
-    replays the closed-form character/byte accounting; an unfolding,
-    boundary, stuffing, or transfer-decoding bug mismatches rows."""
-    import pandas as pd
-
-    from ..operators.mime import make_mbox, parse_mbox
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def scan(it):
-        for pdf in it:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n_msgs = 1 + did % 3
-                msgs = parse_mbox(
-                    make_mbox([_build_eml(did, m) for m in range(n_msgs)])
-                )
-                n_parts = sum(r["n_parts"] for r in msgs)
-                subj = sum(
-                    len(r["headers"]["subject"]) for r in msgs
-                )
-                text_chars = 0
-                bin_bytes = 0
-                for r in msgs:
-                    for ct, body in r["parts"]:
-                        if ct == "text/plain":
-                            text_chars += len(body.decode("utf-8"))
-                        else:
-                            bin_bytes += len(body)
-                out.append(
-                    {
-                        "doc_id": did,
-                        "n_msgs": len(msgs),
-                        "n_parts_total": n_parts,
-                        "subject_chars_total": subj,
-                        "text_chars_total": text_chars,
-                        "bin_bytes_total": bin_bytes,
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        scan,
-        "doc_id long, n_msgs long, n_parts_total long, "
-        "subject_chars_total long, text_chars_total long, "
-        "bin_bytes_total long",
-    )
-
-
-@register_extra(
-    "format_sniff_scan",
-    """
-    WITH d AS (
-        SELECT doc_id, doc_id % 8 AS k, 1 + doc_id % 3 AS base
-        FROM documents
-    )
-    SELECT doc_id,
-           CASE k WHEN 0 THEN 'parquet' WHEN 1 THEN 'orc'
-                  WHEN 2 THEN 'avro'    WHEN 3 THEN 'warc'
-                  WHEN 4 THEN 'tar'     WHEN 5 THEN 'zip'
-                  WHEN 6 THEN 'pdf'     ELSE 'mbox' END AS fmt,
-           CAST(CASE WHEN k = 6 THEN 1 + doc_id % 2
-                     ELSE base END AS BIGINT) AS n_records
-    FROM d
-    """,
-)
-def q_format_sniff_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixed-lake ingestion (operators/sniff.py): every doc carries ONE
-    of eight REAL container payloads (parquet, ORC-lite, Avro OCF,
-    WARC, TAR, ZIP, PDF, mbox — each built by this repo's own writer),
-    the kernel identifies it from magic bytes alone and dispatches to
-    the matching parser, and the per-format record count must agree
-    with the build formula — a sniffer misroute fails loudly because
-    no parser accepts another format's framing.  The unified front door
-    for a directory nobody curated."""
-    import pandas as pd
-
-    from ..operators.mime import make_mbox, parse_mbox
-    from ..operators.multimodal import _spread
-    from ..operators.orclite import make_orc, parse_orc
-    from ..operators.avrocf import make_avro, parse_avro
-    from ..operators.parquetfmt import make_parquet, parse_parquet
-    from ..operators.pdftext import extract_pdf_text, make_pdf
-    from ..operators.sniff import detect_format
-    from ..sources.archives import make_tar, make_zip, parse_tar, parse_zip
-    from ..sources.warc import make_warc, parse_warc
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def scan(it):
-        for pdf_batch in it:
-            out = []
-            for did in pdf_batch["doc_id"]:
-                did = int(did)
-                k = did % 8
-                base = 1 + did % 3
-                rows = [(did + j, f"n{j}") for j in range(base)]
-                if k == 0:
-                    payload = make_parquet([rows])
-                elif k == 1:
-                    payload = make_orc([rows])
-                elif k == 2:
-                    payload = make_avro(
-                        {"type": "record", "name": "r", "fields": [
-                            {"name": "id", "type": "long"}]},
-                        [[{"id": i} for i, _n in rows]],
-                    )
-                elif k == 3:
-                    payload = make_warc(
-                        [(f"https://x/{i}", b"<p>b</p>") for i, _n in rows]
-                    )
-                elif k == 4:
-                    payload = make_tar([(n, b"x") for _i, n in rows])
-                elif k == 5:
-                    payload = make_zip([(n, b"x") for _i, n in rows])
-                elif k == 6:
-                    payload = make_pdf(
-                        [f"line {j}" for j in range(1 + did % 2)]
-                    )
-                else:
-                    payload = make_mbox(
-                        [_build_eml(did, m) for m in range(base)]
-                    )
-                fmt = detect_format(payload)
-                if fmt == "parquet":
-                    n = parse_parquet(payload)["n_rows"]
-                elif fmt == "orc":
-                    n = parse_orc(payload)["n_rows"]
-                elif fmt == "avro":
-                    n = parse_avro(payload)["n_records"]
-                elif fmt == "warc":
-                    n = sum(
-                        1 for r in parse_warc(payload)
-                        if r["type"] == "response"
-                    )
-                elif fmt == "tar":
-                    n = len(parse_tar(payload))
-                elif fmt == "zip":
-                    n = len(parse_zip(payload))
-                elif fmt == "pdf":
-                    n = len(extract_pdf_text(payload))
-                elif fmt == "mbox":
-                    n = len(parse_mbox(payload))
-                else:
-                    raise ValueError(f"sniffer routed unknown {fmt}")
-                out.append({"doc_id": did, "fmt": fmt, "n_records": n})
-            if out:
-                yield pd.DataFrame(out)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        scan, "doc_id long, fmt string, n_records long"
     )
 
 
@@ -6835,179 +5564,4 @@ def q_delta_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen_and_replay,
         "doc_id long, version long, n_live long, cur_n_fields long, "
         "schema_version long, tt_n_fields long, tt_schema_version long",
-    )
-
-
-@register_extra(
-    "orc_modern_scan",
-    """
-    WITH d AS (
-        SELECT doc_id, 150 + doc_id % 40 AS n,
-               CASE doc_id % 5 WHEN 0 THEN 'uncompressed'
-                    WHEN 1 THEN 'zlib' WHEN 2 THEN 'snappy'
-                    WHEN 3 THEN 'lz4' ELSE 'zstd' END AS codec
-        FROM documents
-    ),
-    r AS (
-        SELECT d.doc_id, d.n, d.codec, j,
-               CASE WHEN (d.doc_id + j) % 9 = 0 THEN NULL
-                    ELSE d.doc_id * 13 + j * 7 - 400 END AS id,
-               CASE WHEN (d.doc_id + j) % 11 = 0 THEN NULL
-                    ELSE 'n' || CAST((d.doc_id + j) % 37 AS VARCHAR)
-                    END AS name,
-               CASE WHEN (d.doc_id + j) % 8 = 1 THEN NULL
-                    ELSE (d.doc_id * 7 + j * 11) % 100001 - 50000
-                    END AS i32,
-               CASE WHEN (d.doc_id + j) % 13 = 4 THEN NULL
-                    ELSE (d.doc_id + j) * 25 END AS dbl_c,
-               CASE WHEN (d.doc_id + j) % 17 = 2 THEN NULL
-                    ELSE (d.doc_id * 3 + j) % 20000 - 3000 END AS days,
-               CASE WHEN (d.doc_id + j) % 13 = 7 THEN NULL
-                    ELSE CASE WHEN (d.doc_id + j) % 3 = 0
-                              THEN 1 ELSE 0 END END AS bl
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS j)
-    )
-    SELECT doc_id,
-           any_value(codec) AS codec,
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(*) FILTER (WHERE id IS NULL)
-                + count(*) FILTER (WHERE name IS NULL)
-                + count(*) FILTER (WHERE i32 IS NULL)
-                + count(*) FILTER (WHERE dbl_c IS NULL)
-                + count(*) FILTER (WHERE days IS NULL)
-                + count(*) FILTER (WHERE bl IS NULL) AS BIGINT)
-               AS n_nulls,
-           CAST(coalesce(sum(id), 0) AS BIGINT) AS sum_ids,
-           CAST(count(DISTINCT name) AS BIGINT) AS n_names,
-           CAST(coalesce(sum(length(name)), 0) AS BIGINT) AS name_bytes,
-           CAST(coalesce(sum(i32), 0) AS BIGINT) AS sum_i32,
-           CAST(coalesce(sum(dbl_c), 0) AS BIGINT) AS sum_dbl_c,
-           CAST(coalesce(sum(days), 0) AS BIGINT) AS sum_days,
-           CAST(count(*) FILTER (WHERE bl = 1) AS BIGINT) AS n_true,
-           CAST(count(DISTINCT (doc_id + j) % 7) AS BIGINT)
-               AS n_dict_names,
-           CAST(sum(j * 3 + doc_id % 50) AS BIGINT) AS sum_dict_ids
-    FROM r GROUP BY 1
-    """,
-)
-def q_orc_modern_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real-writer ORC decode (operators/orclite.py, widened round 9):
-    per doc a pyarrow/liborc ORC file over the FULL in-scope type set —
-    long/string plus int32, double, date32 and boolean columns — RLEv2
-    integer runs (short-repeat, direct, delta, patched-base), PRESENT
-    streams for every nullable column, the writer's chunked compression
-    rotated over all five kinds (NONE / ZLIB / SNAPPY / LZ4 / ZSTD —
-    the last three decoded by this repo's own codecs) — parsed
-    cell-for-cell by `parse_orc_file`.  A SECOND per-doc file exercises
-    DICTIONARY_V2 strings (the Hive-writer default that liborc never
-    emits): hand-written by `make_orc_dict_strings`, read back by BOTH
-    parse_orc_file and the formula-replaying oracle
-    (``n_dict_names``/``sum_dict_ids``).  Doubles are integerized
-    per-row (exact .25 multiples ×100) so the hash is float-safe."""
-    import pandas as pd
-
-    from ..operators.multimodal import _spread
-    from ..operators.orclite import make_orc_dict_strings, parse_orc_file
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    _CODECS5 = ["uncompressed", "zlib", "snappy", "lz4", "zstd"]
-
-    def gen_and_scan(it):
-        import io
-
-        import pyarrow as pa
-        import pyarrow.orc as po
-
-        for pdf in it:
-            out = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 150 + did % 40
-                ids = [
-                    None if (did + j) % 9 == 0 else did * 13 + j * 7 - 400
-                    for j in range(n)
-                ]
-                names = [
-                    None if (did + j) % 11 == 0 else f"n{(did + j) % 37}"
-                    for j in range(n)
-                ]
-                i32 = [
-                    None if (did + j) % 8 == 1
-                    else (did * 7 + j * 11) % 100001 - 50000
-                    for j in range(n)
-                ]
-                dbl = [
-                    None if (did + j) % 13 == 4 else (did + j) * 0.25
-                    for j in range(n)
-                ]
-                days = [
-                    None if (did + j) % 17 == 2
-                    else (did * 3 + j) % 20000 - 3000
-                    for j in range(n)
-                ]
-                bl = [
-                    None if (did + j) % 13 == 7 else (did + j) % 3 == 0
-                    for j in range(n)
-                ]
-                codec = _CODECS5[did % 5]
-                buf = io.BytesIO()
-                po.write_table(
-                    pa.table({
-                        "id": pa.array(ids, pa.int64()),
-                        "name": pa.array(names),
-                        "i32": pa.array(i32, pa.int32()),
-                        "dbl": pa.array(dbl, pa.float64()),
-                        "dt": pa.array(days, pa.date32()),
-                        "bl": pa.array(bl, pa.bool_()),
-                    }),
-                    buf, compression=codec,
-                )
-                m = parse_orc_file(buf.getvalue())
-                c = m["columns"]
-                if (
-                    c["id"] != ids or c["name"] != names
-                    or c["i32"] != i32 or c["dbl"] != dbl
-                    or c["dt"] != days or c["bl"] != bl
-                ):
-                    raise ValueError(f"orc decode mismatch doc {did}")
-                # dictionary leg: hand-written DICTIONARY_V2 strings
-                drows = [
-                    (j * 3 + did % 50, f"c{(did + j) % 7}")
-                    for j in range(n)
-                ]
-                dm = parse_orc_file(make_orc_dict_strings([drows]))
-                if dm["rows"] != drows:
-                    raise ValueError(f"orc dict decode mismatch doc {did}")
-                out.append(
-                    {
-                        "doc_id": did,
-                        "codec": codec,
-                        "n_rows": m["n_rows"],
-                        "n_nulls": m["n_nulls"],
-                        "sum_ids": sum(v for v in ids if v is not None),
-                        "n_names": len({v for v in names
-                                        if v is not None}),
-                        "name_bytes": sum(len(v) for v in names
-                                          if v is not None),
-                        "sum_i32": sum(v for v in c["i32"]
-                                       if v is not None),
-                        "sum_dbl_c": sum(int(round(v * 100))
-                                         for v in c["dbl"]
-                                         if v is not None),
-                        "sum_days": sum(v for v in c["dt"]
-                                        if v is not None),
-                        "n_true": sum(1 for v in c["bl"] if v is True),
-                        "n_dict_names": dm["n_names"],
-                        "sum_dict_ids": dm["sum_ids"],
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_scan,
-        "doc_id long, codec string, n_rows long, n_nulls long, "
-        "sum_ids long, n_names long, name_bytes long, sum_i32 long, "
-        "sum_dbl_c long, sum_days long, n_true long, "
-        "n_dict_names long, sum_dict_ids long",
     )

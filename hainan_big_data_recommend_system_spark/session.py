@@ -20,7 +20,6 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.storagelevel import StorageLevel
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 #: Storage level for every ``localCheckpoint`` in the engine (guide §5).
 #: Spark's default local-checkpoint level stores blocks DESERIALIZED
@@ -37,6 +36,28 @@ DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 CHECKPOINT_LEVEL = StorageLevel.MEMORY_AND_DISK  # serialized in Spark 4 naming
 
 
+def local_cpus() -> int:
+    """Cores for ``local[N]`` and the default shuffle partition count:
+    ``$SPARK_GRAFT_CPUS`` when set, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half of the host's ``MemTotal`` — the rest is left to the Python
+    workers and the OS page cache."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if mem:
+        return mem
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return f"{int(line.split()[1]) // 2048}m"  # kB / 2 → MB
+    raise RuntimeError(
+        "no MemTotal in /proc/meminfo; set SPARK_GRAFT_DRIVER_MEM"
+    )
+
+
 def get_spark(
     app_name: str = "hainan_big_data_recommend_system_spark",
     master: str | None = None,
@@ -45,14 +66,14 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a SparkSession tuned for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so tests and bench
+    ``master`` defaults to ``local[local_cpus()]`` so tests and bench
     share one code path; on a cluster, pass ``None`` with a pre-set master
     in the environment (spark-submit) and the builder leaves it alone.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     if master is None and "SPARK_MASTER" not in os.environ:
         master = f"local[{cpus}]"
-    nparts = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    nparts = shuffle_partitions or cpus
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -63,7 +84,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

@@ -1,7 +1,5 @@
 """Source/sink connectors beyond plain parquet (SURVEY.md §2.1).
 
-- :mod:`.bucketing` — bucketed parquet tables for shuffle-free co-located
-  joins (the 100 TB answer to "this join shuffles both sides every night").
 - :mod:`.jdbc` — JDBC scan/sink wrappers (S1–S4, S13); the reference's
   MySQL surface.  Import-gated: tests run on parquet, the API is the same
   DataFrame either way.

@@ -301,9 +301,7 @@ def stream_container_records(
     the shape a live crawl actually has: shards land in the directory,
     each micro-batch picks up the new files (the file-source checkpoint
     remembers which were processed), and every record flows through the
-    same per-file parser as the batch reader.  Compose with
-    :func:`..streaming.ingest.start_dedup_ingest` for end-to-end
-    crawl-to-deduped-corpus ingestion (``doc_id`` = record name).
+    same per-file parser as the batch reader.
 
     The unit of streaming progress is the FILE (binaryFile never splits
     one), so ``max_files_per_trigger`` is the batch-size knob — the same

@@ -10,4 +10,8 @@ tables → ``foreachBatch`` KV sink with the reference's fallback defaults.
 The reference has no event-time semantics at all (arrival-order only) —
 watermarked tumbling/sliding/session windows are the M6 extension surface
 the driver's ``events`` table anticipates (SURVEY.md §2.10 last row).
+
+- :mod:`.events` — event source, payload parse, channel dispatch, windows;
+- :mod:`.recommend` — startup state and the per-batch recommend step;
+- :mod:`.sinks` — ``foreachBatch`` KV writers with hot fallback.
 """

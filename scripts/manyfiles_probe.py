@@ -87,11 +87,11 @@ def probe(spark, n_files: int) -> dict:
 def main() -> None:
     from pyspark.sql import SparkSession
 
+    from hainan_big_data_recommend_system_spark.session import local_cpus
+
     counts = [int(a) for a in sys.argv[1:]] or [100, 1000]
     spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
-        )
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .config("spark.sql.shuffle.partitions", "32")
         .config("spark.ui.enabled", "false")
         .appName("manyfiles-probe")

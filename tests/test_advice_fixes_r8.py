@@ -4,8 +4,8 @@
   than its own length field) must raise ValueError, not loop forever
 - _zip64_extra: a truncated 0x0001 extra field must raise ValueError,
   not struct.error (the fleet-wide decoder quarantine contract)
-- parse_webm / MP4 box walk: deeply nested containers must raise
-  ValueError at a fixed depth cap, not RecursionError
+- parse_webm: deeply nested EBML containers must raise ValueError at
+  a fixed depth cap, not RecursionError
 """
 
 from __future__ import annotations
@@ -111,20 +111,3 @@ def test_webm_moderate_nesting_ok():
 
     out = parse_webm(_nested_ebml(10))
     assert out["n_clusters"] == 0
-
-
-def _nested_mp4(depth: int) -> bytes:
-    inner = b""
-    for _ in range(depth):
-        inner = struct.pack(">I", 8 + len(inner)) + b"edts" + inner
-    trak = struct.pack(">I", 8 + len(inner)) + b"trak" + inner
-    moov = struct.pack(">I", 8 + len(trak)) + b"moov" + trak
-    ftyp = struct.pack(">I", 16) + b"ftyp" + b"isom\x00\x00\x02\x00"
-    return ftyp + moov
-
-
-def test_mp4_deep_nesting_raises_valueerror_not_recursionerror():
-    from hainan_big_data_recommend_system_spark.operators.mp4 import parse_mp4
-
-    with pytest.raises(ValueError):
-        parse_mp4(_nested_mp4(200))

@@ -359,65 +359,6 @@ class TestSqlFrontDoor:
                     "ALTER TABLE t SET TBLPROPERTIES ('x'='y')", cat)
 
 
-class TestReadStreamOnMappedTables:
-    """Round 15: the readStream change-feed data planes resolve
-    PHYSICAL / historical file-column names — a mapped Delta table's
-    change files key on physicalName, a renamed Iceberg column's
-    pre-rename files keep its old name."""
-
-    def _drain(self, sdf, ck, sink):
-        def fn(df, batch_id):
-            sink.extend(tuple(r) for r in df.collect())
-
-        q = (sdf.writeStream.foreachBatch(fn)
-             .option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(300)
-
-    def test_delta_cdf_stream_speaks_logical(self, spark, tmp_path):
-        from hainan_big_data_recommend_system_spark.streaming.readstream_cdf import (  # noqa: E501
-            open_change_stream,
-        )
-
-        tbl = str(tmp_path / "t")
-        write_delta(spark.createDataFrame(ROWS, SCH), tbl)
-        enable_column_mapping_delta(tbl)
-        v = rename_columns_delta(tbl, {"qty": "amount"})["version"]
-        update_where_delta(spark, tbl, "id = 2",
-                           {"amount": "amount + 1"})
-        sink: list = []
-        self._drain(open_change_stream(spark, tbl,
-                                       starting_version=v),
-                    str(tmp_path / "ck"), sink)
-        want = _rows(read_changes(spark, tbl, v))
-        assert sorted(sink) == want
-        # and the values are REAL, not nulls from a physical-name miss
-        post = [r for r in sink if r[-2] == "update_postimage"]
-        assert post and all(r[2] == 21 for r in post)
-
-    def test_iceberg_changelog_stream_resolves_history(self, spark,
-                                                       tmp_path):
-        from hainan_big_data_recommend_system_spark.streaming.readstream_cdf import (  # noqa: E501
-            open_changelog_stream,
-        )
-
-        tbl = str(tmp_path / "t")
-        write_iceberg(spark.createDataFrame(ROWS, SCH), tbl)
-        rename_columns_iceberg(tbl, {"qty": "amount"})
-        update_where_iceberg(spark, tbl, "id = 2",
-                             {"amount": "amount + 1"})
-        sink: list = []
-        self._drain(open_changelog_stream(spark, tbl),
-                    str(tmp_path / "ck"), sink)
-        # the pre-rename file's rows surface under the NEW name with
-        # their real values (the historical spelling resolved)
-        ins = sorted(r for r in sink if r[-1] == "insert")
-        assert (1, "a", 10, "insert") in ins
-        assert (2, "b", 21, "insert") in ins
-        dels = [r for r in sink if r[-1] == "delete"]
-        assert (2, "b", 20, "delete") in dels
-
-
 class TestMappedCheckpointFastPath:
     def test_checkpoint_crossing_preserves_mapping(self, spark,
                                                    tmp_path):

@@ -177,62 +177,6 @@ def test_streaming_records_match_batch(spark, tmp_path):
     assert got == batch and len(got) == 12 + 3  # responses + warcinfo
 
 
-def test_streaming_warc_dir_to_dedup_ingest(spark, tmp_path):
-    """End-to-end crawl shape: a directory of WARC shards (with a
-    duplicate page planted across shards) streams through the record
-    explode into the dedup ingest — the corpus holds each unique page
-    once, keyed by target URI."""
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.sources.files import (
-        stream_container_records,
-    )
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        read_ingested_corpus,
-        start_dedup_ingest,
-    )
-
-    warcs = str(tmp_path / "crawl")
-    docs = spark.range(10).select(
-        F.format_string("https://site.example/%04d", "id").alias("name"),
-        F.concat(F.lit("page body number "), F.col("id").cast("string"))
-        .cast("binary")
-        .alias("body"),
-        (F.col("id") % 2).alias("shard"),
-    )
-    # plant an exact duplicate of page 3 under a different URI in shard 1
-    dup = spark.createDataFrame(
-        [("https://zmirror.example/copy-of-3", b"page body number 3", 1)],
-        "name string, body binary, shard long",
-    )
-    write_container_shards(
-        docs.unionByName(dup), warcs, "warc", n_shards=2, shard_col="shard"
-    ).collect()
-
-    records = stream_container_records(
-        spark, warcs, "warc", max_files_per_trigger=1
-    )
-    pages = records.filter(
-        (F.col("record_type") == "response") & F.col("error").isNull()
-    ).select(
-        F.col("name").alias("doc_id"),
-        F.col("body").cast("string").alias("text"),
-    )
-    corpus = str(tmp_path / "corpus")
-    q = start_dedup_ingest(
-        pages, corpus, str(tmp_path / "index"), str(tmp_path / "ckpt2")
-    )
-    q.awaitTermination()
-    rows = {
-        r["doc_id"]: r["text"]
-        for r in read_ingested_corpus(spark, corpus).collect()
-    }
-    assert len(rows) == 10  # 11 responses, 1 exact dup deduplicated away
-    assert rows["https://site.example/0003"] == "page body number 3"
-    # survivor = min doc_id per fingerprint: site/0003 sorts first
-    assert "https://zmirror.example/copy-of-3" not in rows
-
-
 def test_avro_shard_quarantine_and_deflate_layout(spark, tmp_path):
     out = str(tmp_path / "avro")
     write_container_shards(

@@ -145,3 +145,21 @@ def test_dim_mismatch_fails_fast(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     with pytest.raises(ValueError, match="dim"):
         lsh_signatures(emb, "vec_id", "embedding", pinned_hyperplanes(2, 4, 32))
+
+
+@pytest.mark.parametrize(
+    "edit",
+    [
+        lambda p: p[:3] + p[4:],        # (0, 3) missing
+        lambda p: p + [p[5]],           # (0, 5) listed twice
+        lambda p: [x for x in p if x[0] != 0],  # table 0 missing
+    ],
+    ids=["missing_plane", "duplicate_plane", "missing_table"],
+)
+def test_partial_plane_grid_rejected(spark, sf_dir, edit):
+    """``planes`` must cover the n_tables x bits grid exactly once; a gap
+    would shift later planes into the wrong bit and compute wrong buckets
+    silently."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match="grid"):
+        lsh_signatures(emb, "vec_id", "embedding", edit(pinned_hyperplanes(2, 6, 64)))

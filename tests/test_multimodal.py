@@ -424,3 +424,26 @@ def test_multimodal_meta_oracle_handles_empty_text(spark, tmp_path):
     )
     spec = REGISTRY["multimodal_meta"]
     compare(spec.fn(spark, sf), con, spec.oracle, "multimodal_meta[empty-text]")
+
+
+def test_multimodal_meta_null_text_has_null_digest(spark, tmp_path):
+    """The fused kernel must not hash a NULL text as the bytes
+    ``b'None'`` — NULL text gives NULL ``n_bytes`` / ``content_sha256``
+    (and size class ``small``), as sha2/length over the column did."""
+    import hashlib
+
+    from hainan_big_data_recommend_system_spark.qcatalog import REGISTRY
+
+    sf = str(tmp_path / "sf_null")
+    spark.createDataFrame(
+        [(1, "hello world"), (2, None)], "doc_id long, text string"
+    ).write.parquet(f"{sf}/documents.parquet")
+    got = {
+        r["doc_id"]: r
+        for r in REGISTRY["multimodal_meta"].fn(spark, sf).collect()
+    }
+    assert got[2]["n_bytes"] is None
+    assert got[2]["content_sha256"] is None
+    assert got[2]["size_class"] == "small"
+    assert got[1]["n_bytes"] == 11
+    assert got[1]["content_sha256"] == hashlib.sha256(b"hello world").hexdigest()

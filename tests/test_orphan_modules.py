@@ -1,0 +1,99 @@
+"""Every package module must be reachable by import.
+
+A module that no other package module and not ``__spark_entry__.py``
+imports is dead surface: nothing on the serving or query path can call
+it.  Such a module either goes, or is named in ``ALLOWED`` with the
+reason it stays.  The check parses source with ``ast`` and needs no
+Spark session.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "hainan_big_data_recommend_system_spark"
+
+#: Modules kept on purpose although nothing in the package imports them.
+ALLOWED = {
+    "streaming.recommend": "online serving entry point; perfbench drives it",
+    "streaming.sinks": "online serving KV writers; perfbench drives them",
+    "sources.jdbc": "the reference's MySQL reads (S1-S4), kept on purpose",
+    "functions.segment": "the reference's Chinese word segmentation (M1)",
+}
+
+
+def _modules() -> dict[str, str]:
+    """Dotted module name (without the package prefix) -> file path."""
+    out = {}
+    base = os.path.join(ROOT, PKG)
+    for dirpath, _, files in os.walk(base):
+        for f in files:
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, f), base)[:-3]
+            parts = rel.split(os.sep)
+            if parts[-1] == "__init__":
+                parts = parts[:-1]
+            out[".".join(parts)] = os.path.join(dirpath, f)
+    return out
+
+
+def _imported(name: str, path: str, known: set[str]) -> set[str]:
+    """Package modules (relative dotted names) that ``path`` imports."""
+    is_pkg = path.endswith("__init__.py")
+    here = name.split(".") if name else []
+    package = here if is_pkg else here[:-1]
+    found = set()
+
+    def add(dotted: str) -> None:
+        if dotted.startswith(PKG):
+            dotted = dotted[len(PKG) + 1:]
+        if dotted in known:
+            found.add(dotted)
+
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                add(a.name)
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                parent = package[: len(package) - (node.level - 1)]
+                stem = ".".join(parent + ([node.module] if node.module else []))
+            else:
+                stem = node.module or ""
+            add(stem)
+            for a in node.names:
+                add(f"{stem}.{a.name}" if stem else a.name)
+    return found - {name}
+
+
+def _orphans() -> set[str]:
+    mods = _modules()
+    known = set(mods)
+    reached = set()
+    for name, path in mods.items():
+        reached |= _imported(name, path, known)
+    entry = os.path.join(ROOT, "__spark_entry__.py")
+    reached |= _imported("", entry, known)
+    return {m for m in known if m and m not in reached
+            and not mods[m].endswith("__init__.py")}
+
+
+def test_every_module_is_imported_or_allowed():
+    unexplained = sorted(_orphans() - set(ALLOWED))
+    assert not unexplained, (
+        f"modules no package module or __spark_entry__ imports: "
+        f"{unexplained}; delete them or add them to ALLOWED with a reason"
+    )
+
+
+def test_allow_list_is_current():
+    mods = _modules()
+    missing = sorted(m for m in ALLOWED if m not in mods)
+    assert not missing, f"ALLOWED names modules that no longer exist: {missing}"
+    reached = sorted(set(ALLOWED) - _orphans())
+    assert not reached, f"ALLOWED modules are now imported; drop them: {reached}"

@@ -543,20 +543,6 @@ def test_capped_balance_keyed_arrow_scan(spark):
     assert "BatchEvalPython" not in plan, plan
 
 
-def test_eml_corpus_scan_spread_arrow_kernel(spark):
-    plan = plan_of(spark, "eml_corpus_scan")
-    assert "MapInPandas" in plan, plan
-    assert plan.count("Exchange") == 1, plan
-    assert "EvalPython" not in plan, plan
-
-
-def test_format_sniff_scan_spread_arrow_kernel(spark):
-    plan = plan_of(spark, "format_sniff_scan")
-    assert "MapInPandas" in plan, plan
-    assert plan.count("Exchange") == 1, plan
-    assert "EvalPython" not in plan, plan
-
-
 def test_business_days_scan_local_single_agg(spark):
     """The weekday closed form must ride the scans (no date-function
     round trips, no Python); one join + one aggregate."""

@@ -107,56 +107,6 @@ def test_foreach_batch_kv_with_fallback(spark, sf_dir, stream_dir, tmp_path):
         assert store[k] == state.hot_csv
 
 
-def test_stateful_running_profiles(spark, sf_dir, stream_dir, tmp_path):
-    """applyInPandasWithState: after all micro-batches, each user's latest
-    emitted running profile must equal the batch groupBy over all events."""
-    from hainan_big_data_recommend_system_spark.streaming.stateful import (
-        running_user_profiles,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    expected = {
-        r["user_id"]: (r["n"], r["cents"], r["ntypes"], r["last_ts"])
-        for r in ev.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-            F.countDistinct("event_type").alias("ntypes"),
-            F.max("ts").alias("last_ts"),
-        )
-        .collect()
-    }
-
-    stream = read_event_stream(spark, stream_dir)
-    q = (
-        running_user_profiles(stream)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("profiles_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .start()
-    )
-    q.processAllAvailable()
-    rows = spark.sql("SELECT * FROM profiles_out").collect()
-    q.stop()
-
-    assert rows, "stateful op emitted nothing"
-    assert not any(r["expired"] for r in rows)  # no 1h idle expiry in-test
-    # latest emission per user (running counters are monotone in n_events)
-    latest = {}
-    for r in rows:
-        cur = latest.get(r["user_id"])
-        if cur is None or r["n_events"] > cur["n_events"]:
-            latest[r["user_id"]] = r
-    assert set(latest) == set(expected)
-    for uid, r in latest.items():
-        n, cents, ntypes, last_ts = expected[uid]
-        assert r["n_events"] == n, uid
-        assert r["value_cents"] == cents, uid
-        assert r["n_types"] == ntypes, uid
-        assert r["last_ts"] == last_ts, uid
-
-
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     """A replayed (duplicated) source must collapse to exactly-once rows."""
     from hainan_big_data_recommend_system_spark.streaming.events import (
@@ -186,314 +136,6 @@ def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     assert set(ids) == {r["event_id"] for r in ev.collect()}
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, stream_dir, tmp_path):
-    """Stream-stream time-range join must emit exactly the batch banded
-    interval join's pairs (streaming/joins.py vs operators/rangejoin.py)."""
-    from hainan_big_data_recommend_system_spark.operators.rangejoin import interval_join
-    from hainan_big_data_recommend_system_spark.streaming.joins import (
-        stream_interval_join,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    clicks_b = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views_b = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "event_id", "ts"
-    )
-    expected = {
-        (r["event_id"], r["event_id_r"])
-        for r in interval_join(
-            clicks_b, views_b, on="user_id", left_ts="ts", right_ts="ts",
-            tolerance_s=1800,
-        ).collect()
-    }
-
-    stream = read_event_stream(spark, stream_dir)
-    clicks_s = stream.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views_s = stream.filter(F.col("event_type") == "view").select(
-        "user_id", "event_id", "ts"
-    )
-    # the stream_dir fixture repartitions RANDOMLY, so each micro-batch file
-    # spans the full ~2-week event range — the watermark must cover that
-    # disorder or later batches' rows are (correctly) dropped as late.  A
-    # production time-ordered stream would use a tight horizon instead.
-    joined = stream_interval_join(
-        clicks_s, views_s, on="user_id", left_ts="ts", right_ts="ts",
-        tolerance_s=1800, watermark="30 days",
-    )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_interval_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_ssj"))
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {
-        (r["event_id"], r["event_id_r"])
-        for r in spark.sql("SELECT * FROM ss_interval_out").collect()
-    }
-    assert got == expected
-    assert len(got) > 0
-
-
-# ---------------------------------------------------------------------------
-# Streaming corpus ingestion with exact dedup (streaming/ingest.py): the
-# streaming face of the batch dedup ladder — per-batch survivor selection,
-# anti-join against the persistent hash index, epoch-keyed idempotence.
-# ---------------------------------------------------------------------------
-
-
-def test_streaming_dedup_ingest(spark, tmp_path):
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        dedup_ingest_writer,
-        read_ingested_corpus,
-        start_dedup_ingest,
-    )
-
-    src = str(tmp_path / "incoming")
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    # file 1: an in-batch duplicate (ids 1,2 same text); file 2: a
-    # cross-batch duplicate of file 1 plus fresh content
-    spark.createDataFrame(
-        [(1, "alpha alpha"), (2, "alpha alpha"), (3, "beta")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
-    spark.createDataFrame(
-        [(4, "alpha alpha"), (5, "gamma")], "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f2")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f*")
-    )
-    q = start_dedup_ingest(stream, corpus, index, ckpt)
-    q.awaitTermination()
-
-    got = read_ingested_corpus(spark, corpus)
-    texts = [r["text"] for r in got.collect()]
-    # one survivor per distinct content, across batches
-    assert sorted(texts) == ["alpha alpha", "beta", "gamma"]
-    # min-id survivor discipline within the batch
-    assert {r["doc_id"] for r in got.collect()} == {1, 3, 5}
-
-    # second run over the same checkpoint: only NEW content appends
-    spark.createDataFrame(
-        [(6, "beta"), (7, "delta")], "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f3")
-    stream2 = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f*")
-    )
-    q2 = start_dedup_ingest(stream2, corpus, index, ckpt)
-    q2.awaitTermination()
-    texts2 = sorted(r["text"] for r in read_ingested_corpus(spark, corpus).collect())
-    assert texts2 == ["alpha alpha", "beta", "delta", "gamma"]
-
-    # at-least-once replay of an epoch is idempotent: re-offering the same
-    # batch under the same epoch id overwrites, never double-appends
-    writer = dedup_ingest_writer(corpus, index)
-    replay = spark.createDataFrame(
-        [(6, "beta"), (7, "delta")], "doc_id long, text string"
-    )
-    epochs = sorted(
-        int(e.split("=")[1])
-        for e in __import__("os").listdir(corpus)
-        if e.startswith("epoch=")
-    )
-    writer(replay, epochs[-1])
-    texts3 = sorted(r["text"] for r in read_ingested_corpus(spark, corpus).collect())
-    assert texts3 == texts2
-
-
-def test_streaming_neardup_ingest(spark, tmp_path):
-    """Near-dup stage: in-batch LSH near-dup drops the larger id;
-    a later batch's near-dup of ingested content drops via the corpus
-    bucket probe; byte-distinct non-dups survive."""
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        read_ingested_corpus,
-        start_dedup_ingest,
-    )
-
-    src = str(tmp_path / "incoming")
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    buckets = str(tmp_path / "buckets")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    near = base + " w11"  # 8 shared 3-gram shingles of 9 -> jaccard 8/9
-    far = "x1 x2 x3 x4 x5 x6 x7 x8 x9 x10"
-    # batch 1: docs 1 and 2 are near-dups of each other; 3 is distinct
-    spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
-    # batch 2: doc 4 near-dups the ingested doc 1; 5 is fresh
-    spark.createDataFrame(
-        [(4, base + " w12"), (5, "y1 y2 y3 y4 y5 y6 y7 y8 y9 y10")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f2")
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f*")
-    )
-    q = start_dedup_ingest(
-        stream, corpus, index, ckpt, bucket_dir=buckets, jaccard_threshold=0.5
-    )
-    q.awaitTermination()
-
-    got = {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()}
-    # 2 dropped in-batch (chain-min keeps 1); 4 dropped vs corpus; 5 kept
-    assert got == {1, 3, 5}, got
-    # the bucket index holds exactly the survivors
-    bidx = {r["doc_id"] for r in spark.read.parquet(buckets).collect()}
-    assert bidx == {1, 3, 5}, bidx
-
-
-def test_ingest_compaction_preserves_state(spark, tmp_path):
-    """VERDICT r4 #5: folding committed epochs into a negative-epoch base
-    generation must be INVISIBLE to every consumer — identical survivor
-    corpus, identical probe behavior for later batches (exact and
-    near-dup), idempotent replay of the (never-compacted) newest epoch,
-    and re-compaction folds the old base into the next generation."""
-    import os as _os
-
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        compact_ingest_state,
-        dedup_ingest_writer,
-        read_ingested_corpus,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    buckets = str(tmp_path / "buckets")
-    writer = dedup_ingest_writer(corpus, index, bucket_dir=buckets)
-
-    base = "w1 w2 w3 w4 w5 w6 w7 w8 w9 w10"
-    alpha = "a1 a2 a3 a4 a5 a6 a7 a8 a9 a10"
-    beta = "b1 b2 b3 b4 b5 b6 b7 b8 b9 b10"
-    gamma = "c1 c2 c3 c4 c5 c6 c7 c8 c9 c10"
-    writer(spark.createDataFrame([(1, base), (2, alpha)],
-                                 "doc_id long, text string"), 0)
-    writer(spark.createDataFrame([(3, beta), (4, alpha)],
-                                 "doc_id long, text string"), 1)
-    writer(spark.createDataFrame([(5, gamma)],
-                                 "doc_id long, text string"), 2)
-    before = sorted(
-        (r["doc_id"], r["text"])
-        for r in read_ingested_corpus(spark, corpus).collect()
-    )
-    assert [d for d, _ in before] == [1, 2, 3, 5]
-
-    for d in (corpus, index, buckets):
-        res = compact_ingest_state(spark, d)
-        assert res["compacted_epochs"] == [0, 1], (d, res)
-        assert res["base_epoch"] == -1
-    # the newest epoch partition survives; older ones are folded
-    parts = sorted(
-        p for p in _os.listdir(corpus) if p.startswith("epoch=")
-    )
-    assert parts == ["epoch=-1", "epoch=2"], parts
-
-    after = sorted(
-        (r["doc_id"], r["text"])
-        for r in read_ingested_corpus(spark, corpus).collect()
-    )
-    assert after == before  # identical survivor set
-
-    # exact probe still sees compacted fingerprints: alpha re-offered in
-    # a new epoch is dropped; near-dup probe still sees compacted
-    # buckets: a near-dup of doc 1 is dropped; fresh content survives
-    writer(
-        spark.createDataFrame(
-            [(6, alpha), (7, base + " w11"), (8, "d1 d2 d3 d4 d5 d6 d7 d8 d9 d10")],
-            "doc_id long, text string",
-        ),
-        3,
-    )
-    got = sorted(
-        r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()
-    )
-    assert got == [1, 2, 3, 5, 8], got
-
-    # replay of the newest epoch post-compaction stays idempotent
-    writer(
-        spark.createDataFrame(
-            [(6, alpha), (7, base + " w11"), (8, "d1 d2 d3 d4 d5 d6 d7 d8 d9 d10")],
-            "doc_id long, text string",
-        ),
-        3,
-    )
-    got2 = sorted(
-        r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()
-    )
-    assert got2 == got
-
-    # second compaction folds generation -1 plus epoch 2 into -2
-    res2 = compact_ingest_state(spark, corpus)
-    assert res2["compacted_epochs"] == [-1, 2] and res2["base_epoch"] == -2
-    final = sorted(
-        (r["doc_id"], r["text"])
-        for r in read_ingested_corpus(spark, corpus).collect()
-    )
-    assert [d for d, _ in final] == [1, 2, 3, 5, 8]
-
-    # guard: compacting the newest epoch is refused
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="replayable"):
-        compact_ingest_state(spark, corpus, upto=3)
-
-
-def test_ingest_guards_checkpoint_reset_and_null_text(spark, tmp_path):
-    """Code-review r4 fixes: (1) a restarted epoch id below the committed
-    max means the checkpoint was reset against live state dirs — fail
-    fast instead of silently overwriting committed epochs; (2) null-text
-    rows hash to a sentinel so they dedup across batches instead of
-    accumulating one per batch."""
-    import pytest as _pytest
-
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        dedup_ingest_writer,
-        read_ingested_corpus,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    writer = dedup_ingest_writer(corpus, index)
-
-    b0 = spark.createDataFrame(
-        [(1, None), (2, "alpha")], "doc_id long, text string"
-    )
-    b1 = spark.createDataFrame(
-        [(3, None), (4, "beta")], "doc_id long, text string"
-    )
-    writer(b0, 0)
-    writer(b1, 1)
-    rows = read_ingested_corpus(spark, corpus).collect()
-    # one surviving null-text row total, not one per batch
-    assert sorted(r["doc_id"] for r in rows) == [1, 2, 4]
-
-    # replay of the newest epoch is allowed (same outcome)...
-    writer(b1, 1)
-    rows2 = read_ingested_corpus(spark, corpus).collect()
-    assert sorted(r["doc_id"] for r in rows2) == [1, 2, 4]
-    # ...but an epoch id below the committed max is a checkpoint mismatch
-    with _pytest.raises(ValueError, match="checkpoint"):
-        writer(b0, 0)
-
-
 def test_asof_null_right_ts_matches_nothing(spark):
     """Code-review r4: a NULL right_ts sorts first under Spark ASC and was
     carried as a spurious earliest match; it must match nothing."""
@@ -513,55 +155,6 @@ def test_asof_null_right_ts_matches_nothing(spark):
     assert out[0]["ts_r"] is None and out[0]["value_r"] is None
 
 
-def test_stateful_update_fn_survives_poison_rows():
-    """Code-review r4: NULL value/event_type/ts rows must degrade, not
-    crash (a crashed micro-batch replays from the checkpoint forever).
-    Also pins HALF-UP cent rounding and delimiter-safe type-set state."""
-    import pandas as pd
-
-    from hainan_big_data_recommend_system_spark.streaming.stateful import (
-        _make_update_fn,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.exists = False
-            self.hasTimedOut = False
-            self._v = None
-        @property
-        def get(self):
-            return self._v
-        def update(self, v):
-            self._v = v
-            self.exists = True
-        def setTimeoutDuration(self, ms):
-            pass
-        def remove(self):
-            self._v = None
-
-    update = _make_update_fn(None)
-    state = FakeState()
-    pdf = pd.DataFrame(
-        {
-            "user_id": [1, 1, 1],
-            "ts": pd.to_datetime(["2024-01-01", None, "2024-01-02"]),
-            "event_type": ["a|b", None, "click"],
-            "value": [0.125, None, 1.0],
-        }
-    )
-    [out] = list(update((1,), iter([pdf]), state))
-    assert out["n_events"][0] == 3
-    # 0.125 -> 12.5 cents -> 13 HALF-UP (pandas' own round() would give 12)
-    assert out["value_cents"][0] == 13 + 100
-    # the literal type 'a|b' is ONE type; None is skipped
-    assert out["n_types"][0] == 2
-    # reload round-trips the delimiter-bearing type intact
-    state2 = FakeState()
-    state2._v, state2.exists = state._v, True
-    [out2] = list(update((1,), iter([pdf.iloc[:0]]), state2))
-    assert out2["n_types"][0] == 2
-
-
 def test_interval_join_rejects_zero_tolerance(spark):
     from hainan_big_data_recommend_system_spark.operators.rangejoin import (
         interval_join,
@@ -573,263 +166,6 @@ def test_interval_join_rejects_zero_tolerance(spark):
     with pytest.raises(ValueError, match="tolerance"):
         interval_join(df, df, on="user_id", left_ts="ts", right_ts="ts",
                       tolerance_s=0)
-
-
-def test_streaming_ingest_with_clean_stage(spark, tmp_path):
-    """The clean_fn quality gate runs before any dedup state is touched:
-    dropped pages never enter the corpus or the fingerprint index, kept
-    pages flow through the exact stage cleaned, and epoch replay stays
-    idempotent because the gate is deterministic."""
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.textstats import (
-        c4_line_filter,
-    )
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        dedup_ingest_writer,
-        read_ingested_corpus,
-        start_dedup_ingest,
-    )
-
-    src = str(tmp_path / "incoming")
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    ckpt = str(tmp_path / "ckpt")
-
-    good = "this page has plenty of good words."
-    spark.createDataFrame(
-        [
-            (1, good),
-            (2, "lorem ipsum dolor sit amet this page dies."),   # page drop
-            (3, good + "\nenable javascript to proceed now ok"), # line drop
-            (4, good),                                           # dup of 1
-        ],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
-
-    def clean(df):
-        cleaned = c4_line_filter(df, "doc_id", "text")
-        return (
-            cleaned.filter(
-                (F.col("page_dropped") == 0) & (F.col("n_kept") > 0)
-            )
-            .select("doc_id", F.col("cleaned_text").alias("text"))
-        )
-
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/f*")
-    )
-    q = start_dedup_ingest(stream, corpus, index, ckpt, clean_fn=clean)
-    q.awaitTermination()
-
-    got = {r["doc_id"]: r["text"] for r in read_ingested_corpus(spark, corpus).collect()}
-    # doc 2 page-dropped; doc 3 cleaned to the same text as doc 1 -> it
-    # dedups away; doc 4 exact-dups away; survivor is doc 1, cleaned
-    assert got == {1: good}
-
-    # replaying the same epoch through the writer is still idempotent
-    import os as _os
-
-    writer = dedup_ingest_writer(corpus, index, clean_fn=clean)
-    replay = spark.createDataFrame(
-        [(1, good), (2, "lorem ipsum dolor sit amet this page dies."),
-         (3, good + "\nenable javascript to proceed now ok"), (4, good)],
-        "doc_id long, text string",
-    )
-    epoch = max(
-        int(e.split("=")[1])
-        for e in _os.listdir(corpus) if e.startswith("epoch=")
-    )
-    writer(replay, epoch)
-    got2 = {r["doc_id"]: r["text"] for r in read_ingested_corpus(spark, corpus).collect()}
-    assert got2 == got
-
-
-def test_forget_docs_erasure_semantics(spark, tmp_path):
-    """The takedown path: a forgotten doc leaves the corpus AND both
-    dedup indexes — identical content offered later is ACCEPTED (no
-    ghost dedup), near-twins stop being killed, and re-running the
-    forget is a no-op."""
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        forget_docs,
-        read_ingested_corpus,
-        start_dedup_ingest,
-    )
-
-    src = str(tmp_path / "incoming")
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    buckets = str(tmp_path / "buckets")
-    ckpt = str(tmp_path / "ckpt")
-
-    base = "alpha beta gamma delta epsilon zeta eta theta"
-    near = "alpha beta gamma delta epsilon zeta eta iota"  # near-twin
-    spark.createDataFrame(
-        [(1, base), (2, "totally different text here entirely now")],
-        "doc_id long, text string",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f1")
-    q = start_dedup_ingest(
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1).parquet(f"{src}/f*"),
-        corpus, index, ckpt, bucket_dir=buckets, jaccard_threshold=0.5,
-    )
-    q.awaitTermination()
-    assert {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()} == {1, 2}
-
-    # the newest-epoch guard: a replayable epoch must refuse erasure
-    # until the caller asserts the stream is stopped
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="newest epoch"):
-        forget_docs(spark, corpus, index, [1], bucket_dir=buckets)
-    n = forget_docs(
-        spark, corpus, index, [1], bucket_dir=buckets,
-        allow_newest_epoch=True,  # availableNow query above has terminated
-    )
-    assert n == 1
-    assert {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()} == {2}
-    # idempotent re-run
-    assert forget_docs(
-        spark, corpus, index, [1], bucket_dir=buckets, allow_newest_epoch=True
-    ) == 0
-
-    # identical content AND a near-twin arrive later: both must be
-    # accepted now — neither the fingerprint nor the bucket index may
-    # remember the forgotten doc
-    spark.createDataFrame(
-        [(7, base), (8, near)], "doc_id long, text string"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{src}/f2")
-    q2 = start_dedup_ingest(
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 1).parquet(f"{src}/f*"),
-        corpus, index, ckpt, bucket_dir=buckets, jaccard_threshold=0.5,
-    )
-    q2.awaitTermination()
-    got = {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()}
-    # 7 re-enters (no ghost dedup); 8 is a near-twin OF 7 within the same
-    # batch, so exactly one of them survives the in-batch near-dup stage
-    assert 2 in got and 7 in got and 8 not in got
-
-
-def test_forget_docs_string_ids(spark, tmp_path):
-    """Erasure must honor the corpus id column's own type — the writer
-    happily ingests string ids, so the takedown path must too."""
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        dedup_ingest_writer,
-        forget_docs,
-        read_ingested_corpus,
-    )
-
-    corpus = str(tmp_path / "c")
-    index = str(tmp_path / "i")
-    writer = dedup_ingest_writer(corpus, index)
-    writer(
-        spark.createDataFrame(
-            [("url-a", "some text"), ("url-b", "other text")],
-            "doc_id string, text string",
-        ),
-        0,
-    )
-    n = forget_docs(spark, corpus, index, ["url-a"], allow_newest_epoch=True)
-    assert n == 1
-    assert {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()} == {"url-b"}
-
-
-def test_forget_docs_atomic_rewrite_no_debris_and_stray_dirs_ignored(
-    spark, tmp_path
-):
-    """ADVICE r5 (medium): the per-epoch rewrite must never delete the
-    live partition before its replacement exists — forget_docs now
-    writes the filtered rows to a hidden temp dir and swaps it in via
-    two renames.  On success no temp/old debris remains, and a crashed
-    leftover (hidden dot-dir from an interrupted earlier run) is
-    invisible to the epoch readers, so recovery is a plain re-run."""
-    import os
-
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        forget_docs,
-        read_ingested_corpus,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    docs = {0: [(1, "text one"), (2, "text two"), (3, "text three")],
-            1: [(4, "text four"), (5, "text five")]}
-    for ep, rows in docs.items():
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(f"{corpus}/epoch={ep}")
-        spark.createDataFrame(
-            [(t,) for _, t in rows], "text string"
-        ).select(
-            F.md5(F.col("text").cast("binary")).alias("fingerprint")
-        ).coalesce(1).write.parquet(f"{index}/epoch={ep}")
-
-    # a crashed earlier rewrite left a hidden temp dir with stale rows:
-    # readers must not surface it as data
-    spark.createDataFrame(
-        [(99, "ghost row from crashed rewrite")], "doc_id long, text string"
-    ).coalesce(1).write.parquet(f"{corpus}/.forget-tmp-0-crashed")
-
-    assert forget_docs(spark, corpus, index, [2]) == 1
-
-    remaining = {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()}
-    assert remaining == {1, 3, 4, 5}  # 99 invisible, 2 erased, rest intact
-    # no debris at all: the recovery sweep (ADVICE r6) purges the
-    # pre-planted stray tmp dir on entry, and the rewrite leaves none
-    assert not [d for d in os.listdir(corpus) if d.startswith(".forget")]
-    assert not [d for d in os.listdir(index) if d.startswith(".forget")]
-    # the untouched epoch-1 partition was not rewritten in place
-    assert sorted(os.listdir(corpus + "/epoch=1"))
-
-
-def test_forget_docs_recovers_orphaned_rewrite(spark, tmp_path):
-    """ADVICE r6: a crash BETWEEN _atomic_epoch_rewrite's two renames
-    leaves the live epoch dir absent and its full contents under
-    .forget-old-<ep>-<pid>; the next forget_docs run must restore the
-    partition before scanning (previously readers silently skipped it —
-    data appeared erased)."""
-    import os
-    import shutil
-
-    from hainan_big_data_recommend_system_spark.streaming.ingest import (
-        _recover_epoch_rewrites,
-        forget_docs,
-        read_ingested_corpus,
-    )
-
-    corpus = str(tmp_path / "corpus")
-    index = str(tmp_path / "index")
-    for ep, rows in {0: [(1, "one"), (2, "two")], 1: [(3, "three")]}.items():
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.parquet(f"{corpus}/epoch={ep}")
-        spark.createDataFrame(
-            [(t,) for _, t in rows], "text string"
-        ).select(
-            F.md5(F.col("text").cast("binary")).alias("fingerprint")
-        ).coalesce(1).write.parquet(f"{index}/epoch={ep}")
-
-    # simulate the between-renames crash on corpus epoch 0
-    shutil.move(f"{corpus}/epoch=0", f"{corpus}/.forget-old-0-4242")
-    assert {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()} == {3}
-
-    # a forget of doc 3 (epoch 1) must first heal epoch 0, then erase 3
-    assert forget_docs(
-        spark, corpus, index, [3], allow_newest_epoch=True
-    ) == 1
-    got = {r["doc_id"] for r in read_ingested_corpus(spark, corpus).collect()}
-    assert got == {1, 2}  # epoch 0 restored, doc 3 gone
-    assert not [d for d in os.listdir(corpus) if d.startswith(".forget")]
-
-    # crash AFTER the install: live dir present, old copy obsolete —
-    # the sweep deletes it without touching the live rows
-    shutil.copytree(f"{corpus}/epoch=1", f"{corpus}/.forget-old-1-777")
-    res = _recover_epoch_rewrites(spark, corpus)
-    assert res == {"restored": [], "purged_old": 1, "purged_tmp": 0}
-    assert not os.path.exists(f"{corpus}/.forget-old-1-777")
 
 
 def test_streaming_session_windows_match_batch(spark, sf_dir, stream_dir, tmp_path):
