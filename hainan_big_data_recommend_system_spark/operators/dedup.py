@@ -60,9 +60,32 @@ def _spread_scan(docs: DataFrame, key_col: str) -> DataFrame:
     no-op.  Hash-partitioning on the doc key keeps the explode's output
     grouped for the downstream per-doc aggregates."""
     n = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < n:
+    if _planned_partitions(docs._jdf.queryExecution().executedPlan()) < n:
         return docs.repartition(n, F.col(key_col))
     return docs
+
+
+def _planned_partitions(plan) -> int:
+    """Partition count of a physical plan, read without running it: the
+    partitioning it declares (an explicit repartition or coalesce), else
+    the sum of its leaf scans' splits, which file listing alone fixes.
+    ``DataFrame.rdd`` would tell the same, but under AQE it runs every
+    upstream shuffle stage while the caller is still building its plan."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()  # the plan before AQE adds its exchanges
+    n = plan.outputPartitioning().numPartitions()
+    if n:
+        return n
+    leaves = plan.collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "InMemoryTableScan":
+            # executing a cache that is not filled yet would fill it
+            total += _planned_partitions(leaf.relation().cachedPlan())
+        else:
+            total += leaf.execute().getNumPartitions()  # builds the RDD only
+    return total
 
 
 def shingles(

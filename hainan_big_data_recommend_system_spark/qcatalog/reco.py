@@ -92,10 +92,16 @@ def q_reco_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def reco_assembly(
-    spark: SparkSession, sf_dir: str, uid_mod: int | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    uid_mod: int | None = None,
+    hot: DataFrame | None = None,
 ) -> DataFrame:
     """M8§ assembly; ``uid_mod`` restricts the query-user subset (None → all
-    users, the `log_analyze.py` nightly-batch shape)."""
+    users, the `log_analyze.py` nightly-batch shape).  ``hot`` is a local
+    ``(pid)`` frame of the hot-30 list when the caller has already
+    collected it (the serving state needs it as its fallback payload);
+    None computes it in-plan."""
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     cust = load_table(spark, sf_dir, "customer").select(
@@ -111,9 +117,10 @@ def reco_assembly(
         .distinct()
         .localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
     )
-    hot = hot_items(li, "l_partkey", n=30).select(
-        F.col("l_partkey").alias("pid")
-    )
+    if hot is None:
+        hot = hot_items(li, "l_partkey", n=30).select(
+            F.col("l_partkey").alias("pid")
+        )
 
     # top-40 most-similar users per query user.  sim is monotone in
     # |Δ acctbal|, so this is exact 1-D kNN — the banded operator replaces

@@ -4,8 +4,9 @@ The reference's online loop (`guessLike_u_like.py:179-226`) is a blocking
 Redis pub/sub listener that recomputes one user's recommendations per
 message against state snapshotted at startup.  Here that becomes one
 streaming job: ``readStream`` → payload parse (``from_json`` replaces the
-reference's ``eval``) → stream-static joins against the batch-built model
-tables → ``foreachBatch`` KV sink with the reference's fallback defaults.
+reference's ``eval``) → ``foreachBatch``: a probe of the payload map built
+from the batch model tables at startup → KV sink, with the reference's
+hot-list fallback.
 
 The reference has no event-time semantics at all (arrival-order only) —
 watermarked tumbling/sliding/session windows are the M6 extension surface

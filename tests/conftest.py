@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -48,3 +49,23 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_oracle_dir():
     return SF_ORACLE
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn()`` in a job group of its own and
+    returns ``(fn(), number of Spark jobs it launched)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count_jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # the status store is fed by the async listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

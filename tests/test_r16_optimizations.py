@@ -4,13 +4,17 @@
   against a pure-Python reference of the pinned-hyperplane definition
   (bucket = Σ_j [v·h_tj ≥ 0] << j over exact integer dots).
 - ``_spread_scan`` must repartition ONLY when the physical parallelism
-  is below the session default (the at-scale no-op guarantee).
+  is below the session default (the at-scale no-op guarantee), and must
+  read that parallelism without running the plan.
 """
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from hainan_big_data_recommend_system_spark.operators.dedup import _spread_scan
+from hainan_big_data_recommend_system_spark.operators.dedup import (
+    _spread_scan,
+    shingles,
+)
 from hainan_big_data_recommend_system_spark.operators.lsh import (
     lsh_signatures,
     pinned_hyperplanes,
@@ -70,3 +74,17 @@ def test_spread_scan_noop_when_already_parallel(spark):
     out = _spread_scan(df, "doc_id")
     # already-parallel input must NOT pay another shuffle
     assert out is df
+
+
+def test_shingles_over_shuffled_input_runs_no_job(spark, count_jobs):
+    # an aggregate puts a shuffle under AQE below the spread probe
+    docs = (
+        spark.createDataFrame(
+            [(i % 10, f"w{i} x y z") for i in range(100)], "doc_id long, text string"
+        )
+        .groupBy("doc_id")
+        .agg(F.max("text").alias("text"))
+    )
+    out, jobs = count_jobs(lambda: shingles(docs, "doc_id", "text"))
+    assert jobs == 0
+    assert out.count() == 20  # "wN x y" and "x y z" for each of 10 docs

@@ -10,7 +10,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from hainan_big_data_recommend_system_spark.catalog import load_table
+from hainan_big_data_recommend_system_spark.qcatalog import REGISTRY
 from hainan_big_data_recommend_system_spark.streaming.events import (
+    EVENT_SCHEMA,
     dispatch_channels,
     parse_events,
     read_event_stream,
@@ -24,6 +26,7 @@ from hainan_big_data_recommend_system_spark.streaming.sinks import (
     memory_kv_writer,
     start_kv_query,
 )
+from tests.oracle_utils import duck_con
 
 
 @pytest.fixture(scope="module")
@@ -35,6 +38,42 @@ def stream_dir(spark, sf_dir, tmp_path_factory):
     ev.repartition(4).write.mode("overwrite").parquet(out)
     yield out
     shutil.rmtree(out, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def static_state(spark, sf_dir):
+    return build_static_state(spark, sf_dir)
+
+
+@pytest.fixture(scope="module")
+def oracle_payloads(sf_dir):
+    """(uid → recs CSV in rank order, hot-list CSV) for every user: the
+    ``reco_assembly`` oracle SQL replayed in DuckDB with its
+    ``uid % 10`` query-user filter removed."""
+    user_filter = "WHERE a.c_custkey % 10 = 0"
+    sql = REGISTRY["reco_assembly"].oracle
+    assert user_filter in sql
+    con = duck_con(sf_dir)
+    try:
+        recs = con.execute(
+            "SELECT uid, string_agg(CAST(pid AS VARCHAR), ',' ORDER BY rk) "
+            f"FROM ({sql.replace(user_filter, '')}) GROUP BY uid"
+        ).fetchall()
+        (hot,) = con.execute(
+            "SELECT string_agg(CAST(l_partkey AS VARCHAR), ',' "
+            "ORDER BY cnt DESC, l_partkey) FROM ("
+            "SELECT l_partkey, count(*) AS cnt FROM lineitem GROUP BY 1 "
+            "ORDER BY cnt DESC, l_partkey LIMIT 30)"
+        ).fetchone()
+    finally:
+        con.close()
+    return {int(u): csv for u, csv in recs}, hot
+
+
+def _assert_oracle_payloads(store, oracle_payloads):
+    recs, hot = oracle_payloads
+    for key, value in store.items():
+        assert value == recs.get(int(key.split(":")[1]), hot), key
 
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir, stream_dir, tmp_path):
@@ -82,29 +121,64 @@ def test_parse_and_dispatch_streaming(spark, stream_dir, tmp_path):
     assert "u_first_select" in chans
 
 
-def test_foreach_batch_kv_with_fallback(spark, sf_dir, stream_dir, tmp_path):
-    state = build_static_state(spark, sf_dir)
+def test_foreach_batch_kv_with_fallback(
+    spark, stream_dir, static_state, oracle_payloads, tmp_path
+):
     store: dict[str, str] = {}
     writer = memory_kv_writer(store)
 
     stream = parse_events(read_event_stream(spark, stream_dir, max_files=2))
 
     def per_batch(batch_df, epoch_id):
-        writer(recommend_batch(batch_df, state), epoch_id)
+        writer(recommend_batch(batch_df, static_state), epoch_id)
 
     q = start_kv_query(stream, per_batch, str(tmp_path / "ckpt3"))
     q.awaitTermination(180)
 
     assert len(store) > 0
     assert all(k.startswith("b_like:") for k in store)
-    # T4: every user got a payload; users without personalized recs got hot list
-    assert all(v for v in store.values())
-    rec_uids = {r["uid"] for r in state.user_recs.select("uid").collect()}
-    fallback_hits = [
-        k for k in store if int(k.split(":")[1]) not in rec_uids
-    ]
-    for k in fallback_hits:
-        assert store[k] == state.hot_csv
+    # T4: every user got a payload — its oracle recs, or the hot list
+    assert static_state.hot_csv == oracle_payloads[1]
+    _assert_oracle_payloads(store, oracle_payloads)
+
+
+def test_recommend_batch_runs_one_job(
+    spark, stream_dir, static_state, oracle_payloads, count_jobs
+):
+    """One micro-batch = one Spark job (the collect of its user ids):
+    recommend_batch probes the startup payload map and hands the KV writer
+    a local relation, so the writer's collect runs nothing."""
+    recs, hot = oracle_payloads
+    absent, garbage = 10**9, 10**9 + 1
+    assert absent not in recs
+    extra = spark.createDataFrame(
+        [
+            (10**6, None, absent, "click", 1.0, '{"k": 1}'),
+            (10**6 + 1, None, absent, "view", 1.0, None),  # duplicate user
+            # a payload from_json cannot parse: a garbage frame
+            (10**6 + 2, None, garbage, "click", 1.0, ""),
+        ],
+        EVENT_SCHEMA,
+    )
+    batch = parse_events(
+        spark.read.schema(EVENT_SCHEMA).parquet(stream_dir).unionByName(extra)
+    )
+    uids = [r["user_id"] for r in batch.select("user_id").collect()]
+    assert len(uids) > len(set(uids))  # the batch repeats users
+
+    store: dict[str, str] = {}
+    writer = memory_kv_writer(store)
+    _, jobs = count_jobs(lambda: writer(recommend_batch(batch, static_state), 0))
+    assert jobs == 1
+    assert set(store) == {f"b_like:{u}" for u in uids}
+    assert f"b_like:{garbage}" not in store
+    assert store[f"b_like:{absent}"] == hot
+    assert any(v != hot for v in store.values())  # some users are personalized
+    _assert_oracle_payloads(store, oracle_payloads)
+
+    served = dict(store)
+    writer(recommend_batch(batch.filter(F.lit(False)), static_state), 1)
+    assert store == served
 
 
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
