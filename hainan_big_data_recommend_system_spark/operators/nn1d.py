@@ -34,7 +34,6 @@ exact counterpart when the ranking key is scalar.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
-from ..session import CHECKPOINT_LEVEL
 
 
 def nearest_neighbors_1d(
@@ -52,18 +51,14 @@ def nearest_neighbors_1d(
     Returns (group, id, neighbor_id, dist, rank) — exact, deterministic.
     """
     w_pos = Window.partitionBy("__g").orderBy("__v", "__id")
-    # materialize positions once: they feed the tie-width aggregate AND
-    # both sides of the band join — lazily the per-group sort window would
-    # execute three times
-    pos = (
-        df.select(
-            F.col(group_col).alias("__g"),
-            F.col(id_col).alias("__id"),
-            F.col(val_col).alias("__v"),
-        )
-        .withColumn("__pos", F.row_number().over(w_pos))
-        .localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
-    )
+    # positions feed the tie-width aggregate AND both sides of the band
+    # join; exchange reuse shares the one shuffle on the group key between
+    # them, so building this plan launches no job
+    pos = df.select(
+        F.col(group_col).alias("__g"),
+        F.col(id_col).alias("__id"),
+        F.col(val_col).alias("__v"),
+    ).withColumn("__pos", F.row_number().over(w_pos))
 
     # T = max multiplicity of a single value per group → exact band width
     ties = (

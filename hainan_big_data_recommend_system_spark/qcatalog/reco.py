@@ -27,7 +27,6 @@ from ..operators.nn1d import nearest_neighbors_1d
 from ..operators.scoring import rank_discounted_score
 from ..operators.topk import topk_per_group
 from . import register, register_extra
-from ..session import CHECKPOINT_LEVEL
 
 
 @register(
@@ -108,14 +107,13 @@ def reco_assembly(
         "c_custkey", "c_mktsegment", "c_acctbal"
     )
 
-    # materialize the collection set once: it feeds the contribs join AND
-    # the own-collection anti-filter — lazily the orders⋈lineitem shuffle
-    # join + distinct would execute twice
+    # the collection set feeds the contribs join AND the own-collection
+    # anti-filter; exchange reuse runs its orders⋈lineitem shuffle once
+    # for both, so building this plan launches no job
     colls = (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("uid"), F.col("l_partkey").alias("pid"))
         .distinct()
-        .localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
     )
     if hot is None:
         hot = hot_items(li, "l_partkey", n=30).select(

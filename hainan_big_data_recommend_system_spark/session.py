@@ -11,6 +11,24 @@ the same code scales to a multi-executor cluster:
 - Arrow enabled for every pandas-interop path (Pandas UDFs, toPandas).
 - Session timezone pinned to UTC so timestamp semantics match the DuckDB
   oracle (DuckDB timestamps are UTC-naive).
+- Streaming checkpoints (offset log, commit log, the file source's log)
+  are committed through ``FileSystemBasedCheckpointFileManager``, not
+  Spark's default ``FileContextBasedCheckpointFileManager``.  Without the
+  native Hadoop library, FileContext's rename on the local filesystem
+  looks up link status by forking a ``readlink`` process per lookup: a
+  JFR ``jdk.ProcessStart`` recording in the driver read 24 ``readlink``
+  + 6 ``chmod`` forks per trigger, all on the stream thread.  With this
+  manager a trigger forks 0 ``readlink``; the 6 ``chmod`` forks of
+  ``RawLocalFileSystem.setPermission`` remain (they need the native
+  library).  On 4 vCPUs the per-trigger medians of ``latestOffset`` +
+  ``walCommit`` + ``commitOffsets`` fell 69 → 19 ms.  The commit is no
+  weaker: on the local filesystem FileContext already renames
+  check-then-rename (Hadoop's ``AbstractFileSystem.renameInternal``
+  "deals with overwrite in a non-atomic way"), and the FileSystem
+  manager does the same ``exists`` check, then ``rename(src, dst)``,
+  moving the ``.crc`` sidecar with the file.  On HDFS the two-argument
+  rename refuses to overwrite, so a second writer of the same batch
+  still fails.
 """
 
 from __future__ import annotations
@@ -87,6 +105,11 @@ def get_spark(
         .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     if master:
         builder = builder.master(master)

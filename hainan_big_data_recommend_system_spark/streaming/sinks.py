@@ -56,7 +56,15 @@ def start_kv_query(
 ):
     """T1/T6: run the streaming query — ``availableNow`` drains everything
     present then stops (the daily-batch trigger, `log_analyze.py` lifecycle);
-    otherwise continuous micro-batches."""
+    otherwise continuous micro-batches.
+
+    Besides the writer's output, each trigger commits three files under
+    ``checkpoint_dir``, each with a ``.crc`` sidecar: the file source's
+    log entry ``sources/0/<batch>`` (the files it takes), the offset log
+    ``offsets/<batch>`` before ``writer`` runs, and the commit log
+    ``commits/<batch>`` after it returns.  Each is written to a temp file
+    and renamed into place by the checkpoint manager ``session.get_spark``
+    selects; a restart replays the batch whose offsets have no commit."""
     q = result_stream.writeStream.foreachBatch(writer).option(
         "checkpointLocation", checkpoint_dir
     )

@@ -1,12 +1,15 @@
 """Banded 1-D kNN must equal brute force — including the degenerate
 all-ties group where the measured multiplicity T widens the band to the
-whole group (operators/nn1d.py)."""
+whole group (operators/nn1d.py).  Building the kNN plan, and the
+``reco_assembly`` plan over it, runs no Spark job."""
 
 from __future__ import annotations
 
+from hainan_big_data_recommend_system_spark.catalog import load_table
 from hainan_big_data_recommend_system_spark.operators.nn1d import (
     nearest_neighbors_1d,
 )
+from hainan_big_data_recommend_system_spark.qcatalog.reco import reco_assembly
 
 
 def _brute(rows, k):
@@ -38,3 +41,17 @@ def test_nn1d_matches_brute_force_with_ties(spark):
         ).collect()
     }
     assert got == _brute(rows, 3)
+
+
+def test_building_reco_assembly_runs_no_job(spark, sf_dir, count_jobs):
+    """No eager checkpoint while the plan is built: neither the collection
+    set nor the kNN positions run a job before the caller's action.  The
+    only jobs are the parquet schema reads of ``load_table``, counted on
+    their own and subtracted."""
+    tables = ("orders", "lineitem", "customer")
+    _, schema_jobs = count_jobs(
+        lambda: [load_table(spark, sf_dir, t) for t in tables]
+    )
+    out, jobs = count_jobs(lambda: reco_assembly(spark, sf_dir, uid_mod=10))
+    assert jobs == schema_jobs
+    assert out.count() > 0

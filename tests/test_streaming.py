@@ -181,6 +181,54 @@ def test_recommend_batch_runs_one_job(
     assert store == served
 
 
+def test_checkpoint_commits_fork_no_readlink(spark, tmp_path):
+    """Committing a trigger's offset, commit and source logs starts no
+    ``readlink`` process in the driver JVM.  Spark's default FileContext
+    checkpoint manager forks one per link-status lookup on the local
+    filesystem (80 over these 3 triggers); session.get_spark selects the
+    FileSystem-based manager, which forks none.  Counted with an
+    in-process JFR recording of ``jdk.ProcessStart`` only."""
+    src = str(tmp_path / "kv_src")
+    keys = [f"b_like:{i}" for i in range(3)]
+    for i, key in enumerate(keys):
+        spark.createDataFrame(
+            [(key, str(i))], "kv_key string, ids_csv string"
+        ).coalesce(1).write.mode("append").parquet(src)
+    stream = (
+        spark.readStream.schema("kv_key string, ids_csv string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+    jvm = spark._jvm
+    rec = jvm.jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try:
+        store: dict[str, str] = {}
+        q = start_kv_query(
+            stream, memory_kv_writer(store), str(tmp_path / "ckpt_forks"),
+            available_now=True,
+        )
+        q.awaitTermination(180)
+        # positive control: a fork the recording must see
+        jvm.java.lang.Runtime.getRuntime().exec("true").waitFor()
+        rec.stop()
+        dump = jvm.java.io.File(str(tmp_path / "forks.jfr")).toPath()
+        rec.dump(dump)
+    finally:
+        rec.close()
+    cmds = [
+        e.getString("command")
+        for e in jvm.jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+    ]
+
+    assert "true" in cmds
+    assert len(q.recentProgress) >= 3
+    assert [c for c in cmds if c.split()[0] == "readlink"] == []
+    assert store == {key: str(i) for i, key in enumerate(keys)}
+
+
 def test_streaming_dedup_within_watermark(spark, sf_dir, tmp_path):
     """A replayed (duplicated) source must collapse to exactly-once rows."""
     from hainan_big_data_recommend_system_spark.streaming.events import (
