@@ -16,8 +16,10 @@ Layout
 - ``functions/`` : scalar/array helpers (F1–F20 in SURVEY.md §2.8)
 - ``operators/`` : relational + custom operators (weights, top-k, dedup, …)
 - ``ml/``        : vectorize / cluster pipelines (M2§–M4§)
-- ``plans/``     : end-to-end lifecycles (§3.1–§3.3 re-expressed as lazy plans)
-- ``streaming/`` : Structured Streaming event path (T1–T6)
+- ``qcatalog/``  : the oracle-checked query catalog ``__spark_entry__`` exports
+- ``streaming/`` : Structured Streaming event path (T1–T6); the
+  recommender itself (``reco_assembly``, serving state, per-batch step)
+  lives in ``streaming.recommend`` and imports nothing from ``qcatalog``
 - ``sources/``   : non-parquet sources & KV sinks (S5–S12)
 """
 

@@ -20,9 +20,8 @@ corpus pipeline wants for schema-light ingestion with quarantine:
 messages (ts varint, user string, zigzag delta, payload bytes, fixed32
 checksum, optional nested submessage) and aggregates exact integers.
 Unknown fields are SKIPPED BY WIRE TYPE — protobuf's forward-compat
-contract, same spirit as EBML's unknown-element skip
-(operators/mkv.py).  Malformed framing raises ValueError for the
-standard quarantine path.
+contract.  Malformed framing raises ValueError for the standard
+quarantine path.
 """
 
 from __future__ import annotations

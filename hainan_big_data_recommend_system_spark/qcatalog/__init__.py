@@ -7,7 +7,8 @@ parquet tables.  Submodules register themselves on import:
 - :mod:`.relational`   — scans/filters/joins/aggs/windows (§2.1–2.8 core)
 - :mod:`.profile_logs` — user profiles, robust log parse, date pruning, sampling
 - :mod:`.ml`           — vectorize / cluster / similarity (rows-only + invariants)
-- :mod:`.reco`         — recommendation assembly lifecycles (§3)
+- :mod:`.reco`         — registers ``streaming.recommend.reco_assembly``
+  with its oracle (§3), plus the ALS, basket and training-data queries
 - :mod:`.dedup`        — exact/MinHash/SimHash/ngram/embedding dedup (extension)
 - :mod:`.textstats`    — lang-id, quality, token counts, fingerprints (extension)
 - :mod:`.streamq`      — windowed event aggregations (batch-oracled; streaming

@@ -1,17 +1,10 @@
-"""Recommendation-assembly queries (SURVEY.md §2.9 M8§, §3.2–3.3).
+"""Recommendation queries (SURVEY.md §3.2–3.3).
 
-The reference's ``recommend_User_Book`` (`guessLike_u_like.py:106-129`)
-composed end-to-end on the TPC-H analogs (FIXTURES.md §B: customer ≈ user,
-part ≈ book, orders⋈lineitem ≈ collections):
-
-similar users (top-40 by proximity within segment ≈ within-cluster top-10%)
-→ rank-discounted score fold over their collections (A8)
-→ anti-filter own collection (P9) and the hot list (P8)
-→ top-10 per user (O2).
-
-Fully SQL-expressible → oracle-checked.  The query side restricts to
-``uid % 10 = 0`` (the "active users this batch" subset — the same
-bounding the reference gets from computing one user per event).
+``reco_assembly`` registers the recommender of ``streaming.recommend``
+(M8§ assembly) with its oracle SQL, which computes the all-pairs
+formulation.  The query side restricts to ``uid % 10 = 0`` (the "active
+users this batch" subset — the same bounding the reference gets from
+computing one user per event).
 
 Plus ALS collaborative filtering (rows-only) — the idiomatic-Spark upgrade
 of the reference's similarity heuristic (BASELINE.json north_star).
@@ -19,13 +12,10 @@ of the reference's similarity heuristic (BASELINE.json north_star).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..operators.hot import hot_items
-from ..operators.nn1d import nearest_neighbors_1d
-from ..operators.scoring import rank_discounted_score
-from ..operators.topk import topk_per_group
+from ..streaming.recommend import reco_assembly
 from . import register, register_extra
 
 
@@ -88,82 +78,6 @@ from . import register, register_extra
 )
 def q_reco_assembly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return reco_assembly(spark, sf_dir, uid_mod=10)
-
-
-def reco_assembly(
-    spark: SparkSession,
-    sf_dir: str,
-    uid_mod: int | None = None,
-    hot: DataFrame | None = None,
-) -> DataFrame:
-    """M8§ assembly; ``uid_mod`` restricts the query-user subset (None → all
-    users, the `log_analyze.py` nightly-batch shape).  ``hot`` is a local
-    ``(pid)`` frame of the hot-30 list when the caller has already
-    collected it (the serving state needs it as its fallback payload);
-    None computes it in-plan."""
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment", "c_acctbal"
-    )
-
-    # the collection set feeds the contribs join AND the own-collection
-    # anti-filter; exchange reuse runs its orders⋈lineitem shuffle once
-    # for both, so building this plan launches no job
-    colls = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(F.col("o_custkey").alias("uid"), F.col("l_partkey").alias("pid"))
-        .distinct()
-    )
-    if hot is None:
-        hot = hot_items(li, "l_partkey", n=30).select(
-            F.col("l_partkey").alias("pid")
-        )
-
-    # top-40 most-similar users per query user.  sim is monotone in
-    # |Δ acctbal|, so this is exact 1-D kNN — the banded operator replaces
-    # the all-pairs-within-segment window (O(Σ segment²) rows) with an
-    # O(n) sort + position band join; the oracle below still computes the
-    # all-pairs formulation, proving the substitution row-exact.
-    knn = nearest_neighbors_1d(
-        cust,
-        group_col="c_mktsegment",
-        id_col="c_custkey",
-        val_col="c_acctbal",
-        k=40,
-        query_filter=(
-            None if uid_mod is None else F.col("a_id") % uid_mod == 0
-        ),
-    )
-    sim_users = knn.select(
-        F.col("c_custkey").alias("uid"),
-        F.col("neighbor_id").alias("vid"),
-        (1.0 / (1.0 + F.col("dist") / 1000.0)).alias("sim"),
-        F.col("rank").alias("urank"),
-    )
-
-    contribs = sim_users.join(
-        colls.withColumnRenamed("uid", "vid"), "vid", "inner"
-    ).select("uid", "pid", "sim", "urank")
-    scores = rank_discounted_score(
-        contribs,
-        ["uid", "pid"],
-        "sim",
-        [F.asc("urank")],
-        score_col="score_micros",
-        int_scale=1_000_000,
-    )
-
-    not_own = scores.join(colls, ["uid", "pid"], "left_anti")
-    not_hot = not_own.join(F.broadcast(hot), "pid", "left_anti")
-    out = topk_per_group(
-        not_hot,
-        ["uid"],
-        [F.desc("score_micros"), F.asc("pid")],
-        k=10,
-        rank_col="rk",
-    )
-    return out.select("uid", "pid", "score_micros", F.col("rk").cast("long").alias("rk"))
 
 
 # ---------------------------------------------------------------------------

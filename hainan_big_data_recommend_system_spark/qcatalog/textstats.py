@@ -431,8 +431,8 @@ def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register_extra(
     # demoted round 7 (rotation for corpus_pipeline_ledger): the
     # frame-sampling facet's §2 coverage rides seeded_sample_orders /
-    # mixture_sample_temperature (sampling) and multimodal_meta /
-    # video_meta (media explode shape); the local DuckDB gate stays
+    # mixture_sample_temperature (sampling) and multimodal_meta (media
+    # explode shape); the local DuckDB gate stays
     "frame_samples",
     """
     SELECT doc_id AS media_id,
@@ -1214,152 +1214,6 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "audio_meta",
-    r"""
-    WITH d AS (SELECT doc_id, 64 + doc_id % 64 AS n FROM documents),
-    s AS (
-        SELECT doc_id, n, i,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wavv1:'
-                                   || CAST(i AS VARCHAR)), 1, 4))::BIGINT
-               - 32768 AS v
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS i)
-    ),
-    s2 AS (
-        SELECT doc_id, n, i, v,
-               lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv
-        FROM s
-    ),
-    feat AS (
-        SELECT doc_id, max(n) AS ns,
-               max(abs(v)) AS peak,
-               sum(v * v) AS energy,
-               sum(CASE WHEN pv IS NOT NULL AND ((pv >= 0) <> (v >= 0))
-                        THEN 1 ELSE 0 END) AS zc
-        FROM s2 GROUP BY doc_id
-    )
-    SELECT doc_id,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           CAST(1 AS BIGINT) AS n_channels,
-           CAST(16 AS BIGINT) AS bits,
-           CAST(ns AS BIGINT) AS n_samples,
-           CAST(peak AS BIGINT) AS peak_abs,
-           CAST(zc AS BIGINT) AS n_zero_cross,
-           CAST(energy AS BIGINT) AS energy
-    FROM feat
-    """,
-)
-def q_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio decode + features (operators/wav.py): every doc gets a REAL
-    16-bit PCM RIFF/WAVE payload (samples generatively pinned to an md5
-    chain of doc_id), Spark parses the actual bytes — chunk walk, fmt
-    geometry, PCM extraction — and computes exact-integer features
-    (peak, zero crossings, energy).  The oracle never sees the bytes: it
-    recomputes the expected features from the generative formula, so
-    only a genuine decode can hash-match.  Same fixture philosophy as
-    the PNG pixel-md5 pin."""
-    import pandas as pd
-
-    from ..operators.multimodal import _spread
-    from ..operators.wav import make_wav, wav_features
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_decode(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                wav = make_wav(f"{did}:wavv1", 64 + did % 64, 8000)
-                rate, ch, bits, ns, peak, zc, energy = wav_features(wav)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": rate,
-                        "n_channels": ch,
-                        "bits": bits,
-                        "n_samples": ns,
-                        "peak_abs": peak,
-                        "n_zero_cross": zc,
-                        "energy": energy,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_decode,
-        "doc_id long, sample_rate long, n_channels long, bits long, "
-        "n_samples long, peak_abs long, n_zero_cross long, energy long",
-    )
-
-
-@register_extra(
-    "video_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               2 + doc_id % 3 AS n,
-               16 + (doc_id % 4) * 8 AS w,
-               8 + (doc_id % 3) * 8 AS h
-        FROM documents
-    ),
-    g AS (
-        SELECT doc_id, sum((doc_id * 31 + i * 17) % 256) AS gray_sum
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS i)
-        GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(n AS BIGINT) AS n_frames,
-           CAST(40000 AS BIGINT) AS us_per_frame,
-           CAST(w AS BIGINT) AS width,
-           CAST(h AS BIGINT) AS height,
-           CAST(g.gray_sum AS BIGINT) AS gray_sum
-    FROM d JOIN g USING (doc_id)
-    """,
-)
-def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video container decode (operators/avi.py): every doc gets a REAL
-    motion-JPEG AVI — RIFF tree with header lists and '00dc' frame
-    chunks — whose flat-gray frames Spark runs through the full baseline
-    JPEG entropy decoder; ``gray_sum`` folds the first decoded pixel of
-    EVERY frame, an exact integer the oracle predicts from the
-    generative formula alone.  A header-only parse cannot produce it —
-    the video leg of the image/audio/video triad, held to the same
-    load-bearing-decode standard as audio_meta and the PNG pixel pin."""
-    import pandas as pd
-
-    from ..operators.avi import avi_features, make_fixture_avi
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_decode(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n, us, w, h, gs = avi_features(make_fixture_avi(did))
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": n,
-                        "us_per_frame": us,
-                        "width": w,
-                        "height": h,
-                        "gray_sum": gs,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_decode,
-        "doc_id long, n_frames long, us_per_frame long, width long, "
-        "height long, gray_sum long",
-    )
-
-
-@register_extra(
     "source_quality_report",
     r"""
     SELECT source,
@@ -1804,87 +1658,6 @@ def q_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         gen_and_decode,
         "doc_id long, width int, height int, channels int, "
         "px_byte_sum long, px_weighted_sum long",
-    )
-
-
-@register_extra(
-    "stereo_audio_meta",
-    r"""
-    WITH d AS (SELECT doc_id, 32 + doc_id % 48 AS n FROM documents),
-    s AS (
-        SELECT doc_id, n, i, ch,
-               ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':wavst:' || ch
-                                   || ':' || CAST(i AS VARCHAR)), 1, 4))::BIGINT
-               - 32768 AS v
-        FROM d,
-             LATERAL (SELECT unnest(range(0, n)) AS i),
-             LATERAL (SELECT unnest(['L', 'R']) AS ch)
-    ),
-    s2 AS (
-        SELECT doc_id, ch, i, v,
-               lag(v) OVER (PARTITION BY doc_id, ch ORDER BY i) AS pv
-        FROM s
-    ),
-    feat AS (
-        SELECT doc_id, ch,
-               max(abs(v)) AS peak,
-               sum(v * v) AS energy,
-               sum(CASE WHEN pv IS NOT NULL AND ((pv >= 0) <> (v >= 0))
-                        THEN 1 ELSE 0 END) AS zc
-        FROM s2 GROUP BY doc_id, ch
-    )
-    SELECT d.doc_id,
-           CAST(8000 AS BIGINT) AS sample_rate,
-           CAST(d.n AS BIGINT) AS n_frames,
-           CAST(l.peak AS BIGINT) AS peak_l,
-           CAST(l.zc AS BIGINT) AS zc_l,
-           CAST(l.energy AS BIGINT) AS energy_l,
-           CAST(r.peak AS BIGINT) AS peak_r,
-           CAST(r.zc AS BIGINT) AS zc_r,
-           CAST(r.energy AS BIGINT) AS energy_r
-    FROM d
-    JOIN feat l ON l.doc_id = d.doc_id AND l.ch = 'L'
-    JOIN feat r ON r.doc_id = d.doc_id AND r.ch = 'R'
-    """,
-)
-def q_stereo_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stereo audio decode (operators/wav.py round 6): interleaved-frame
-    deinterleave + per-channel exact-integer features, with the oracle
-    recomputing both channels from the channel-tagged generative formula
-    without seeing bytes — a decoder that mixes channels or mis-strides
-    the interleave breaks the per-channel energies."""
-    import pandas as pd
-
-    from ..operators.multimodal import _spread
-    from ..operators.wav import make_wav_stereo, wav_features_stereo
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_decode(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                rate, n, L, R = wav_features_stereo(
-                    make_wav_stereo(f"{did}:wavst", 32 + did % 48)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": rate,
-                        "n_frames": n,
-                        "peak_l": L[0], "zc_l": L[1], "energy_l": L[2],
-                        "peak_r": R[0], "zc_r": R[1], "energy_r": R[2],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_decode,
-        "doc_id long, sample_rate long, n_frames long, "
-        "peak_l long, zc_l long, energy_l long, "
-        "peak_r long, zc_r long, energy_r long",
     )
 
 
@@ -2784,400 +2557,6 @@ def q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "flac_audio_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               ([8000, 22050, 44100, 48000, 96000])[1 + doc_id % 5] AS rate,
-               1 + doc_id % 3 AS channels,
-               ([16, 24])[1 + doc_id % 2] AS bits,
-               10000 + (doc_id % 1000000) * 97 AS total_samples,
-               doc_id % 2 = 0 AS has_tags,
-               (doc_id % 4) * 32 AS padding
-        FROM documents
-    ),
-    m AS (
-        SELECT doc_id,
-               string_agg(printf('%02x', (doc_id * 17 + i * 13) % 256),
-                          '' ORDER BY i) AS md5_hex
-        FROM d, LATERAL (SELECT unnest(range(0, 16)) AS i)
-        GROUP BY doc_id
-    )
-    SELECT d.doc_id,
-           CAST(rate AS BIGINT) AS sample_rate,
-           CAST(channels AS BIGINT) AS channels,
-           CAST(bits AS BIGINT) AS bits_per_sample,
-           CAST(total_samples AS BIGINT) AS total_samples,
-           CAST(total_samples * 1000 // rate AS BIGINT) AS duration_ms,
-           m.md5_hex,
-           CAST(1 + CASE WHEN has_tags THEN 1 ELSE 0 END
-                  + CASE WHEN padding > 0 THEN 1 ELSE 0 END AS BIGINT)
-               AS n_blocks,
-           CAST(padding AS BIGINT) AS padding_bytes,
-           CASE WHEN has_tags
-                THEN 'TITLE=doc ' || doc_id || ';LANGUAGE=' ||
-                     coalesce(lang, '')
-                ELSE '' END AS tags_joined
-    FROM d JOIN m USING (doc_id)
-    JOIN documents USING (doc_id)
-    """,
-)
-def q_flac_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FLAC metadata-block walk (operators/flac.py, round 7): docs cycle
-    sample rates/channels/bit depths; even docs carry a Vorbis-comment
-    block (LITTLE-endian lengths inside the big-endian container — the
-    classic trap) and three-quarters carry padding.  The oracle
-    recomputes every STREAMINFO bit field, the 16-byte MD5 hex, the
-    block count, and the tag roundtrip; a bit-offset slip in the packed
-    270-bit STREAMINFO layout breaks nearly every column."""
-    import pandas as pd
-
-    from ..operators.flac import make_flac, parse_flac
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did, lang in zip(pdf["doc_id"], pdf["lang"]):
-                did = int(did)
-                rate = [8000, 22050, 44100, 48000, 96000][did % 5]
-                comments = (
-                    [("title", f"doc {did}"),
-                     ("language", lang if lang is not None else "")]
-                    if did % 2 == 0 else None
-                )
-                payload = make_flac(
-                    rate,
-                    1 + did % 3,
-                    [16, 24][did % 2],
-                    10000 + (did % 1_000_000) * 97,
-                    md5=bytes((did * 17 + i * 13) % 256 for i in range(16)),
-                    comments=comments,
-                    padding=(did % 4) * 32,
-                )
-                out = parse_flac(payload)
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "sample_rate": out["sample_rate"],
-                        "channels": out["channels"],
-                        "bits_per_sample": out["bits_per_sample"],
-                        "total_samples": out["total_samples"],
-                        "duration_ms": out["duration_ms"],
-                        "md5_hex": out["md5_hex"],
-                        "n_blocks": out["n_blocks"],
-                        "padding_bytes": out["padding_bytes"],
-                        "tags_joined": ";".join(
-                            f"{k}={v}" for k, v in out["tags"]
-                        ),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, sample_rate long, channels long, "
-        "bits_per_sample long, total_samples long, duration_ms long, "
-        "md5_hex string, n_blocks long, padding_bytes long, "
-        "tags_joined string",
-    )
-
-
-@register_extra(
-    "webp_image_meta",
-    r"""
-    WITH d AS (
-        SELECT doc_id,
-               (['vp8', 'vp8l', 'vp8x'])[1 + doc_id % 3] AS variant,
-               16 + (doc_id % 7) * 13 AS w,
-               16 + (doc_id % 5) * 11 AS h,
-               doc_id % 2 = 1 AS want_alpha
-        FROM documents
-    )
-    SELECT doc_id, variant,
-           CAST(CASE WHEN variant = 'vp8x' THEN w * 100 ELSE w END
-                AS BIGINT) AS width,
-           CAST(CASE WHEN variant = 'vp8x' THEN h * 50 ELSE h END
-                AS BIGINT) AS height,
-           want_alpha AND variant <> 'vp8' AS has_alpha,
-           FALSE AS is_animated,
-           CAST(CASE WHEN variant = 'vp8x'
-                     THEN 2 + CASE WHEN want_alpha THEN 1 ELSE 0 END
-                     ELSE 1 END AS BIGINT) AS n_chunks,
-           -- exact container arithmetic, pad byte included: the VP8
-           -- chunk is 8+34, VP8L 8+21+1 (odd payload pads), VP8X head
-           -- 8+10, ALPH 8+8
-           CAST(CASE WHEN variant = 'vp8' THEN 4 + 42
-                     WHEN variant = 'vp8l' THEN 4 + 30
-                     ELSE 4 + 18 + 42
-                          + CASE WHEN want_alpha THEN 16 ELSE 0 END
-                END AS BIGINT) AS riff_size
-    FROM d
-    """,
-)
-def q_webp_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebP RIFF walk (operators/webp.py, round 7): docs cycle the three
-    variants — lossy VP8 (14-bit dims after the start code), lossless
-    VP8L (little-endian bitstream dims), extended VP8X (24-bit canvas +
-    ALPH chunk).  The oracle pins the geometry per encoding AND the
-    exact riff_size including the odd-payload pad byte — a parser that
-    forgets the pad desyncs the chunk walk on every VP8L doc."""
-    import pandas as pd
-
-    from ..operators.multimodal import _spread
-    from ..operators.webp import make_webp, parse_webp
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                variant = ["vp8", "vp8l", "vp8x"][did % 3]
-                w = 16 + (did % 7) * 13
-                h = 16 + (did % 5) * 11
-                if variant == "vp8x":
-                    w, h = w * 100, h * 50
-                out = parse_webp(
-                    make_webp(variant, w, h, alpha=did % 2 == 1)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "variant": out["variant"],
-                        "width": out["width"],
-                        "height": out["height"],
-                        "has_alpha": out["has_alpha"],
-                        "is_animated": out["is_animated"],
-                        "n_chunks": out["n_chunks"],
-                        "riff_size": out["riff_size"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, variant string, width long, height long, "
-        "has_alpha boolean, is_animated boolean, n_chunks long, "
-        "riff_size long",
-    )
-
-
-_ADTS_RATES = (
-    "[96000,88200,64000,48000,44100,32000,"
-    "24000,22050,16000,12000,11025,8000]"
-)
-
-
-@register_extra(
-    "aac_audio_meta",
-    f"""
-    WITH d AS (
-        SELECT doc_id,
-               2 + doc_id % 5 AS n,
-               CAST(doc_id % 12 AS INT) AS sfi,
-               CAST(1 + doc_id % 7 AS BIGINT) AS channels,
-               CAST(doc_id % 4 AS INT) AS prof,
-               doc_id % 3 = 0 AS crc,
-               doc_id % 2 = 1 AS vbr
-        FROM documents
-    ),
-    f AS (
-        SELECT doc_id, n, sfi, channels, prof, crc, vbr,
-               sum((doc_id + k) % 4 + 1) AS blocks,
-               sum((CASE WHEN crc THEN 9 ELSE 7 END)
-                   + 20 + (doc_id * 7 + k * 13) % 101) AS bytes
-        FROM d, LATERAL (SELECT unnest(range(0, n)) AS k)
-        GROUP BY ALL
-    )
-    SELECT doc_id,
-           CAST(n AS BIGINT) AS n_frames,
-           CAST(({_ADTS_RATES})[1 + sfi] AS BIGINT) AS sample_rate,
-           channels,
-           (['Main','LC','SSR','LTP'])[1 + prof] AS profile,
-           CAST(blocks AS BIGINT) AS total_blocks,
-           CAST(bytes AS BIGINT) AS stream_bytes,
-           CAST(blocks * 1024 * 1000 // ({_ADTS_RATES})[1 + sfi]
-                AS BIGINT) AS duration_ms,
-           CAST(CASE WHEN vbr THEN 1 ELSE 0 END AS BIGINT) AS is_vbr,
-           CAST(CASE WHEN crc THEN 1 ELSE 0 END AS BIGINT) AS has_crc
-    FROM f
-    """,
-)
-def q_aac_audio_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ADTS/AAC frame walk (operators/adts.py): per doc a real ADTS
-    stream — frame count, raw-data-block counts, payload lengths, CRC
-    presence and VBR fullness all formula-varied — walked by the
-    self-framing header parser.  Duration uses the per-frame
-    raw-data-block count (rdb+1 blocks x 1024 samples), NOT frames x
-    1024; the oracle recomputes blocks and byte geometry from the same
-    formulas, so a bit-packing error or a frames-x-1024 shortcut
-    mismatches every row with rdb > 0."""
-    import pandas as pd
-
-    from ..operators.adts import make_adts, parse_adts
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 2 + did % 5
-                frames = [
-                    ((did + k) % 4, 20 + (did * 7 + k * 13) % 101)
-                    for k in range(n)
-                ]
-                m = parse_adts(
-                    make_adts(
-                        frames,
-                        profile=did % 4,
-                        sfi=did % 12,
-                        channels=1 + did % 7,
-                        crc=did % 3 == 0,
-                        vbr=did % 2 == 1,
-                    )
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "n_frames": m["n_frames"],
-                        "sample_rate": m["sample_rate"],
-                        "channels": m["channels"],
-                        "profile": m["profile"],
-                        "total_blocks": m["total_blocks"],
-                        "stream_bytes": m["stream_bytes"],
-                        "duration_ms": m["duration_ms"],
-                        "is_vbr": 1 if m["is_vbr"] else 0,
-                        "has_crc": 1 if m["has_crc"] else 0,
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, n_frames long, sample_rate long, channels long, "
-        "profile string, total_blocks long, stream_bytes long, "
-        "duration_ms long, is_vbr long, has_crc long",
-    )
-
-
-@register_extra(
-    "webm_video_meta",
-    """
-    WITH d AS (
-        SELECT doc_id,
-               (['V_VP9','V_VP8','V_AV1'])[1 + doc_id % 3] AS vcodec,
-               ([1000000, 500000, 2000000])[1 + doc_id % 3] AS scale,
-               CAST(16 * (4 + doc_id % 60) AS BIGINT) AS video_width,
-               CAST(16 * (3 + doc_id % 40) AS BIGINT) AS video_height,
-               doc_id % 2 = 0 AS has_audio,
-               CAST(1 + doc_id % 4 AS BIGINT) AS n_clusters
-        FROM documents
-    ),
-    blocks AS (
-        SELECT doc_id, sum(1 + (doc_id + k) % 3) AS n_blocks
-        FROM d, LATERAL (SELECT unnest(range(0, n_clusters)) AS k)
-        GROUP BY 1
-    )
-    SELECT d.doc_id,
-           'webm' AS doctype,
-           CAST(scale AS BIGINT) AS timestamp_scale,
-           CAST(CASE WHEN has_audio THEN 2 ELSE 1 END AS BIGINT)
-               AS n_tracks,
-           vcodec || CASE WHEN has_audio THEN ',A_OPUS' ELSE '' END
-               AS codec_list,
-           video_width, video_height,
-           CASE WHEN has_audio
-                THEN CAST(1 + d.doc_id % 6 AS BIGINT) END
-               AS audio_channels,
-           n_clusters,
-           CAST(b.n_blocks AS BIGINT) AS n_blocks,
-           CAST(((n_clusters - 1) * 1000 + 16 + d.doc_id % 997
-                 + ((1 + (d.doc_id + n_clusters - 1) % 3) - 1) * 33
-                 - 16) * scale // 1000000 AS BIGINT) AS duration_ms
-    FROM d JOIN blocks b USING (doc_id)
-    """,
-)
-def q_webm_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebM/Matroska EBML walk (operators/mkv.py): per doc a real EBML
-    stream — VINT-framed elements (IDs keep the length-marker bit,
-    sizes strip it), nested Segment/Info/Tracks/Cluster masters,
-    signed 16-bit SimpleBlock timestamps — walked by recursive descent
-    with unknown-element skip.  Duration is derived as an exact
-    integer from the last block tick x TimestampScale, never the
-    float Duration element; the oracle replays every formula, so a
-    VINT marker-bit mix-up or signed-timestamp bug mismatches rows."""
-    import pandas as pd
-
-    from ..operators.mkv import make_webm, parse_webm
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                scale = [1_000_000, 500_000, 2_000_000][did % 3]
-                tracks = [
-                    (
-                        1,
-                        ["V_VP9", "V_VP8", "V_AV1"][did % 3],
-                        16 * (4 + did % 60),
-                        16 * (3 + did % 40),
-                    )
-                ]
-                if did % 2 == 0:
-                    tracks.append((2, "A_OPUS", 1 + did % 6, 0))
-                nc = 1 + did % 4
-                clusters = [
-                    (
-                        k * 1000 + 16 + did % 997,
-                        [j * 33 - 16 for j in range(1 + (did + k) % 3)],
-                    )
-                    for k in range(nc)
-                ]
-                m = parse_webm(
-                    make_webm(tracks, clusters, timestamp_scale=scale)
-                )
-                rows.append(
-                    {
-                        "doc_id": did,
-                        "doctype": m["doctype"],
-                        "timestamp_scale": m["timestamp_scale"],
-                        "n_tracks": m["n_tracks"],
-                        "codec_list": ",".join(m["codecs"]),
-                        "video_width": m["video_width"],
-                        "video_height": m["video_height"],
-                        "audio_channels": m["audio_channels"],
-                        "n_clusters": m["n_clusters"],
-                        "n_blocks": m["n_blocks"],
-                        "duration_ms": m["duration_ms"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "doc_id long, doctype string, timestamp_scale long, "
-        "n_tracks long, codec_list string, video_width long, "
-        "video_height long, audio_channels long, n_clusters long, "
-        "n_blocks long, duration_ms long",
-    )
-
-
-@register_extra(
     "pb_log_scan",
     """
     WITH d AS (
@@ -3523,88 +2902,6 @@ def q_sitemap_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.col("z.mods").alias("lastmod"),
         F.col("z.prios").cast("long").alias("priority_deci"),
-    )
-
-
-@register_extra(
-    "msgpack_log_scan",
-    """
-    WITH d AS (
-        SELECT doc_id, 2 + doc_id % 4 AS g FROM documents
-    ),
-    f AS (
-        SELECT doc_id, g,
-               sum((doc_id * 31 + j * 7)
-                   * (CASE WHEN j % 2 = 0 THEN 1 ELSE -1 END))
-                   AS sum_ints,
-               sum(4 + (doc_id + j) % 3) AS n_strings,
-               sum((doc_id + 2 * j) % 9) AS blob_bytes,
-               sum(CASE WHEN j % 3 = 0 THEN 1 ELSE 0 END) AS n_true,
-               sum(CASE WHEN j % 3 <> 0 THEN 1 ELSE 0 END) AS n_nulls
-        FROM d, LATERAL (SELECT unnest(range(0, g)) AS j)
-        GROUP BY 1, 2
-    )
-    SELECT doc_id,
-           CAST(g AS BIGINT) AS n_records,
-           CAST(sum_ints AS BIGINT) AS sum_ints,
-           CAST(n_strings AS BIGINT) AS n_strings,
-           CAST(g AS BIGINT) AS n_nested,
-           CAST(blob_bytes AS BIGINT) AS blob_bytes,
-           CAST(n_nulls AS BIGINT) AS n_nulls,
-           CAST(n_true AS BIGINT) AS n_true
-    FROM f
-    """,
-)
-def q_msgpack_log_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MessagePack stream walk (operators/msgpackfmt.py — the Fluentd
-    wire format, third serialization after protobuf/Avro): per doc a
-    real stream of concatenated map objects — negative fixints (0xe0
-    is -32, not 224), mixed-width ints both signs, fixstr/str8 tags,
-    bin blobs, nested arrays, nil/true — decoded by the self-framing
-    first-byte walk.  The oracle replays the per-record formulas; a
-    sign-trap or width-boundary bug mismatches sum_ints on most rows."""
-    import pandas as pd
-
-    from ..operators.msgpackfmt import pack, parse_msgpack_stream
-    from ..operators.multimodal import _spread
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen_and_parse(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                recs = []
-                for j in range(2 + did % 4):
-                    recs.append(
-                        {
-                            "id": (did * 31 + j * 7)
-                            * (1 if j % 2 == 0 else -1),
-                            "tags": [
-                                f"t{(did + i) % 6}"
-                                for i in range((did + j) % 3)
-                            ],
-                            "blob": bytes(
-                                (did + i) % 251
-                                for i in range((did + 2 * j) % 9)
-                            ),
-                            "ok": j % 3 == 0 or None,
-                        }
-                    )
-                m = parse_msgpack_stream(
-                    b"".join(pack(r) for r in recs)
-                )
-                m["doc_id"] = did
-                rows.append(m)
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return _spread(docs, "doc_id").mapInPandas(
-        gen_and_parse,
-        "n_records long, sum_ints long, n_strings long, "
-        "n_nested long, blob_bytes long, n_nulls long, n_true long, "
-        "doc_id long",
     )
 
 

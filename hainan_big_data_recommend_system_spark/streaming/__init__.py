@@ -13,6 +13,7 @@ watermarked tumbling/sliding/session windows are the M6 extension surface
 the driver's ``events`` table anticipates (SURVEY.md §2.10 last row).
 
 - :mod:`.events` — event source, payload parse, channel dispatch, windows;
-- :mod:`.recommend` — startup state and the per-batch recommend step;
+- :mod:`.recommend` — the recommender: ``reco_assembly`` (M8§), the
+  startup state built from it and the per-batch recommend step;
 - :mod:`.sinks` — ``foreachBatch`` KV writers with hot fallback.
 """

@@ -4,8 +4,6 @@
   than its own length field) must raise ValueError, not loop forever
 - _zip64_extra: a truncated 0x0001 extra field must raise ValueError,
   not struct.error (the fleet-wide decoder quarantine contract)
-- parse_webm: deeply nested EBML containers must raise ValueError at
-  a fixed depth cap, not RecursionError
 """
 
 from __future__ import annotations
@@ -78,36 +76,3 @@ def test_zip64_extra_truncated_raises_valueerror():
 def test_zip64_extra_exact_fit_ok():
     extra = struct.pack("<HHQQ", 0x0001, 16, 111, 222)
     assert _zip64_extra(extra, 0xFFFFFFFF, 0xFFFFFFFF, 5) == (111, 222, 5)
-
-
-def _nested_ebml(depth: int) -> bytes:
-    """An EBML stream whose Segment contains ``depth`` nested Tracks
-    (a master element), each 0x1654AE6B with a 1-byte-vint size."""
-    inner = b""
-    for _ in range(depth):
-        body = inner
-        if len(body) < 0x7F:
-            size_vint = bytes([0x80 | len(body)])
-        else:  # 2-byte vint, covers sizes < 2**14
-            size_vint = bytes([0x40 | (len(body) >> 8), len(body) & 0xFF])
-        inner = b"\x16\x54\xae\x6b" + size_vint + body
-    # EBML header (magic, empty body) + Segment wrapping the nest
-    seg_size = len(inner)
-    assert seg_size < 2**14
-    seg = b"\x18\x53\x80\x67" + bytes([0x40 | (seg_size >> 8), seg_size & 0xFF]) + inner
-    hdr_body = b"\x42\x82\x84webm"  # DocType "webm"
-    return b"\x1a\x45\xdf\xa3" + bytes([0x80 | len(hdr_body)]) + hdr_body + seg
-
-
-def test_webm_deep_nesting_raises_valueerror_not_recursionerror():
-    from hainan_big_data_recommend_system_spark.operators.mkv import parse_webm
-
-    with pytest.raises(ValueError, match="nesting"):
-        parse_webm(_nested_ebml(60))
-
-
-def test_webm_moderate_nesting_ok():
-    from hainan_big_data_recommend_system_spark.operators.mkv import parse_webm
-
-    out = parse_webm(_nested_ebml(10))
-    assert out["n_clusters"] == 0

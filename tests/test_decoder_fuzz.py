@@ -15,10 +15,6 @@ from hainan_big_data_recommend_system_spark.operators.avrocf import (
     make_avro,
     parse_avro,
 )
-from hainan_big_data_recommend_system_spark.operators.avi import (
-    avi_features,
-    make_fixture_avi,
-)
 from hainan_big_data_recommend_system_spark.operators.gif import (
     make_gif,
     parse_gif,
@@ -33,26 +29,6 @@ from hainan_big_data_recommend_system_spark.operators.multimodal import (
     make_png,
     parse_bmp_header,
     parse_png,
-)
-from hainan_big_data_recommend_system_spark.operators.adts import (
-    make_adts,
-    parse_adts,
-)
-from hainan_big_data_recommend_system_spark.operators.mkv import (
-    make_webm,
-    parse_webm,
-)
-from hainan_big_data_recommend_system_spark.operators.flac import (
-    make_flac,
-    parse_flac,
-)
-from hainan_big_data_recommend_system_spark.operators.webp import (
-    make_webp,
-    parse_webp,
-)
-from hainan_big_data_recommend_system_spark.operators.msgpackfmt import (
-    pack,
-    parse_msgpack_stream,
 )
 from hainan_big_data_recommend_system_spark.operators.deltalog import (
     make_commit,
@@ -81,12 +57,6 @@ from hainan_big_data_recommend_system_spark.operators.pbwire import (
 from hainan_big_data_recommend_system_spark.operators.pdftext import (
     extract_pdf_text,
     make_pdf,
-)
-from hainan_big_data_recommend_system_spark.operators.wav import (
-    make_wav,
-    make_wav_stereo,
-    wav_features,
-    wav_features_stereo,
 )
 from hainan_big_data_recommend_system_spark.sources.archives import (
     make_tar,
@@ -117,9 +87,6 @@ def _real_snappy_page() -> bytes:
 
 
 CASES = {
-    "wav": (lambda: make_wav("s", 40), wav_features),
-    "wav_stereo": (lambda: make_wav_stereo("s", 40), wav_features_stereo),
-    "avi": (lambda: make_fixture_avi(3), avi_features),
     "jpeg": (lambda: make_jpeg(16, 8, b"\x40\x50\x60"), parse_jpeg),
     "jpeg420": (
         lambda: make_jpeg(19, 21, b"\x40\x50\x60", subsampling="420"),
@@ -137,20 +104,6 @@ CASES = {
     "gif": (lambda: make_gif(14, 9, b"\x11\x22\x33", interlaced=True),
             parse_gif),
     "bmp": (lambda: make_bmp(10, 7, b"\x01\x02\x03"), parse_bmp_header),
-    "adts": (lambda: make_adts([(0, 30), (3, 45)], profile=1, sfi=4,
-                               channels=2, crc=True), parse_adts),
-    "webm": (lambda: make_webm([(1, "V_VP9", 64, 48), (2, "A_OPUS", 2, 0)],
-                               [(100, [0, 33]), (1100, [-16, 0])]),
-             parse_webm),
-    "msgpack": (lambda: pack({"id": -7, "tags": ["a", "b"],
-                              "blob": b"xyz", "ok": True})
-                + pack({"id": 2**40, "tags": [], "ok": None}),
-                parse_msgpack_stream),
-    "flac": (lambda: make_flac(44100, 2, 16, 5000,
-                               comments=[("title", "t")], padding=16),
-             parse_flac),
-    "webp": (lambda: make_webp("vp8x", 500, 300, alpha=True), parse_webp),
-    "webp_l": (lambda: make_webp("vp8l", 33, 17), parse_webp),
     "pdf": (lambda: make_pdf(["line one text", "line two (x)"]),
             extract_pdf_text),
     "avro": (lambda: make_avro(

@@ -9,7 +9,7 @@ from hainan_big_data_recommend_system_spark.catalog import load_table
 from hainan_big_data_recommend_system_spark.operators.nn1d import (
     nearest_neighbors_1d,
 )
-from hainan_big_data_recommend_system_spark.qcatalog.reco import reco_assembly
+from hainan_big_data_recommend_system_spark.streaming.recommend import reco_assembly
 
 
 def _brute(rows, k):

@@ -3,8 +3,9 @@
 A module that no other package module and not ``__spark_entry__.py``
 imports is dead surface: nothing on the serving or query path can call
 it.  Such a module either goes, or is named in ``ALLOWED`` with the
-reason it stays.  The check parses source with ``ast`` and needs no
-Spark session.
+reason it stays.  The online serving path, ``streaming.recommend``, must
+also stay small: its import closure holds no query-catalog module.  The
+checks parse source with ``ast`` and need no Spark session.
 """
 
 from __future__ import annotations
@@ -15,9 +16,11 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "hainan_big_data_recommend_system_spark"
 
+#: The most package modules importing the serving path may load.
+SERVING_MAX_MODULES = 15
+
 #: Modules kept on purpose although nothing in the package imports them.
 ALLOWED = {
-    "streaming.recommend": "online serving entry point; perfbench drives it",
     "streaming.sinks": "online serving KV writers; perfbench drives them",
     "sources.jdbc": "the reference's MySQL reads (S1-S4), kept on purpose",
     "functions.segment": "the reference's Chinese word segmentation (M1)",
@@ -97,3 +100,31 @@ def test_allow_list_is_current():
     assert not missing, f"ALLOWED names modules that no longer exist: {missing}"
     reached = sorted(set(ALLOWED) - _orphans())
     assert not reached, f"ALLOWED modules are now imported; drop them: {reached}"
+
+
+def _closure(root: str) -> set[str]:
+    """``root`` and every package module its import runs, transitively:
+    imports inside functions count, and so does the ``__init__`` of each
+    enclosing package."""
+    mods = _modules()
+    known = set(mods)
+    seen, todo = set(), [root]
+    while todo:
+        name = todo.pop()
+        if name in seen:
+            continue
+        seen.add(name)
+        parts = name.split(".")
+        todo += [".".join(parts[:i]) for i in range(len(parts))]
+        todo += _imported(name, mods[name], known)
+    return seen
+
+
+def test_serving_closure_is_small_and_outside_the_catalog():
+    closure = _closure("streaming.recommend")
+    catalog = sorted(m for m in closure if m.split(".")[0] == "qcatalog")
+    assert not catalog, f"streaming.recommend reaches query-catalog modules: {catalog}"
+    assert len(closure) <= SERVING_MAX_MODULES, (
+        f"streaming.recommend reaches {len(closure)} package modules "
+        f"(limit {SERVING_MAX_MODULES}): {sorted(closure)}"
+    )
