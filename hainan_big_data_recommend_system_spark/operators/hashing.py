@@ -9,11 +9,10 @@ expectation instead of stacking.  No fit, no vocabulary, no second
 pass — the transform is a pure scan-local expression, which is why
 it's the default vectorizer in every large-scale ad/CTR stack.
 
-Engine discipline: the hash is PINNED (md5 prefix → integer, the same
-cross-engine idiom as operators/negatives.py) rather than Spark's
-Murmur3 `hash()`, so the features are bit-identical in any engine and
-the oracle can replay them; versioned salts ("fh-v1"/"fs-v1") keep
-future hash changes explicit.
+Engine discipline: the hash is PINNED (md5 prefix → integer) rather
+than Spark's Murmur3 `hash()`, so the features are bit-identical in any
+engine and the oracle can replay them; versioned salts ("fh-v1"/"fs-v1")
+keep future hash changes explicit.
 
 Output is the sparse form ``(doc_id, bucket, weight)`` with exact
 integer weights and hash-cancelled zeros dropped — the natural shape

@@ -8,7 +8,7 @@ parquet tables.  Submodules register themselves on import:
 - :mod:`.profile_logs` — user profiles, robust log parse, date pruning, sampling
 - :mod:`.ml`           — vectorize / cluster / similarity (rows-only + invariants)
 - :mod:`.reco`         — registers ``streaming.recommend.reco_assembly``
-  with its oracle (§3), plus the ALS, basket and training-data queries
+  with its oracle (§3), plus the two ALS queries
 - :mod:`.dedup`        — exact/MinHash/SimHash/ngram/embedding dedup (extension)
 - :mod:`.textstats`    — lang-id, quality, token counts, fingerprints (extension)
 - :mod:`.streamq`      — windowed event aggregations (batch-oracled; streaming

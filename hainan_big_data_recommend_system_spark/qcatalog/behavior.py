@@ -1,13 +1,13 @@
-"""Behavioral-analytics queries — funnel, cohort retention, SCD2.
+"""Behavioral-analytics queries — funnel, event paths, RFM, CDC.
 
 The reference system consumes per-user event streams one user at a time
 (guessLike.py:61-108); these queries are the corpus-wide analytics a
 team operating that system would run over the same logs: did users move
-down the view->click->purchase funnel, do signup cohorts come back, and
-how did a dimension attribute evolve over time (type-2 history).  All
-three are pure DataFrame compositions (keyed aggregates + keyed
-windows) — no Python, no unbounded windows — and each is hash-oracled
-against an independent DuckDB formulation.
+down the view->click->purchase funnel, which event sequences recur, and
+how customers segment by recency/frequency/monetary value.  They are
+pure DataFrame compositions (keyed aggregates + keyed windows) — no
+Python, no unbounded windows — and each is hash-oracled against an
+independent DuckDB formulation.
 """
 
 from __future__ import annotations
@@ -15,9 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..catalog import load_table
-from ..operators.cohort import cohort_retention
 from ..operators.funnel import funnel_steps, funnel_summary
-from ..operators.scd import build_scd2
 from . import register, register_extra
 
 _FUNNEL_STEPS = ["view", "click", "purchase"]
@@ -107,202 +105,6 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         within_seconds=_FUNNEL_WITHIN,
     )
     return funnel_summary(per_user, len(_FUNNEL_STEPS))
-
-
-@register_extra(
-    "cohort_retention_weekly",
-    """
-    WITH anchors AS (
-        SELECT user_id AS user,
-               min((epoch_us(ts) // 86400000000) // 7) AS cohort_period
-        FROM events WHERE event_type = 'signup' GROUP BY 1
-    ),
-    active AS (
-        SELECT DISTINCT user_id AS user,
-               (epoch_us(ts) // 86400000000) // 7 AS p
-        FROM events
-    ),
-    cells AS (
-        SELECT cohort_period, p - cohort_period AS period_offset,
-               CAST(count(DISTINCT a.user) AS BIGINT) AS n_active
-        FROM active a JOIN anchors c ON a.user = c.user
-        WHERE p >= cohort_period
-        GROUP BY 1, 2
-    ),
-    sizes AS (
-        SELECT cohort_period,
-               CAST(count(DISTINCT user) AS BIGINT) AS cohort_size
-        FROM anchors GROUP BY 1
-    )
-    SELECT cells.cohort_period, period_offset, n_active, cohort_size,
-           n_active * 10000 // cohort_size AS retention_bp
-    FROM cells JOIN sizes USING (cohort_period)
-    """,
-)
-def q_cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly signup-cohort retention matrix (operators/cohort.py).
-    Cohort bucketing is exact integer epoch-day arithmetic, so the
-    matrix is bit-identical cross-engine; a drifting week convention
-    (date_trunc) or double-division rounding would shift boundary
-    users between cohorts and break the hash."""
-    ev = load_table(spark, sf_dir, "events")
-    return cohort_retention(
-        ev, "user_id", "ts", period_days=7,
-        anchor_filter=F.col("event_type") == "signup",
-    )
-
-
-@register_extra(
-    "scd2_order_priority",
-    """
-    WITH w AS (
-        SELECT o_custkey AS key, o_orderdate AS ts, o_orderkey,
-               o_orderpriority,
-               lag(o_orderpriority) OVER
-                   (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS prev_attr,
-               lag(o_orderdate) OVER
-                   (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS prev_ts
-        FROM orders
-    ),
-    heads AS (
-        SELECT * FROM w
-        WHERE prev_ts IS NULL OR o_orderpriority IS DISTINCT FROM prev_attr
-    )
-    SELECT key, ts AS effective_from,
-           lead(ts) OVER
-               (PARTITION BY key ORDER BY ts, o_orderkey) AS effective_to,
-           (lead(ts) OVER
-               (PARTITION BY key ORDER BY ts, o_orderkey)) IS NULL
-               AS is_current,
-           CAST(row_number() OVER
-               (PARTITION BY key ORDER BY ts, o_orderkey) AS BIGINT)
-               AS version,
-           o_orderpriority
-    FROM heads
-    """,
-)
-def q_scd2_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-2 dimension build (operators/scd.py): each customer's
-    order-priority history collapsed to change points with
-    [effective_from, effective_to) validity and an is_current flag —
-    the Kimball SCD2 load.  The oracle is an independent
-    gaps-and-islands formulation; an off-by-one in the island heads or
-    a non-null-safe change test diverges on every collapsed run."""
-    orders = load_table(spark, sf_dir, "orders")
-    return build_scd2(
-        orders, "o_custkey", "o_orderdate", ["o_orderpriority"],
-        tiebreak_col="o_orderkey",
-    )
-
-
-_ATTRIB_CREDITS_SQL = r"""
-    WITH conv AS (
-        SELECT user_id AS user, ts AS conv_ts, event_id AS conv_id
-        FROM events WHERE event_type = 'purchase'
-    ),
-    tch AS (
-        SELECT user_id AS user, ts AS touch_ts,
-               'ch' || (CAST(json_extract_string(props, '$.k') AS INT) % 4)
-                   AS channel
-        FROM events
-        WHERE event_type = 'click' AND json_valid(props)
-          AND json_extract_string(props, '$.k') IS NOT NULL
-    ),
-    touched AS (
-        SELECT conv_id, channel, touch_ts
-        FROM conv JOIN tch USING (user)
-        WHERE touch_ts < conv_ts
-          AND touch_ts >= conv_ts - INTERVAL 3 DAY
-    ),
-    ranked AS (
-        SELECT conv_id, channel,
-               row_number() OVER
-                   (PARTITION BY conv_id
-                    ORDER BY touch_ts, channel) AS rk,
-               count(*) OVER (PARTITION BY conv_id) AS n
-        FROM touched
-    )
-    SELECT conv_id, channel,
-           CAST(rk AS BIGINT) AS touch_rank,
-           CAST(n AS BIGINT) AS n_touches,
-           CAST(CASE WHEN n = 1 THEN 10000
-                     WHEN n = 2 THEN
-                         CASE WHEN rk = 1 THEN 6000 ELSE 4000 END
-                     WHEN rk = 1 THEN 4000
-                     WHEN rk = n THEN 4000
-                     ELSE 2000 // (n - 2)
-                          + CASE WHEN rk - 1 <= 2000 % (n - 2)
-                                 THEN 1 ELSE 0 END
-                END AS BIGINT) AS credit_bp
-    FROM ranked
-    UNION ALL
-    SELECT conv_id, '(none)', CAST(1 AS BIGINT), CAST(0 AS BIGINT),
-           CAST(10000 AS BIGINT)
-    FROM conv WHERE conv_id NOT IN (SELECT conv_id FROM touched)
-"""
-
-
-def _attribution_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.attribution import position_attribution
-
-    ev = load_table(spark, sf_dir, "events")
-    conv = ev.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("user"),
-        F.col("ts"),
-        F.col("event_id").alias("conv_id"),
-    )
-    tch = ev.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("user"),
-        F.col("ts"),
-        F.concat(
-            F.lit("ch"),
-            (F.get_json_object("props", "$.k").cast("int") % 4).cast(
-                "string"
-            ),
-        ).alias("channel"),
-    ).where(F.col("channel").isNotNull())
-    return position_attribution(
-        conv, tch, user_col="user", ts_col="ts", conv_id_col="conv_id",
-        channel_col="channel", lookback_seconds=3 * 86400,
-    )
-
-
-@register_extra("attribution_credits", _ATTRIB_CREDITS_SQL)
-def q_attribution_credits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """U-shaped multi-touch attribution (operators/attribution.py):
-    every purchase splits exactly 10_000 bp of credit across the clicks
-    in its 3-day lookback — 40/20/40 with the 2000-bp middle share
-    divided by exact integer div/mod (earliest middles get the
-    remainder), windowless purchases credited to '(none)'.  The oracle
-    replays rank, window, and the allocation arithmetic; a float split
-    or an off-by-one in the remainder distribution breaks the hash on
-    every 3+-touch conversion."""
-    return _attribution_credits(spark, sf_dir)
-
-
-@register_extra(
-    "attribution_report",
-    f"""
-    WITH credits AS ({_ATTRIB_CREDITS_SQL})
-    SELECT channel,
-           CAST(sum(CASE WHEN n_touches > 0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_touches,
-           CAST(count(DISTINCT conv_id) AS BIGINT) AS n_conversions,
-           CAST(sum(credit_bp) AS BIGINT) AS credit_bp_total
-    FROM credits GROUP BY channel
-    """,
-)
-def q_attribution_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Channel-level attribution dashboard: credited touches, reached
-    conversions, total exact-integer credit per channel.  Because
-    per-conversion credit always sums to 10_000 bp, total credit ==
-    10_000 x conversions is an accounting identity the aggregation
-    cannot silently violate."""
-    from ..operators.attribution import channel_report
-
-    return channel_report(_attribution_credits(spark, sf_dir))
 
 
 @register_extra(
@@ -803,99 +605,4 @@ def q_customer_360(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("n_anomalous_events"),
         )
-    )
-
-
-@register_extra(
-    "pit_priority_at_ship",
-    """
-    WITH w AS (
-        SELECT o_custkey AS key, o_orderdate AS ts, o_orderkey,
-               o_orderpriority,
-               lag(o_orderpriority) OVER
-                   (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS prev_attr,
-               lag(o_orderdate) OVER
-                   (PARTITION BY o_custkey
-                    ORDER BY o_orderdate, o_orderkey) AS prev_ts
-        FROM orders
-    ),
-    dim AS (
-        SELECT key, ts AS effective_from, o_orderpriority,
-               row_number() OVER (PARTITION BY key
-                                  ORDER BY ts, o_orderkey) AS version
-        FROM w
-        WHERE prev_ts IS NULL
-           OR o_orderpriority IS DISTINCT FROM prev_attr
-    ),
-    f AS (
-        -- (l_orderkey, l_linenumber) is NOT unique in the synthetic
-        -- lineitem: a synthetic fact id keeps duplicate facts distinct
-        SELECT o.o_custkey AS key, l.l_shipdate AS ts,
-               CAST(round(l.l_quantity) AS BIGINT) AS qty,
-               row_number() OVER () AS fid
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-    ),
-    ranked AS (
-        SELECT f.fid, f.qty, d.o_orderpriority,
-               row_number() OVER (
-                   PARTITION BY f.fid
-                   ORDER BY d.effective_from DESC, d.version DESC
-               ) AS rn
-        FROM f LEFT JOIN dim d
-          ON d.key = f.key AND d.effective_from <= f.ts
-    )
-    SELECT coalesce(o_orderpriority, '(none)') AS priority_at_ship,
-           CAST(count(*) AS BIGINT) AS n_items,
-           CAST(sum(qty) AS BIGINT) AS sum_qty
-    FROM ranked WHERE rn = 1
-    GROUP BY 1
-    """,
-)
-def q_pit_priority_at_ship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time consumption of the SCD2 dimension — the query the
-    Kimball build exists FOR: every shipped lineitem looks up the
-    customer's order-priority version valid AT SHIP TIME via the as-of
-    join (operators/asof.py — one shuffle, latest-version struct-max,
-    never an interval explode), aggregated per resolved priority.  The
-    oracle recomputes the dimension AND the lookup with groupwise
-    argmax over change points — the classic PIT formulation."""
-    from ..operators.asof import asof_join
-
-    orders = load_table(spark, sf_dir, "orders")
-    dim = build_scd2(
-        orders, "o_custkey", "o_orderdate", ["o_orderpriority"],
-        tiebreak_col="o_orderkey",
-    ).select(
-        F.col("key"),
-        F.col("effective_from"),
-        "version",
-        "o_orderpriority",
-    )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber",
-        F.col("l_shipdate").alias("ts"),
-        F.round(F.col("l_quantity")).cast("long").alias("qty"),
-    )
-    okey = orders.select("o_orderkey", F.col("o_custkey").alias("key"))
-    facts = li.join(okey, li["l_orderkey"] == okey["o_orderkey"]).select(
-        "key", "ts", "qty"
-    )
-    matched = asof_join(
-        facts, dim, on="key", left_ts="ts",
-        # version in the payload: same-date versions tie on ts and the
-        # struct max must pick the HIGHEST version (last writer), not
-        # the lexicographically-largest priority string
-        right_ts="effective_from",
-        right_payload=["version", "o_orderpriority"],
-    )
-    # a fact shipped before its customer's first version has no valid
-    # dimension row — surfaced as '(none)', never silently dropped
-    return matched.groupBy(
-        F.coalesce(F.col("o_orderpriority_r"), F.lit("(none)")).alias(
-            "priority_at_ship"
-        )
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_items"),
-        F.sum("qty").cast("long").alias("sum_qty"),
     )

@@ -656,7 +656,6 @@ def q_image_neardup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.multimodal import _spread, decode_any, make_png
     from ..operators.phash import _to_i64, dhash64, phash_neardup_pairs
-    from ..session import CHECKPOINT_LEVEL
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
@@ -666,8 +665,10 @@ def q_image_neardup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Arrow boundary twice — and, unchecked, the 2-kernel chain executed
     # TWICE because the band self-join consumes the hash frame on both
     # sides.  The kernel calls the same make_png/decode_any the media
-    # operators use (identical drop-on-undecodable semantics); the tiny
-    # (media_id, dhash) index is checkpointed once for the self-join.
+    # operators use (identical drop-on-undecodable semantics).  The
+    # repartition puts the tiny (media_id, dhash) index behind one
+    # exchange that both sides of the band self-join reuse, so the kernel
+    # runs once and building this plan launches no job.
     def png_dhash(it):
         for pdf in it:
             rows = []
@@ -687,9 +688,11 @@ def q_image_neardup_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows)
 
-    hashes = _spread(docs).mapInPandas(
-        png_dhash, "media_id long, dhash long"
-    ).localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
+    hashes = (
+        _spread(docs)
+        .mapInPandas(png_dhash, "media_id long, dhash long")
+        .repartition("media_id")
+    )
     return phash_neardup_pairs(hashes, "dhash", "media_id", bands=8, max_hamming=10).select(
         F.col("image_a"), F.col("image_b"), F.col("hamming")
     )

@@ -765,8 +765,7 @@ def q_ann_topk_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick vectorization (operators/hashing.py, Weinberger et
     al. 2009): vocabulary-FREE signed bag-of-words — bucket and ±1 sign
-    from pinned md5 hashes (cross-engine idiom of
-    operators/negatives.py), one scan-local expression pass + one
+    from pinned md5 hashes, one scan-local expression pass + one
     grouped sum, zero-cancelled buckets dropped.  The no-fit
     counterpart to the CountVectorizer pipeline (ml/vectorize.py): at
     100 TB there is no vocabulary pass to schedule and no driver-side

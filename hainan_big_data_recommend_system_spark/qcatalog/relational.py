@@ -378,48 +378,6 @@ def q_title_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("p_partkey", "p_name", "title_norm")
 
 
-
-
-# ---------------------------------------------------------------------------
-# J1 under skew — salted fact⋈dim join (SURVEY.md §4 "salting for skew").
-# EXTRA since round 4: the salted plan's row-equivalence to the plain join
-# is pinned by tests/test_skew.py + this oracle locally; J1/A7 driver
-# coverage rides `hot_items`.
-# Salting is purely physical: the oracle is the PLAIN join, which is exactly
-# the point — a hot key spread over `salt` tasks must not change one row.
-# ---------------------------------------------------------------------------
-
-@register_extra(
-    "salted_hot_parts",
-    """
-    SELECT l.l_partkey, p.p_name,
-           count(*) AS cnt,
-           CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-    GROUP BY l.l_partkey, p.p_name
-    ORDER BY cnt DESC, l.l_partkey
-    LIMIT 50
-    """,
-)
-def q_salted_hot_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.skew import salted_join
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
-    part = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_name"
-    )
-    joined = salted_join(li, part, "l_partkey", salt=8, how="inner")
-    return (
-        joined.groupBy("l_partkey", "p_name")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("l_quantity").cast("bigint")).cast("bigint").alias("sum_qty"),
-        )
-        .orderBy(F.desc("cnt"), F.asc("l_partkey"))
-        .limit(50)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Rollup aggregation (SURVEY.md §2.4 "grouping sets / cube / rollup — not
 # present [in the reference]; free in Spark SQL") — exercised so the family
@@ -746,58 +704,6 @@ def q_sql_segment_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SEGMENT_SUMMARY_SQL)
 
 
-@register_extra(
-    "revenue_trend_slopes",
-    """
-    WITH v AS (
-        SELECT o_orderpriority AS priority,
-               CAST(year(o_orderdate) AS BIGINT) AS yr,
-               CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01'
-                    AS BIGINT) AS x,
-               CAST(round(o_totalprice * 100) AS BIGINT) AS y
-        FROM orders
-    ),
-    s AS (
-        SELECT priority, yr, count(*) AS n,
-               sum(x) AS sx, sum(y) AS sy,
-               sum(x * y) AS sxy, sum(x * x) AS sxx
-        FROM v GROUP BY 1, 2
-    )
-    SELECT priority, yr, CAST(n AS BIGINT) AS n,
-           CASE WHEN n * sxx - sx * sx > 0 THEN
-               CAST((CASE WHEN n * sxy - sx * sy < 0
-                          THEN -1 ELSE 1 END)
-                    * (abs(n * sxy - sx * sy) * 1000000
-                       // (n * sxx - sx * sx)) AS BIGINT)
-           END AS slope_scaled
-    FROM s
-    """,
-)
-def q_revenue_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact OLS revenue trend per (priority, year)
-    (operators/trend.py): slope of order cents on epoch-day from five
-    decimal(38,0) sufficient statistics in ONE map-side-combined
-    aggregate — no windows, no Python, no doubles.  The sign is
-    handled explicitly (sign x abs-floor) because Spark `div`
-    truncates toward zero while SQL `//` floors; on |num| the two
-    agree, so rising AND falling slopes hash identically against the
-    oracle's hugeint replay."""
-    from ..operators.trend import ols_slopes
-
-    orders = load_table(spark, sf_dir, "orders")
-    v = orders.select(
-        F.col("o_orderpriority").alias("priority"),
-        F.year("o_orderdate").cast("long").alias("yr"),
-        F.datediff(
-            F.to_date("o_orderdate"), F.lit("1970-01-01").cast("date")
-        )
-        .cast("long")
-        .alias("x"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("y"),
-    )
-    return ols_slopes(v, ["priority", "yr"], "x", "y")
-
-
 @register(
     "data_quality_report",
     """
@@ -1002,79 +908,6 @@ def q_shipping_latency_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "orders_version_diff",
-    """
-    WITH old AS (
-        SELECT o_orderkey AS k, o_orderpriority AS pri,
-               o_orderstatus AS st
-        FROM orders
-    ),
-    new AS (
-        SELECT k,
-               CASE WHEN k % 7 = 0 THEN '0-RUSHED' ELSE pri END AS pri,
-               CASE WHEN k % 5 = 0 THEN 'X' ELSE st END AS st
-        FROM old WHERE k % 13 <> 0
-        UNION ALL
-        SELECT k + 10000000, pri, st FROM old WHERE k % 11 = 0
-    ),
-    j AS (
-        SELECT coalesce(o.k, n.k) AS k,
-               o.k IS NOT NULL AS in_old, n.k IS NOT NULL AS in_new,
-               NOT (o.pri IS NOT DISTINCT FROM n.pri) AS dp,
-               NOT (o.st IS NOT DISTINCT FROM n.st) AS ds
-        FROM old o FULL OUTER JOIN new n ON o.k = n.k
-    )
-    SELECT k AS o_orderkey,
-           CASE WHEN NOT in_old THEN 'added'
-                WHEN NOT in_new THEN 'removed'
-                WHEN dp OR ds THEN 'changed'
-                ELSE 'unchanged' END AS change_type,
-           CASE WHEN in_old AND in_new AND (dp OR ds) THEN
-               concat_ws(',',
-                   CASE WHEN dp THEN 'pri' END,
-                   CASE WHEN ds THEN 'st' END)
-           ELSE '' END AS changed_cols
-    FROM j
-    """,
-)
-def q_orders_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyed table reconciliation (operators/diff.py): OLD = orders;
-    NEW = a deterministic mutation (every 13th key removed, every 7th
-    repriced, every 5th restatused, every 11th re-added under an
-    offset key) — the diff classifies every key and names the changed
-    columns, null-safe on both the presence test and the value
-    comparison.  One full-outer join; the oracle rebuilds the mutation
-    and the classification independently."""
-    from ..operators.diff import table_diff
-
-    orders = load_table(spark, sf_dir, "orders")
-    old = orders.select(
-        F.col("o_orderkey").alias("o_orderkey"),
-        F.col("o_orderpriority").alias("pri"),
-        F.col("o_orderstatus").alias("st"),
-    )
-    k = F.col("o_orderkey")
-    new = (
-        old.where(k % 13 != 0)
-        .select(
-            "o_orderkey",
-            F.when(k % 7 == 0, F.lit("0-RUSHED"))
-            .otherwise(F.col("pri"))
-            .alias("pri"),
-            F.when(k % 5 == 0, F.lit("X"))
-            .otherwise(F.col("st"))
-            .alias("st"),
-        )
-        .unionByName(
-            old.where(k % 11 == 0).select(
-                (k + 10_000_000).alias("o_orderkey"), "pri", "st"
-            )
-        )
-    )
-    return table_diff(old, new, ["o_orderkey"], ["pri", "st"])
-
-
-@register_extra(
     "rolling_revenue_7d",
     """
     WITH daily AS (
@@ -1210,154 +1043,6 @@ def q_order_day_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("len").cast("long").alias("longest_streak_days"),
         F.col("start_day").cast("long").alias("streak_start_day"),
     )
-
-
-def _geo_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic geodetic coordinates for the customer table:
-    nation-centered clusters (25 centers spread across the globe) with
-    a per-customer sub-degree offset — integer micro-degrees so every
-    downstream step is exact."""
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    return c.select(
-        "c_custkey",
-        (
-            F.lit(-60_000_000)
-            + F.col("c_nationkey") * 4_800_000
-            + (F.col("c_custkey") * 7919) % 1_000_000
-        ).cast("long").alias("lat_micro"),
-        (
-            F.lit(-170_000_000)
-            + F.col("c_nationkey") * 13_000_000
-            + (F.col("c_custkey") * 104729) % 1_500_000
-        ).cast("long").alias("lon_micro"),
-    )
-
-
-_GEO_PTS_SQL = """
-        SELECT c_custkey,
-               CAST(-60000000 + c_nationkey * 4800000
-                    + (c_custkey * 7919) % 1000000 AS BIGINT) AS lat_micro,
-               CAST(-170000000 + c_nationkey * 13000000
-                    + (c_custkey * 104729) % 1500000 AS BIGINT) AS lon_micro
-        FROM customer
-"""
-
-
-def _geohash_cells_oracle() -> str:
-    from ..operators.geo import geohash_sql
-
-    return f"""
-    WITH pts AS ({_GEO_PTS_SQL})
-    SELECT c_custkey, lat_micro, lon_micro,
-           {geohash_sql("lat_micro", "lon_micro", 3)} AS gh3,
-           {geohash_sql("lat_micro", "lon_micro", 6)} AS gh6
-    FROM pts
-    """
-
-
-@register_extra("geohash_cells", _geohash_cells_oracle())
-def q_geohash_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geohash bucketing (operators/geo.py): the standard spatial
-    data-skipping key, computed as a Morton interleave over integer
-    micro-degrees with base32 encoding — scan-local expressions in both
-    engines, and the Spark Column and oracle SQL are generated from ONE
-    bit walk so the spellings cannot drift.  Verified against the
-    classic interval-bisection geohash algorithm in tests/test_geo.py
-    (618 coordinate fixtures + known landmark hashes)."""
-    from ..operators.geo import geohash_col
-
-    pts = _geo_points(spark, sf_dir)
-    lat, lon = F.col("lat_micro"), F.col("lon_micro")
-    return pts.select(
-        "c_custkey",
-        "lat_micro",
-        "lon_micro",
-        geohash_col(lat, lon, 3).alias("gh3"),
-        geohash_col(lat, lon, 6).alias("gh6"),
-    )
-
-
-def _geo_knn_oracle() -> str:
-    from ..operators.geo import geohash_sql
-
-    return f"""
-    WITH pts AS ({_GEO_PTS_SQL}),
-    cells AS (
-        SELECT *, {geohash_sql("lat_micro", "lon_micro", 3)} AS gh3
-        FROM pts
-    ),
-    pairs AS (
-        SELECT a.c_custkey,
-               b.c_custkey AS neighbor,
-               (a.lat_micro - b.lat_micro) * (a.lat_micro - b.lat_micro)
-               + (a.lon_micro - b.lon_micro) * (a.lon_micro - b.lon_micro)
-                   AS dist2
-        FROM cells a JOIN cells b
-          ON a.gh3 = b.gh3 AND a.c_custkey <> b.c_custkey
-    ),
-    r AS (
-        SELECT *, row_number() OVER (PARTITION BY c_custkey
-                                     ORDER BY dist2, neighbor) AS rn
-        FROM pairs
-    )
-    SELECT c_custkey, neighbor, CAST(dist2 AS BIGINT) AS dist2,
-           CAST(rn AS BIGINT) AS rnk
-    FROM r WHERE rn <= 3
-    """
-
-
-def geo_knn(spark: SparkSession, sf_dir: str, chars: int = 3) -> DataFrame:
-    """The kNN join with the cell-resolution knob exposed: at 10x the
-    customer density the gh3 cells hold 10x the points and the pair
-    join grows 100x — the fix at scale is FINER cells (chars=4 splits
-    every cell 32 ways), the same data-independent-geometry knob as
-    the LSH `bits` / SemDeDup `nlist` sweeps in scripts/scale_probe.py."""
-    from ..operators.geo import geohash_col
-
-    pts = _geo_points(spark, sf_dir)
-    cells = pts.withColumn(
-        "gh", geohash_col(F.col("lat_micro"), F.col("lon_micro"), chars)
-    )
-    a = cells.alias("a")
-    b = cells.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.gh") == F.col("b.gh"))
-        & (F.col("a.c_custkey") != F.col("b.c_custkey")),
-    ).select(
-        F.col("a.c_custkey").alias("c_custkey"),
-        F.col("b.c_custkey").alias("neighbor"),
-        (
-            (F.col("a.lat_micro") - F.col("b.lat_micro"))
-            * (F.col("a.lat_micro") - F.col("b.lat_micro"))
-            + (F.col("a.lon_micro") - F.col("b.lon_micro"))
-            * (F.col("a.lon_micro") - F.col("b.lon_micro"))
-        ).cast("long").alias("dist2"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("c_custkey").orderBy("dist2", "neighbor")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("c_custkey", "neighbor", "dist2",
-                F.col("rnk").cast("long").alias("rnk"))
-    )
-
-
-@register_extra("geo_knn_pairs", _geo_knn_oracle())
-def q_geo_knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cell-bucketed spatial kNN: top-3 nearest same-gh3-cell neighbors
-    per customer by EXACT integer squared micro-degree distance
-    (deterministic (dist2, neighbor) ranking).  The geohash prefix
-    turns the all-pairs spatial join into cell-local work — the spatial
-    twin of the LSH bucket joins; the single-cell contract (a neighbor
-    just across a boundary is out of scope, remedied at scale by
-    adjacent-cell probes) is pinned by the oracle computing precisely
-    the same bucketing."""
-    return geo_knn(spark, sf_dir, chars=3)
 
 
 @register_extra(
@@ -1609,44 +1294,6 @@ def q_grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register_extra(
-    "hierarchy_paths",
-    """
-    WITH RECURSIVE n AS (
-        SELECT p_partkey AS node,
-               CASE WHEN p_partkey < 10 THEN NULL
-                    ELSE p_partkey // 7 END AS parent
-        FROM part
-    ),
-    walk(node, root, depth) AS (
-        SELECT node, node, 0 FROM n WHERE parent IS NULL
-        UNION ALL
-        SELECT n.node, w.root, w.depth + 1
-        FROM n JOIN walk w ON n.parent = w.node
-    )
-    SELECT node, root, CAST(depth AS BIGINT) AS depth
-    FROM walk
-    """,
-)
-def q_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Category-tree resolution (operators/hierarchy.py): every part
-    sits in a synthetic 7-ary forest (parts 0..9 are roots, parent =
-    key div 7); pointer DOUBLING resolves root and depth for all nodes
-    in 6 self-joins regardless of tree size — log(depth) rounds where
-    the oracle's recursive CTE walks depth levels.  Two opposite
-    traversal strategies (top-down recursion vs ancestor squaring)
-    that must agree node-for-node."""
-    from ..operators.hierarchy import resolve_roots
-
-    part = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"),
-        F.when(F.col("p_partkey") < 10, F.lit(None).cast("long"))
-        .otherwise(F.expr("p_partkey div 7"))
-        .alias("parent"),
-    )
-    return resolve_roots(part, "node", "parent", rounds=6)
-
-
-@register_extra(
     "yoy_weekly_revenue",
     """
     WITH w AS (
@@ -1700,8 +1347,7 @@ def q_yoy_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         prior.cast("long").alias("rev_prior_year"),
         # sign x abs-floor: Spark `div` truncates toward zero while
         # DuckDB `//` floors — on negative YoY deltas they differ by 1,
-        # so divide magnitudes and apply the sign separately (the
-        # operators/trend.py truncation discipline)
+        # so divide magnitudes and apply the sign separately
         F.when(prior.isNull(), F.lit(0))
         .when(
             F.col("rev_cents") < prior,
@@ -1718,93 +1364,6 @@ def q_yoy_weekly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("yoy_bp"),
-    )
-
-
-@register_extra(
-    "hierarchy_revenue_share",
-    """
-    WITH RECURSIVE n AS (
-        SELECT p_partkey AS node,
-               CASE WHEN p_partkey < 10 THEN NULL
-                    ELSE p_partkey // 7 END AS parent
-        FROM part
-    ),
-    walk(node, root) AS (
-        SELECT node, node FROM n WHERE parent IS NULL
-        UNION ALL
-        SELECT n.node, w.root FROM n JOIN walk w ON n.parent = w.node
-    ),
-    rev AS (
-        SELECT l_partkey AS node,
-               sum(CAST(round(l_extendedprice * 100) AS BIGINT))
-                   AS rev_cents
-        FROM lineitem GROUP BY 1
-    ),
-    per AS (
-        SELECT w.node, w.root, coalesce(r.rev_cents, 0) AS rev_cents
-        FROM walk w LEFT JOIN rev r ON r.node = w.node
-    ),
-    roots AS (
-        SELECT root, sum(rev_cents) AS root_rev FROM per GROUP BY 1
-    )
-    SELECT per.node, per.root,
-           CAST(per.rev_cents AS BIGINT) AS rev_cents,
-           CAST(roots.root_rev AS BIGINT) AS root_rev_cents,
-           CAST(CASE WHEN roots.root_rev = 0 THEN 0
-                     ELSE per.rev_cents * 10000 // roots.root_rev
-                END AS BIGINT) AS share_bp
-    FROM per JOIN roots USING (root)
-    """,
-)
-def q_hierarchy_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Percent-of-parent rollup — the hierarchy's consumption query:
-    each part's revenue as basis points of its ROOT category's total,
-    composing pointer doubling (operators/hierarchy.py) with the
-    lineitem aggregate; the per-root totals ride a broadcast back onto
-    the node rows (root count is bounded by the forest shape, never by
-    rows).  All quantities non-negative, so `div` and `//` agree."""
-    from ..operators.hierarchy import resolve_roots
-
-    part = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("node"),
-        F.when(F.col("p_partkey") < 10, F.lit(None).cast("long"))
-        .otherwise(F.expr("p_partkey div 7"))
-        .alias("parent"),
-    )
-    paths = resolve_roots(part, "node", "parent", rounds=6).select(
-        "node", "root"
-    )
-    rev = (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy(F.col("l_partkey").alias("node"))
-        .agg(
-            F.sum(
-                F.round(F.col("l_extendedprice") * 100).cast("long")
-            ).alias("rev_cents")
-        )
-    )
-    per = paths.join(rev, "node", "left").select(
-        "node", "root",
-        F.coalesce(F.col("rev_cents"), F.lit(0)).alias("rev_cents"),
-    )
-    roots = per.groupBy("root").agg(
-        F.sum("rev_cents").alias("root_rev_cents")
-    )
-    return (
-        per.join(F.broadcast(roots), "root")
-        .select(
-            "node",
-            "root",
-            F.col("rev_cents").cast("long").alias("rev_cents"),
-            F.col("root_rev_cents").cast("long").alias("root_rev_cents"),
-            F.when(F.col("root_rev_cents") == 0, F.lit(0))
-            .otherwise(
-                F.expr("rev_cents * 10000 div root_rev_cents")
-            )
-            .cast("long")
-            .alias("share_bp"),
-        )
     )
 
 

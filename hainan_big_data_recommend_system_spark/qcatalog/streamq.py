@@ -516,240 +516,6 @@ def q_sessionized_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic HLL (round 6): the sketch family's first fully-ORACLED
-# member — registers and estimate are exact integers (operators/hll.py),
-# so DuckDB recomputes the identical sketch from the same rows.  b=10
-# (1024 registers); per-priority o_orderkey cardinality stays above the
-# 2.5m raw-regime floor at every oracle scale the driver runs.
-# ---------------------------------------------------------------------------
-
-#: mirrored from operators/hll.py: hll_numerator(10) =
-#: alpha_micros(1024) * 1024^2 * 2^51 — the estimate's constant numerator
-_HLL_B = 10
-_HLL_NUMER = "1701329333966688515960864768"
-
-_HLL_SQL = f"""
-    WITH h AS (
-        SELECT o_orderpriority AS priority,
-               ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT
-                   AS hv
-        FROM orders
-    ),
-    r AS (
-        SELECT priority,
-               hv // {1 << (60 - _HLL_B)} AS bucket,
-               hv % {1 << (60 - _HLL_B)} AS rest
-        FROM h
-    ),
-    regs AS (
-        SELECT priority, bucket,
-               max(CASE WHEN rest = 0 THEN {60 - _HLL_B + 1}
-                        ELSE {60 - _HLL_B} - length(bin(rest)) + 1 END) AS m_j
-        FROM r GROUP BY priority, bucket
-    ),
-    agg AS (
-        SELECT priority,
-               count(*) AS observed,
-               sum(CAST(1 AS HUGEINT) << ({60 - _HLL_B + 1} - m_j)) AS s
-        FROM regs GROUP BY priority
-    ),
-    est AS (
-        SELECT priority,
-               CAST(observed AS BIGINT) AS observed_buckets,
-               CAST({1 << _HLL_B} - observed AS BIGINT) AS n_empty_buckets,
-               CAST(CAST('{_HLL_NUMER}' AS HUGEINT)
-                    // (CAST(1000000 AS HUGEINT)
-                        * (s + (CAST({1 << _HLL_B} AS HUGEINT) - observed)
-                             * (CAST(1 AS HUGEINT) << {60 - _HLL_B + 1})))
-                    AS BIGINT) AS est_distinct
-        FROM agg
-    ),
-    exact AS (
-        SELECT o_orderpriority AS priority,
-               count(DISTINCT o_orderkey) AS exact_distinct
-        FROM orders GROUP BY o_orderpriority
-    )
-    SELECT e.priority, observed_buckets, n_empty_buckets, est_distinct,
-           CAST(exact_distinct AS BIGINT) AS exact_distinct,
-           CAST(abs(est_distinct - exact_distinct) * 10000
-                // exact_distinct AS BIGINT) AS err_bp
-    FROM est e JOIN exact x ON x.priority = e.priority
-"""
-
-
-@register_extra("hll_distinct_orders", _HLL_SQL)
-def q_hll_distinct_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic HyperLogLog distinct estimate per order priority
-    (operators/hll.py): md5-derived 60-bit hash, 1024 registers via one
-    groupBy-max (the mergeable state a 100 TB rollup re-aggregates with
-    another max), and an exact-integer harmonic mean — no floats
-    anywhere, so the DuckDB oracle rebuilds the SAME registers and the
-    SAME estimate from the same rows; emitted next to the exact count
-    with an integer error in basis points.  Upgrades the sketch family
-    from rows-only (`sketch_event_stats` — engine-internal HLL++
-    registers) to hash-checked."""
-    from ..operators.hll import hll_distinct
-
-    orders = load_table(spark, sf_dir, "orders")
-    est = hll_distinct(
-        orders.select(
-            F.col("o_orderpriority").alias("priority"), "o_orderkey"
-        ),
-        ["priority"],
-        "o_orderkey",
-        b=_HLL_B,
-    )
-    exact = orders.groupBy(
-        F.col("o_orderpriority").alias("priority")
-    ).agg(F.countDistinct("o_orderkey").cast("bigint").alias("exact_distinct"))
-    return est.join(exact, "priority").select(
-        "priority",
-        "observed_buckets",
-        "n_empty_buckets",
-        "est_distinct",
-        "exact_distinct",
-        F.expr(
-            "cast(abs(est_distinct - exact_distinct) * 10000L"
-            " div exact_distinct as bigint)"
-        ).alias("err_bp"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# HLL small-range correction (round 7 — the r6 verdict's #5): the raw
-# estimator is badly biased below ~2.5m distincts; the classic fallback is
-# linear counting m·ln(m/V).  The ln enters as a PINNED integer lookup
-# (operators/hll.linear_counting_estimates — computed once driver-side),
-# so the regime-switched estimate stays bit-exact cross-engine.  b=6
-# (m=64) makes one fixture span BOTH regimes: clicks remapped to 11
-# distinct user buckets (linear), every other event type ~2000 distinct
-# ids (raw).
-# ---------------------------------------------------------------------------
-
-_HLL_SR_B = 6
-#: hll_numerator(6) — mirrored constant, same style as _HLL_NUMER
-_HLL_SR_NUMER = "104680255103913656422760448"
-
-
-def _hll_sr_sql() -> str:
-    from ..operators.hll import linear_counting_values_sql
-
-    m = 1 << _HLL_SR_B
-    rest = 60 - _HLL_SR_B
-    return f"""
-    WITH v AS (
-        SELECT event_type,
-               CASE WHEN event_type = 'click'
-                    THEN 'u' || CAST(user_id % 11 AS VARCHAR)
-                    ELSE CAST(event_id AS VARCHAR) END AS val
-        FROM events
-    ),
-    h AS (
-        SELECT event_type,
-               ('0x' || substr(md5(val), 1, 15))::BIGINT AS hv
-        FROM v
-    ),
-    r AS (
-        SELECT event_type,
-               hv // {1 << rest} AS bucket,
-               hv % {1 << rest} AS rest
-        FROM h
-    ),
-    regs AS (
-        SELECT event_type, bucket,
-               max(CASE WHEN rest = 0 THEN {rest + 1}
-                        ELSE {rest} - length(bin(rest)) + 1 END) AS m_j
-        FROM r GROUP BY event_type, bucket
-    ),
-    agg AS (
-        SELECT event_type,
-               count(*) AS observed,
-               sum(CAST(1 AS HUGEINT) << ({rest + 1} - m_j)) AS s
-        FROM regs GROUP BY event_type
-    ),
-    est AS (
-        SELECT event_type,
-               CAST(observed AS BIGINT) AS observed_buckets,
-               CAST({m} - observed AS BIGINT) AS n_empty_buckets,
-               CAST(CAST('{_HLL_SR_NUMER}' AS HUGEINT)
-                    // (CAST(1000000 AS HUGEINT)
-                        * (s + (CAST({m} AS HUGEINT) - observed)
-                             * (CAST(1 AS HUGEINT) << {rest + 1})))
-                    AS BIGINT) AS est_distinct
-        FROM agg
-    ),
-    lc(v_empty, lc_est) AS (VALUES {linear_counting_values_sql(_HLL_SR_B)}),
-    corr AS (
-        SELECT e.*,
-               CASE WHEN n_empty_buckets > 0 AND est_distinct * 2 <= {5 * m}
-                    THEN lc_est ELSE est_distinct END AS est_corrected,
-               CASE WHEN n_empty_buckets > 0 AND est_distinct * 2 <= {5 * m}
-                    THEN 'linear' ELSE 'raw' END AS regime
-        FROM est e LEFT JOIN lc ON lc.v_empty = e.n_empty_buckets
-    ),
-    exact AS (
-        SELECT event_type, count(DISTINCT val) AS exact_distinct
-        FROM v GROUP BY event_type
-    )
-    SELECT c.event_type, observed_buckets, n_empty_buckets, est_distinct,
-           est_corrected, regime,
-           CAST(exact_distinct AS BIGINT) AS exact_distinct,
-           CAST(abs(est_distinct - exact_distinct) * 10000
-                // exact_distinct AS BIGINT) AS err_raw_bp,
-           CAST(abs(est_corrected - exact_distinct) * 10000
-                // exact_distinct AS BIGINT) AS err_corr_bp
-    FROM corr c JOIN exact x ON x.event_type = c.event_type
-    """
-
-
-@register_extra("hll_small_range_distinct", _hll_sr_sql())
-def q_hll_small_range_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL with the linear-counting small-range fallback
-    (operators/hll.py, round 7): one fixture spans both regimes — click
-    events collapse to 11 distinct user buckets (raw HLL overshoots
-    badly at m=64; linear counting lands within bucket-granularity),
-    every other event type keeps ~2000 distinct ids (raw regime, the
-    correction is a no-op by the exact integer switch 2·est <= 5·m).
-    The pinned m·ln(m/V) lookup keeps both engines evaluating zero
-    transcendentals at query time."""
-    from ..operators.hll import hll_distinct
-
-    ev = load_table(spark, sf_dir, "events")
-    vals = ev.select(
-        "event_type",
-        F.when(
-            F.col("event_type") == "click",
-            F.concat(F.lit("u"), (F.col("user_id") % 11).cast("string")),
-        )
-        .otherwise(F.col("event_id").cast("string"))
-        .alias("val"),
-    )
-    est = hll_distinct(
-        vals, ["event_type"], "val", b=_HLL_SR_B, small_range_correction=True
-    )
-    exact = vals.groupBy("event_type").agg(
-        F.countDistinct("val").cast("bigint").alias("exact_distinct")
-    )
-    return est.join(exact, "event_type").select(
-        "event_type",
-        "observed_buckets",
-        "n_empty_buckets",
-        "est_distinct",
-        "est_corrected",
-        "regime",
-        "exact_distinct",
-        F.expr(
-            "cast(abs(est_distinct - exact_distinct) * 10000L"
-            " div exact_distinct as bigint)"
-        ).alias("err_raw_bp"),
-        F.expr(
-            "cast(abs(est_corrected - exact_distinct) * 10000L"
-            " div exact_distinct as bigint)"
-        ).alias("err_corr_bp"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # Exponentially-decayed popularity (round 6): the hot-list freshness
 # upgrade — the reference's hot ranking (A7, `log_analyze.py` hot_books)
 # counts all-time occurrences; production hot lists decay by recency.
@@ -1372,130 +1138,11 @@ def q_debounced_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# HLL large-range correction (round 8 — the r7 verdict's #8): the FFGM
-# 32-bit-hash saturation regime.  Real rows cannot reach E > 2^32/30 at
-# test scale, so the fixture synthesizes the REGISTER STATE itself from
-# the documents table (deterministic formulas both engines replay) and
-# estimates through hll_estimate_from_registers — which is also the
-# warehouse entry point at 100 TB, where estimates come from rolled-up
-# register tables, not raw rows.
-# ---------------------------------------------------------------------------
-
-_HLL_LR_B = 8
-_HLL_LR_HASH = 32
-
-
-def _hll_lr_sql() -> str:
-    from ..operators.hll import (
-        hll_numerator,
-        large_range_values_sql,
-        linear_counting_values_sql,
-    )
-
-    b, h = _HLL_LR_B, _HLL_LR_HASH
-    m = 1 << b
-    r = h - b + 1
-    numer = hll_numerator(b, h)
-    two32 = 1 << 32
-    seg = two32 >> 8
-    return f"""
-    WITH g AS (
-        SELECT CAST(doc_id % 4 AS BIGINT) AS grp,
-               count(*) % 7 AS salt
-        FROM documents GROUP BY 1
-    ),
-    regs AS (
-        SELECT grp,
-               CASE grp WHEN 0 THEN 2 WHEN 1 THEN 12
-                        WHEN 2 THEN 20 ELSE 24 END
-                   + (j + salt) % 2 AS m_j
-        FROM g, LATERAL (SELECT unnest(range(0, {m})) AS j)
-    ),
-    agg AS (
-        SELECT grp, count(*) AS observed,
-               sum(CAST(1 AS HUGEINT) << ({r} - m_j)) AS s
-        FROM regs GROUP BY grp
-    ),
-    est AS (
-        SELECT grp,
-               CAST(observed AS BIGINT) AS observed_buckets,
-               CAST({m} - observed AS BIGINT) AS n_empty_buckets,
-               CAST(CAST('{numer}' AS HUGEINT)
-                    // (CAST(1000000 AS HUGEINT)
-                        * (s + (CAST({m} AS HUGEINT) - observed)
-                             * (CAST(1 AS HUGEINT) << {r})))
-                    AS BIGINT) AS est_distinct
-        FROM agg
-    ),
-    lc(v_empty, lc_est) AS (VALUES {linear_counting_values_sql(b)}),
-    lr(k, c0, c1) AS (VALUES {large_range_values_sql()}),
-    staged AS (
-        SELECT e.*,
-               least(est_distinct // {seg}, 255) AS kk,
-               n_empty_buckets > 0 AND est_distinct * 2 <= {5 * m}
-                   AS is_linear,
-               est_distinct * 30 > {two32} AS is_large
-        FROM est e
-    )
-    SELECT grp, observed_buckets, n_empty_buckets, est_distinct,
-           CAST(CASE WHEN is_linear THEN lc_est
-                     WHEN is_large THEN
-                         c0 + (c1 - c0)
-                            * (least(est_distinct, {two32 - 1}) - kk * {seg})
-                            // {seg}
-                     ELSE est_distinct END AS BIGINT) AS est_corrected,
-           CASE WHEN is_linear THEN 'linear'
-                WHEN is_large THEN 'large'
-                ELSE 'raw' END AS regime
-    FROM staged
-    LEFT JOIN lc ON lc.v_empty = n_empty_buckets
-    LEFT JOIN lr ON lr.k = kk
-    """
-
-
-@register_extra("hll_large_range_distinct", _hll_lr_sql())
-def q_hll_large_range_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL with the FFGM large-range saturation correction
-    (operators/hll.py round 8): four synthetic register states derived
-    from the documents table span all three regimes — shallow registers
-    stay 'raw', deep all-full registers push the raw estimate past
-    2^32/30 where ``-2^32·ln(1 - E/2^32)`` de-biases it.  The ln curve
-    enters as 256 pinned knots with exact integer piecewise-linear
-    interpolation (zero transcendentals at query time in either
-    engine); estimation runs from the MERGEABLE register state — the
-    100 TB entry point, where sketches roll up across days before any
-    estimate is taken."""
-    from ..operators.hll import hll_estimate_from_registers
-
-    docs = load_table(spark, sf_dir, "documents")
-    g = docs.groupBy((F.col("doc_id") % 4).alias("grp")).agg(
-        (F.count(F.lit(1)) % 7).alias("salt")
-    )
-    base = (
-        F.when(F.col("grp") == 0, 2)
-        .when(F.col("grp") == 1, 12)
-        .when(F.col("grp") == 2, 20)
-        .otherwise(24)
-    )
-    regs = g.select(
-        "grp", "salt", F.explode(F.sequence(F.lit(0), F.lit((1 << _HLL_LR_B) - 1))).alias("j")
-    ).select(
-        "grp",
-        F.col("j").alias("bucket"),
-        (base + (F.col("j") + F.col("salt")) % 2).cast("int").alias("m_j"),
-    )
-    return hll_estimate_from_registers(
-        regs, ["grp"], b=_HLL_LR_B, hash_bits=_HLL_LR_HASH,
-        small_range_correction=True, large_range_correction=True,
-    )
-
-
-# ---------------------------------------------------------------------------
 # exact count-min sketch (round 8): the hash-checked twin of
-# cms_heavy_hitters, same discipline as hll_distinct vs HLL++ — pinned
-# md5 row hashes make the WHOLE sketch (tables, estimates, overcount)
-# reproducible in any engine, and CMS updates are order-free integer
-# sums, so the result hash-matches under any partitioning.
+# cms_heavy_hitters — pinned md5 row hashes make the WHOLE sketch
+# (tables, estimates, overcount) reproducible in any engine, and CMS
+# updates are order-free integer sums, so the result hash-matches under
+# any partitioning.
 # ---------------------------------------------------------------------------
 
 _CMS_D, _CMS_W = 4, 256

@@ -94,13 +94,11 @@ QUERIES = [
     "cdc_chunk_stats",
     "jsonl_corpus_scan",
     "span_corruption_pairs",
-    "next_item_examples",
     "fim_transform",
     # round-6 additions: progressive decode, oracled sketches, URL dedup,
     # decayed popularity (pipeline-ledger slope is covered by the
     # corpus_pipeline 10x result in PLANS)
     "jpeg_progressive_meta",
-    "hll_distinct_orders",
     "url_canonical_dedup",
     "decayed_hot_events",
     "gif_meta",
@@ -118,24 +116,18 @@ QUERIES = [
     # round-7 session-2 additions: refined ANN, HLL regime switch, VBR
     # walk, and the ingest-fed pipeline composition
     "ann_topk_ivfpq_refined",
-    "hll_small_range_distinct",
     "corpus_pipeline_ledger",
     "warc_revisit_scan",
     "warc_http_decoding_scan",
     "unicode_normalize_scan",
-    "negative_samples",
     "site_boilerplate_scrub",
     "document_chunks",
     # round-7 session-3: behavioral analytics + real-world media formats
     "funnel_user_paths",
-    "cohort_retention_weekly",
-    "scd2_order_priority",
     # replica-texture caveat applies (near-dup output grows ~x100 on
     # duplicated text, like fuzzy_title_pairs): judge vs that baseline
     "ssjoin_prefix_pairs",
-    "assoc_rules_lift",
     "anomalous_events",
-    "revenue_trend_slopes",
     "pb_log_scan",
     "avro_container_scan",
     "event_transition_matrix",
@@ -144,7 +136,6 @@ QUERIES = [
     "event_value_percentiles_exact",
     "orders_cdc_apply",
     "readability_scores",
-    "copurchase_triangles",
     "hashed_features",
     "data_quality_report",
     "frequent_event_paths",
@@ -153,19 +144,15 @@ QUERIES = [
     "sitemap_scan",
     "compressed_text_scan",
     "shipping_latency_stats",
-    "orders_version_diff",
     "uuid7_time_scan",
     "rolling_revenue_7d",
     "order_day_streaks",
     "access_log_scan",
-    # round-7 session-5: the lake-format surface + bounded BFS
+    # round-7 session-5: the lake-format surface
     "parquet_footer_scan",
     "parquet_file_stats",
     "delta_snapshot_scan",
     "delta_log_replay",
-    "copurchase_bfs_hops",
-    "geohash_cells",
-    "geo_knn_pairs",
     "rowgroup_skipping_audit",
     "compaction_plan",
     "delta_time_travel",
@@ -178,10 +165,7 @@ QUERIES = [
     "capped_running_balance",
     "business_days_to_ship",
     "grouping_sets_revenue",
-    "hierarchy_paths",
     "yoy_weekly_revenue",
-    "pit_priority_at_ship",
-    "hierarchy_revenue_share",
     "array_ops_pipeline",
     "debounced_events",
     "unpivot_yearly_revenue",

@@ -1,24 +1,15 @@
-"""Unit semantics for funnel / cohort / SCD2 (operators/funnel.py,
-cohort.py, scd.py) — the hash oracles in qcatalog/behavior.py pin the
-composed results; these tests pin the EDGE semantics on hand-built
-rows where the expected answer is derivable by eye."""
+"""Unit semantics for the funnel (operators/funnel.py) — the hash
+oracles in qcatalog/behavior.py pin the composed results; these tests
+pin the EDGE semantics on hand-built rows where the expected answer is
+derivable by eye."""
 
 from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import functions as F
-
-from hainan_big_data_recommend_system_spark.operators.cohort import (
-    cohort_retention,
-)
 from hainan_big_data_recommend_system_spark.operators.funnel import (
     funnel_steps,
     funnel_summary,
-)
-from hainan_big_data_recommend_system_spark.operators.scd import (
-    build_scd2,
-    snapshot_at,
 )
 
 
@@ -116,104 +107,3 @@ class TestFunnel:
         assert rows[1]["conv_from_prev_bp"] == 10_000
         assert rows[2]["conv_from_first_bp"] == 6_666  # 2*10000 div 3
         assert rows[3]["conv_from_prev_bp"] == 5_000
-
-
-class TestCohort:
-    def test_anchor_filter_and_offsets(self, spark):
-        # u1 signs up week 0 (day 1-7 => epoch-week buckets of Jan 2024
-        # are absolute; use relative assertion instead), active again
-        # 2 periods later; u2 never signs up -> excluded entirely
-        ev = _events(
-            spark,
-            [
-                (1, 1, 0, "signup"), (1, 1, 5, "view"),
-                (1, 15, 0, "view"),
-                (2, 1, 0, "view"), (2, 15, 0, "view"),
-            ],
-        )
-        out = cohort_retention(
-            ev, "user_id", "ts", period_days=7,
-            anchor_filter=F.col("event_type") == "signup",
-        ).collect()
-        offsets = sorted((r["period_offset"], r["n_active"]) for r in out)
-        assert offsets == [(0, 1), (2, 1)]
-        assert all(r["cohort_size"] == 1 for r in out)
-        assert all(r["retention_bp"] == 10_000 for r in out)
-
-    def test_pre_anchor_activity_dropped(self, spark):
-        # activity BEFORE the anchor period must not produce negative
-        # offsets
-        ev = _events(
-            spark,
-            [(1, 1, 0, "view"), (1, 15, 0, "signup"), (1, 16, 0, "view")],
-        )
-        out = cohort_retention(
-            ev, "user_id", "ts", period_days=7,
-            anchor_filter=F.col("event_type") == "signup",
-        ).collect()
-        assert all(r["period_offset"] >= 0 for r in out)
-
-
-class TestSCD2:
-    def _obs(self, spark, rows):
-        return spark.createDataFrame(
-            [(k, _ts(d), i, a) for k, d, i, a in rows],
-            "ck long, ts timestamp, oid long, prio string",
-        )
-
-    def test_collapse_and_validity(self, spark):
-        obs = self._obs(
-            spark,
-            [
-                (1, 1, 10, "HIGH"), (1, 2, 11, "HIGH"),  # collapsed
-                (1, 3, 12, "LOW"),
-                (1, 4, 13, "HIGH"),  # HIGH again = NEW version
-                (2, 1, 20, "MED"),
-            ],
-        )
-        out = build_scd2(obs, "ck", "ts", ["prio"], tiebreak_col="oid")
-        rows = sorted(
-            out.collect(), key=lambda r: (r["key"], r["version"])
-        )
-        assert [(r["key"], r["version"], r["prio"]) for r in rows] == [
-            (1, 1, "HIGH"), (1, 2, "LOW"), (1, 3, "HIGH"), (2, 1, "MED"),
-        ]
-        v1 = rows[0]
-        assert v1["effective_from"] == _ts(1)
-        assert v1["effective_to"] == _ts(3)  # exclusive end at change
-        assert not v1["is_current"]
-        assert rows[2]["is_current"] and rows[2]["effective_to"] is None
-        assert rows[3]["is_current"]
-
-    def test_null_attribute_is_a_change(self, spark):
-        obs = self._obs(
-            spark, [(1, 1, 10, "HIGH"), (1, 2, 11, None), (1, 3, 12, None)]
-        )
-        out = build_scd2(obs, "ck", "ts", ["prio"], tiebreak_col="oid")
-        assert out.count() == 2  # HIGH -> NULL is a change; NULL==NULL not
-
-    def test_snapshot_at(self, spark):
-        obs = self._obs(
-            spark, [(1, 1, 10, "HIGH"), (1, 5, 11, "LOW"), (2, 2, 20, "MED")]
-        )
-        dim = build_scd2(obs, "ck", "ts", ["prio"], tiebreak_col="oid")
-        snap = {
-            r["key"]: r["prio"]
-            for r in snapshot_at(dim, _ts(3)).collect()
-        }
-        assert snap == {1: "HIGH", 2: "MED"}
-        # at the exact change instant the NEW version is in force
-        snap5 = {
-            r["key"]: r["prio"]
-            for r in snapshot_at(dim, _ts(5)).collect()
-        }
-        assert snap5[1] == "LOW"
-
-    def test_no_python_in_plan(self, spark):
-        obs = self._obs(spark, [(1, 1, 10, "HIGH")])
-        plan = build_scd2(
-            obs, "ck", "ts", ["prio"], tiebreak_col="oid"
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "Python" not in plan
-        # both windows partition on the entity key — never unbounded
-        assert "WindowExec: No Partition Defined" not in plan

@@ -114,3 +114,24 @@ def test_catalog_query_shape(spark, sf_dir):
     for r in rows:
         assert r["image_a"] < r["image_b"]
         assert 0 <= r["hamming"] <= 10
+
+
+def test_building_catalog_query_runs_no_job(spark, sf_dir, count_jobs):
+    """Building the plan runs no job: the only one is ``load_table``'s
+    parquet schema read, counted on its own.  Both sides of the band
+    self-join read the one run of the PNG kernel through a reused
+    exchange."""
+    from hainan_big_data_recommend_system_spark.catalog import load_table
+    from hainan_big_data_recommend_system_spark.qcatalog import REGISTRY
+
+    _, schema_jobs = count_jobs(
+        lambda: load_table(spark, sf_dir, "documents")
+    )
+    df, jobs = count_jobs(
+        lambda: REGISTRY["image_neardup_phash"].fn(spark, sf_dir)
+    )
+    assert jobs == schema_jobs
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInPandas") == 1, final

@@ -662,35 +662,6 @@ def test_span_corruption_reconstructs_original(spark):
     assert saw_span  # the fixture must actually exercise masking
 
 
-def test_next_item_examples_windows(spark):
-    """Histories are the trailing-5 items in (ts, event_id) order; the
-    first interaction mints no example; malformed props drop out before
-    the window so they never pollute a history."""
-    from datetime import datetime
-
-    from hainan_big_data_recommend_system_spark.operators.reco_examples import (
-        next_item_examples,
-    )
-
-    t0 = datetime(2024, 1, 1)
-    rows = []
-    for i, item in enumerate([10, 20, 30, 40, 50, 60, 70]):
-        rows.append(Row(event_id=i, ts=t0.replace(minute=i), user_id=1,
-                        event_type="click", value=1.0,
-                        props='{"k": %d}' % item))
-    rows.append(Row(event_id=99, ts=t0.replace(minute=3, second=30), user_id=1,
-                    event_type="click", value=1.0, props="not json"))
-    rows.append(Row(event_id=100, ts=t0, user_id=2, event_type="error",
-                    value=1.0, props='{"k": 5}'))
-    ev = spark.createDataFrame(rows)
-    got = {r["event_id"]: r for r in next_item_examples(ev).collect()}
-    assert 0 not in got                      # no history -> no example
-    assert 99 not in got and 100 not in got  # malformed / filtered type
-    assert got[1]["history"] == "10" and got[1]["label"] == 20
-    assert got[6]["history"] == "20,30,40,50,60" and got[6]["label"] == 70
-    assert got[6]["n_history"] == 5
-
-
 def test_fim_reconstructs_original(spark):
     """P + M + S reassembles the original token stream for every fim row;
     ar rows pass through untouched; the fim rate is ~1/2."""

@@ -62,75 +62,6 @@ def test_cms_heavy_hitters_bounds(spark):
     assert counts == sorted(counts, reverse=True)
 
 
-def test_hll_deterministic_accuracy_and_merge(spark):
-    """Round-6 deterministic HLL (operators/hll.py): estimates land
-    within ~4 sigma of exact (sigma ~= 1.04/sqrt(1024) ~= 3.3%), and the
-    registers are MERGEABLE state — sketching two halves separately and
-    max-merging the registers must reproduce the whole-corpus sketch
-    exactly (the property that lets a 100 TB rollup re-aggregate
-    per-partition sketches)."""
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_distinct,
-        hll_registers,
-    )
-
-    df = spark.range(20000).select(
-        F.concat(F.lit("v"), F.col("id").cast("string")).alias("v"),
-        F.lit(1).alias("g"),
-    )
-    est = hll_distinct(df, ["g"], "v", b=10).collect()[0]["est_distinct"]
-    assert abs(est - 20000) / 20000 < 0.14  # 4 sigma headroom
-
-    whole = {
-        (r["bucket"],): r["m_j"]
-        for r in hll_registers(df, ["g"], "v", 10).collect()
-    }
-    halves = [
-        hll_registers(
-            df.filter(F.expr(f"substr(v, 2) % 2 = {p}")), ["g"], "v", 10
-        )
-        for p in (0, 1)
-    ]
-    merged: dict = {}
-    for h in halves:
-        for r in h.collect():
-            k = (r["bucket"],)
-            merged[k] = max(merged.get(k, 0), r["m_j"])
-    assert merged == whole
-
-
-def test_hll_estimate_exact_integer_reference(spark):
-    """The Spark estimate equals a pure-Python replica of the integer
-    formula digit-for-digit — no floats to drift."""
-    import hashlib
-
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_distinct,
-        hll_numerator,
-    )
-
-    n, B = 7000, 10
-    M, REST = 1 << B, 60 - B
-    R = REST + 1
-    df = spark.range(n).select(
-        F.concat(F.lit("x"), F.col("id").cast("string")).alias("v"),
-        F.lit(0).alias("g"),
-    )
-    got = hll_distinct(df, ["g"], "v", b=B).collect()[0]["est_distinct"]
-    regs: dict = {}
-    for i in range(n):
-        hv = int(hashlib.md5(f"x{i}".encode()).hexdigest()[:15], 16)
-        b_, rest = hv >> REST, hv & ((1 << REST) - 1)
-        rho = R if rest == 0 else REST - rest.bit_length() + 1
-        regs[b_] = max(regs.get(b_, 0), rho)
-    s = sum(1 << (R - m) for m in regs.values()) + (M - len(regs)) * (1 << R)
-    assert got == hll_numerator(B) // (1_000_000 * s)
-
-
 def test_histogram_quantiles_accuracy(spark):
     """The 1024-bucket estimates must land within one bucket width of
     the exact discrete quantiles (its oracle gate checks cross-engine
@@ -188,174 +119,9 @@ def test_weighted_sample_favors_heavy_docs(spark):
     assert sample_mean > corpus_mean
 
 
-def test_hll_small_range_regime_boundary(spark):
-    """Round 7 (VERDICT r6 #5): the linear-counting switch must fire
-    exactly when the integer condition 2*est_raw <= 5*m holds with empty
-    buckets — checked by sweeping cardinalities across the b=6 boundary
-    and asserting the emitted columns' self-consistency, the pinned
-    lookup identity, and that the correction actually repairs the raw
-    bias in the small regime."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_distinct,
-        linear_counting_estimates,
-    )
-
-    b = 6
-    m = 1 << b
-    lc = dict(linear_counting_estimates(b))
-    # cardinalities straddling the raw<->linear boundary (2.5m = 160)
-    df = None
-    for g, n in enumerate([3, 11, 40, 120, 200, 400, 2000]):
-        part = spark.range(n).select(
-            F.lit(g).alias("g"), F.concat(F.lit(f"{g}:"), F.col("id")).alias("v")
-        )
-        df = part if df is None else df.unionByName(part)
-    rows = {
-        r["g"]: r
-        for r in hll_distinct(
-            df, ["g"], "v", b=b, small_range_correction=True
-        ).collect()
-    }
-    true_n = dict(enumerate([3, 11, 40, 120, 200, 400, 2000]))
-    for g, r in rows.items():
-        should_linear = (
-            r["n_empty_buckets"] > 0 and 2 * r["est_distinct"] <= 5 * m
-        )
-        assert (r["regime"] == "linear") == should_linear, (g, dict(r.asDict()))
-        if should_linear:
-            # the corrected value IS the pinned lookup entry
-            assert r["est_corrected"] == lc[r["n_empty_buckets"]]
-            # and it repairs the raw bias: never worse than raw
-            err_c = abs(r["est_corrected"] - true_n[g])
-            err_r = abs(r["est_distinct"] - true_n[g])
-            assert err_c <= err_r, (g, err_c, err_r)
-        else:
-            assert r["est_corrected"] == r["est_distinct"]
-    # both regimes actually appeared in the sweep
-    regimes = {r["regime"] for r in rows.values()}
-    assert regimes == {"linear", "raw"}
-    # the pinned table is exactly round(m*ln(m/V)) for every V
-    for v, e in lc.items():
-        assert e == round(m * math.log(m / v))
-
-
-def test_hll_raw_columns_unchanged_without_correction(spark):
-    """Default behavior (hll_distinct_orders' oracle contract) must not
-    change: no correction columns, same raw estimate."""
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_distinct,
-    )
-
-    df = spark.range(500).select(
-        F.lit(0).alias("g"), F.col("id").cast("string").alias("v")
-    )
-    out = hll_distinct(df, ["g"], "v", b=10)
-    assert out.columns == [
-        "g", "observed_buckets", "n_empty_buckets", "est_distinct"
-    ]
-    corr = hll_distinct(df, ["g"], "v", b=10, small_range_correction=True)
-    a = out.collect()[0]["est_distinct"]
-    c = corr.collect()[0]
-    assert c["est_distinct"] == a
-
-
 # ---------------------------------------------------------------------------
 # large-range correction (round 8)
 # ---------------------------------------------------------------------------
-
-def _estimate_for_registers(spark, m_j: int, b: int = 8):
-    """Estimate from a uniform synthetic register state (all buckets at
-    m_j), 32-bit hash geometry."""
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_estimate_from_registers,
-    )
-
-    m = 1 << b
-    regs = spark.createDataFrame(
-        [(0, j, m_j) for j in range(m)], "grp long, bucket long, m_j int"
-    )
-    return hll_estimate_from_registers(
-        regs, ["grp"], b=b, hash_bits=32,
-        small_range_correction=True, large_range_correction=True,
-    ).collect()[0]
-
-
-def test_large_range_boundary_regime_switch(spark):
-    """The regime flips exactly at E*30 > 2^32; below it the corrected
-    estimate IS the raw estimate."""
-    rows = {mj: _estimate_for_registers(spark, mj) for mj in (17, 18, 21)}
-    two32 = 1 << 32
-    for mj, r in rows.items():
-        if r["est_distinct"] * 30 > two32:
-            assert r["regime"] == "large", (mj, r)
-            assert r["est_corrected"] > r["est_distinct"], (mj, r)
-        else:
-            assert r["regime"] == "raw", (mj, r)
-            assert r["est_corrected"] == r["est_distinct"], (mj, r)
-    # the sweep must actually cross the boundary
-    assert {r["regime"] for r in rows.values()} == {"raw", "large"}
-
-
-def test_large_range_interpolation_tracks_the_ln_curve(spark):
-    """The pinned piecewise-linear knots track -2^32·ln(1-E/2^32) to
-    within the documented segment granularity (< 1% until the final
-    clamped segment)."""
-    import math
-
-    two32 = 1 << 32
-    for mj in (19, 20, 21, 22):
-        r = _estimate_for_registers(spark, mj)
-        if r["regime"] != "large":
-            continue
-        e = r["est_distinct"]
-        if e >= two32:  # clamped saturation tail — no float reference
-            continue
-        want = -two32 * math.log(1.0 - e / two32)
-        got = r["est_corrected"]
-        assert abs(got - want) <= max(0.01 * want, 2), (mj, got, want)
-
-
-def test_large_range_requires_32_bit_hash(spark):
-    import pytest
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_estimate_from_registers,
-    )
-
-    regs = spark.createDataFrame([(0, 0, 1)], "grp long, bucket long, m_j int")
-    with pytest.raises(ValueError, match="32-bit"):
-        hll_estimate_from_registers(
-            regs, ["grp"], b=8, hash_bits=60, large_range_correction=True
-        )
-
-
-def test_hll_32_bit_hash_end_to_end_still_estimates(spark):
-    """hash_bits=32 through the row-level entry point stays a sane
-    estimator in the raw regime (sanity for the new geometry)."""
-    from pyspark.sql import functions as F
-
-    from hainan_big_data_recommend_system_spark.operators.hll import (
-        hll_distinct,
-    )
-
-    df = spark.range(3000).select(
-        F.lit("g").alias("g"), F.col("id").cast("string").alias("v")
-    )
-    r = hll_distinct(
-        df, ["g"], "v", b=10, hash_bits=32,
-        small_range_correction=True, large_range_correction=True,
-    ).collect()[0]
-    assert r["regime"] in ("raw", "linear")
-    assert abs(r["est_corrected"] - 3000) < 3000 * 0.15
-
 
 def test_cms_exact_one_sided_and_bounded(spark):
     """CMS guarantees: est >= exact always (one-sided), and the
