@@ -1,4 +1,4 @@
-"""Text scalar functions (SURVEY.md §2.8 F1–F10, F15–F16, §2.2 P5).
+"""Text scalar functions (SURVEY.md §2.8 F4, F5, F7, F8).
 
 The reference's document prep (`simility_books.py:11-28,50-53`) and title
 normalization (`simility_books.py:74-88`) re-expressed as Column expressions.
@@ -18,22 +18,6 @@ _PUNCT_CLASS = r"[.\u00b7\u30fb\u300a\u300b\-]"
 _CUT_CLASS = r"[\uff08\uff09\u3010\u3011/()0-9\uff0c\u7b2c:\u7cbe].*$"
 
 
-def clean_author(author: Column) -> Column:
-    """F1–F3+F5: lowercase, drop spaces, comma-split, re-join with spaces
-    (`simility_books.py:20` — multi-author "a, b" → "a b")."""
-    return F.concat_ws(" ", F.split(F.translate(F.lower(author), " ", ""), ","))
-
-
-def doc_assemble(tags_doc: Column, author: Column) -> Column:
-    """F6: document = tags ⊕ ' ' ⊕ author ⊕ ' ' ⊕ author — the author is
-    doubled deliberately to up-weight it (`simility_books.py:51`).
-
-    ``concat_ws``, not ``concat``: plain concat null-propagates, so one
-    NULL author would nullify the whole document and silently drop a book
-    with perfectly good tags from the similarity corpus."""
-    return F.concat_ws(" ", tags_doc, author, author)
-
-
 def squash_spaces(s: Column) -> Column:
     """F7: trim + collapse repeated spaces (`guessLike_u_like.py:67`)."""
     return F.trim(F.regexp_replace(s, " +", " "))
@@ -51,14 +35,6 @@ def tokenize(doc: Column) -> Column:
     return F.split(F.trim(doc), r"[ \t\n\x0B\f\r]+")
 
 
-def token_filter(tokens: Column) -> Column:
-    """P5: keep tokens with length ≥ 2 that are not all digits
-    (`simility_books.py:14` — declared intent; dead code in the reference)."""
-    return F.filter(
-        tokens, lambda t: (F.length(t) >= 2) & (~t.rlike(r"^[0-9]+$"))
-    )
-
-
 def normalize_title(title: Column) -> Column:
     """F8: the reference's two-stage title normalization for fuzzy dedup
     (`simility_books.py:74-88`): lowercase, cut everything from the first
@@ -73,16 +49,3 @@ def ids_csv(ids: Column) -> Column:
     """F5/F19-adjacent: serialize an array of ids to the reference's CSV wire
     format (`simility_books.py:93`) — sink-boundary only; plans keep arrays."""
     return F.concat_ws(",", F.transform(ids, lambda x: x.cast("string")))
-
-
-def csv_ids(csv: Column) -> Column:
-    """F12: parse a CSV int-list string back to ``array<bigint>`` — replaces
-    the reference's ``eval`` round-trip (`guessLike_u_like.py:47`; ``eval`` of
-    untrusted data is a code-exec hazard, deliberately not reproduced).
-
-    An empty/blank string round-trips to an EMPTY array (``split('')``
-    alone would yield ``[NULL]`` and break size/membership checks);
-    non-numeric tokens cast to NULL elements — visible, not invented."""
-    return F.when(F.length(F.trim(csv)) == 0, F.array().cast("array<bigint>")).otherwise(
-        F.transform(F.split(csv, ","), lambda x: x.cast("bigint"))
-    )

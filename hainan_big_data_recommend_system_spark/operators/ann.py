@@ -13,12 +13,10 @@ Three strategies over ``array<float>`` embeddings, one semantic
 - label/cluster-blocked exact (:func:`..similarity.cosine_topk_arrays`)
   — the reference's k-means blocking (`guessLike_u_like.py:82-93`):
   exact within a block, recall traded at block boundaries.
-- :func:`ivf_topk` — IVF in the FAISS sense: a seeded KMeans coarse
-  quantizer assigns every vector to a list; each query probes its
-  ``nprobe`` nearest centroids and scores exactly within those lists.
-  Recall/cost dial = (nlist, nprobe).  Quantizer centroids are
-  float-iterative → not oracle-SQL-expressible; correctness is pinned by
-  invariant tests (recall vs brute force, self-exclusion, k-bound).
+- :func:`ivf_topk_pinned` — IVF in the FAISS sense: a coarse quantizer
+  trained offline and pinned as integer literals assigns every vector to
+  a list; each query probes its ``nprobe`` nearest centroids and scores
+  exactly within those lists.  Recall/cost dial = (nlist, nprobe).
 
 All dot products run on integer-quantized vectors
 (:func:`..similarity.quantize_vec`) so scores are exact and identical
@@ -31,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from .similarity import quantize_vec
-from ..session import CHECKPOINT_LEVEL
 
 
 def _mixed_block_topk(k: int):
@@ -198,8 +195,8 @@ def ivf_topk_pinned(
     Assignment and probing are exact integer-distance argmins
     (Σ(qᵢ−cᵢ)² over the quantized grid, ties to the lower centroid id), so
     the whole query — list assignment, nprobe probing, in-list exact
-    scoring — is deterministic and DuckDB-oracle-checkable, unlike the
-    float-iterative in-Spark KMeans fit of :func:`ivf_topk`.
+    scoring — is deterministic and DuckDB-oracle-checkable, unlike a
+    float-iterative in-Spark KMeans fit.
 
     Physical plan: one broadcast of nlist centroid rows, a narrow
     crossJoin + window per vector (nlist ≪ n, so this is a map-side
@@ -225,305 +222,3 @@ def ivf_topk_pinned(
         )
     )
     return _global_topk(scored, k)
-
-
-def ivf_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    nlist: int = 16,
-    nprobe: int = 2,
-    seed: int = 42,
-    scale: int = 1000,
-    max_iter: int = 10,
-    fit_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF ANN: seeded-KMeans coarse quantizer → per-query ``nprobe``-list
-    probing → exact scoring within the probed lists.
-
-    Expected work per query ≈ ``nprobe/nlist`` of brute force; recall is
-    whatever the quantizer geometry gives (pinned by an invariant test
-    against :func:`cosine_topk_bruteforce`).  The inverted lists are the
-    ``__blk`` groups — at 100 TB each list is a partition and the probe
-    replication is the only cross-partition traffic.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    df = df.filter(F.col(vec_col).isNotNull())  # NULL vec: no cosine
-    feats = df.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    # a coarse quantizer needs rough geometry, not convergence — cap the
-    # iterations and optionally fit on a sample (recall is invariant-tested
-    # against brute force).  At 100 TB fitting the quantizer on a fraction
-    # is mandatory, not an optimization: FAISS trains IVF on ~1-10% too.
-    fit_src = (
-        feats
-        if fit_fraction >= 1.0
-        else feats.sample(fraction=fit_fraction, seed=seed)
-    )
-    km = KMeans(k=nlist, seed=seed, maxIter=max_iter, featuresCol="features").fit(
-        fit_src
-    )
-
-    centers = [
-        (int(i), [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())
-    ]
-    centers_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            centers, "centroid_id int, center array<double>"
-        )
-    )
-    dist2 = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.col("center"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    # ONE distance ranking serves storage assignment (rank 1) AND query
-    # probing (rank <= nprobe): deriving assignment from km.transform's
-    # prediction instead would use a different distance formulation
-    # (||a||²+||b||²−2a·b vs Σ(a−b)²), and a float near-tie could store a
-    # vector in a list its own top probe never visits.  Materialized once
-    # — both consumers read it (the double-consumption pattern).
-    probe_w = Window.partitionBy("vid").orderBy(F.asc("__d2"), F.asc("centroid_id"))
-    ranked = (
-        df.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col),
-            quantize_vec(F.col(vec_col), scale).alias("__qv"),
-        )
-        .crossJoin(centers_df)
-        .select("vid", "__qv", "centroid_id", dist2.alias("__d2"))
-        .withColumn("__pr", F.row_number().over(probe_w))
-        .localCheckpoint(eager=True, storageLevel=CHECKPOINT_LEVEL)
-    )
-    assigned = ranked.filter(F.col("__pr") == 1).select(
-        "vid", "__qv", F.col("centroid_id").cast("int").alias("__blk")
-    )
-    probes = ranked.filter(F.col("__pr") <= nprobe).select(
-        "vid", "__qv", F.col("centroid_id").alias("__blk")
-    )
-
-    cand = assigned.select(
-        "vid", "__qv", "__blk",
-        F.lit(False).alias("__is_q"), F.lit(True).alias("__is_c"),
-    )
-    qrep = probes.select(
-        "vid", "__qv", "__blk",
-        F.lit(True).alias("__is_q"), F.lit(False).alias("__is_c"),
-    )
-    scored = (
-        cand.unionByName(qrep)
-        .groupBy("__blk")
-        .applyInPandas(
-            _mixed_block_topk(k), "query_id long, neighbor_id long, sim double"
-        )
-    )
-    return _global_topk(scored, k)
-
-
-# ---------------------------------------------------------------------------
-# Strategy selection (round 5, VERDICT r4 #7): the PLANS §12 decision table
-# as code — SURVEY §7.4 promised the ANN family "behind one operator
-# interface", and the measured table (sf0.1, n=2000, recall@5 vs exact on
-# the probe set) is the rationale:
-#
-#   brute force        recall 1.000   O(n·probes) exact    ground truth /
-#                                                          small corpus
-#   IVF nprobe=2/8     recall 0.441   ∝ probed-list sizes  trained quantizer;
-#                                                          recall ∝ nprobe
-#   LSH 16 × derived   recall 0.62+   ∝ Σ bucket²          no training stage;
-#                                                          data-independent
-# ---------------------------------------------------------------------------
-
-
-def choose_ann_strategy(
-    n: int,
-    has_quantizer: bool = False,
-    recall_target: float = 0.6,
-    brute_force_max_n: int = 10_000,
-    max_bytes_per_vector: int | None = None,
-    dim: int = 64,
-) -> dict:
-    """Pick the ANN strategy + parameters for a corpus of ``n`` vectors.
-
-    Encodes the measured decision table (PLANS §12):
-
-    - **memory first**: when ``max_bytes_per_vector`` is below the raw
-      float32 footprint (``dim·4``), only the PQ compressed index fits —
-      the pinned M=16×K=256 geometry stores 16 bytes/vector.  Targets
-      above 0.75 are refused outright (the BEST measured PQ recall@5 is
-      0.776, on the codebooks' own training corpus); PQ recall is
-      corpus-dependent below that ceiling (0.552 measured on the small
-      off-training sf0.001 set), so the returned dict carries
-      ``recall_estimate`` (the off-training floor) and, for targets in
-      (0.552, 0.75], a ``warning`` field naming the under-delivery risk
-      — the one row of the table that cannot promise its target on
-      unmeasured data says so in its result.  (At
-      deployment scale PQ composes with IVF lists; the budget decides
-      the *storage*, the rest of the table decides the *traversal*.);
-    - exact brute force whenever it is affordable (``n`` at or under
-      ``brute_force_max_n`` — the sharded matmul is cheap there and
-      recall is 1.0 by construction) or the recall target demands
-      near-exactness (> 0.9: no measured approximate config clears that);
-    - IVF when a trained quantizer is available and the target is inside
-      what probing buys (recall scales ~linearly with nprobe/nlist;
-      measured 0.441 at nprobe=2 of nlist=8 → nprobe ≈
-      ceil(recall·nlist) with a floor of 2);
-    - hyperplane LSH otherwise — the data-INDEPENDENT index that needs no
-      training stage, with ``bits`` derived from ``n``
-      (:func:`..lsh.derive_bits`) and tables as the recall knob
-      (16 clears 0.6 on the synthetic embeddings; 4 bottoms out ~0.19).
-
-    Returns ``{"strategy": "brute" | "ivf" | "lsh" | "pq" |
-    "ivfpq_refine", ...params}``; the params feed
-    :func:`cosine_topk_bruteforce`, :func:`ivf_topk_pinned`,
-    :func:`..lsh.lsh_topk_pinned`, :func:`..pq.pq_adc_topk`, or
-    :func:`..pq.pq_ivf_adc_refined_topk` directly.  The
-    memory-constrained row prefers ``ivfpq_refine`` whenever a trained
-    quantizer exists: same 16 B/vector index, exact re-rank of the ADC
-    shortlist, recall floor scaling with nprobe (0.432/0.712/0.893
-    measured off-training at nprobe 2/4/8 — PLANS §15).
-    """
-    from .lsh import derive_bits
-
-    if not 0.0 < recall_target <= 1.0:
-        raise ValueError(f"recall_target must be in (0, 1], got {recall_target}")
-    if max_bytes_per_vector is not None and max_bytes_per_vector < dim * 4:
-        from .pq_codebooks import PINNED_PQ_CODEBOOKS
-
-        pq_bytes = len(PINNED_PQ_CODEBOOKS)  # one byte-code per subspace
-        if max_bytes_per_vector < pq_bytes:
-            raise ValueError(
-                f"budget {max_bytes_per_vector} B/vector is below even the "
-                f"PQ code size ({pq_bytes} B); no strategy fits"
-            )
-        if has_quantizer:
-            # IVFPQ + exact re-rank (round 7): the INDEX stays 16 B/vector
-            # (codes + list ids); raw vectors are streamed from the source
-            # table for the refine_k-candidate shortlist only, so the
-            # memory budget still holds.  Measured off-training recall@5
-            # floors (sf0.001; sf0.01 runs higher — PLANS §15):
-            # nprobe 2 → 0.432, 4 → 0.712, 8 → 0.893.  Exact re-rank
-            # removes the ADC-ordering ceiling, so the promise scales
-            # with probing instead of capping at full-scan PQ's 0.75.
-            table = [(2, 0.432), (4, 0.712), (8, 0.893)]
-            for nprobe, floor in table:
-                if recall_target <= floor:
-                    return {
-                        "strategy": "ivfpq_refine",
-                        "nprobe": nprobe,
-                        "refine_k": 20,
-                        "recall_estimate": floor,
-                    }
-            raise ValueError(
-                f"recall_target {recall_target} exceeds the measured "
-                "ivfpq+refine floor at full probing (0.893 off-training); "
-                "raise the budget for exact search or lower the target"
-            )
-        if recall_target > 0.75:
-            raise ValueError(
-                f"recall_target {recall_target} exceeds the BEST measured "
-                "PQ recall (0.776, on the codebooks' training corpus) — no "
-                "memory-constrained config clears it; raise the budget or "
-                "lower the target"
-            )
-        out = {"strategy": "pq", "recall_estimate": 0.552}
-        if recall_target > 0.552:
-            # corpus-dependent regime (ADVICE r5): PQ clears this target
-            # only on the codebooks' own training corpus — surface the
-            # under-delivery risk in the RESULT, not just the docstring
-            out["warning"] = (
-                f"recall_target {recall_target} exceeds the measured "
-                "off-training PQ floor (0.552; 0.776 on the training "
-                "corpus) — validate recall on this corpus or lower the "
-                "target"
-            )
-        return out
-    if n <= brute_force_max_n or recall_target > 0.9:
-        return {"strategy": "brute"}
-    if has_quantizer and recall_target <= 0.5:
-        nlist = 8  # the pinned-quantizer geometry (operators/ivf_centroids)
-        import math
-
-        return {
-            "strategy": "ivf",
-            "nprobe": max(2, math.ceil(recall_target * nlist)),
-        }
-    return {
-        "strategy": "lsh",
-        "bits": derive_bits(n),
-        "n_tables": 16 if recall_target > 0.4 else 4,
-    }
-
-
-def ann_topk_auto(
-    df,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    query_filter=None,
-    n: int | None = None,
-    has_quantizer: bool = False,
-    centroids: list[list[int]] | None = None,
-    recall_target: float = 0.6,
-    max_bytes_per_vector: int | None = None,
-) -> DataFrame:
-    """One interface over the ANN family (SURVEY §7.4): counts the corpus
-    (unless ``n`` is passed), consults :func:`choose_ann_strategy`, and
-    dispatches.  ``centroids`` implies ``has_quantizer``.  When a memory
-    budget is given, the data's actual dimensionality is probed (one
-    non-null row) so the raw-footprint comparison uses this corpus's
-    ``dim·4``, not an assumed width."""
-    from .lsh import lsh_topk_pinned
-
-    if n is None:
-        n = df.filter(F.col(vec_col).isNotNull()).count()
-    has_quantizer = has_quantizer or centroids is not None
-    dim_kwargs = {}
-    if max_bytes_per_vector is not None:
-        row = (
-            df.filter(F.col(vec_col).isNotNull())
-            .select(F.size(F.col(vec_col)).alias("d"))
-            .limit(1)
-            .collect()
-        )
-        if row:
-            dim_kwargs["dim"] = int(row[0]["d"])
-    choice = choose_ann_strategy(
-        n, has_quantizer, recall_target,
-        max_bytes_per_vector=max_bytes_per_vector, **dim_kwargs,
-    )
-    if choice["strategy"] == "ivfpq_refine":
-        from .pq import pq_ivf_adc_refined_topk
-
-        return pq_ivf_adc_refined_topk(
-            df, id_col, vec_col, k,
-            refine_k=max(choice["refine_k"], 4 * k),
-            centroids=centroids, nprobe=choice["nprobe"],
-            query_filter=query_filter,
-        )
-    if choice["strategy"] == "pq":
-        from .pq import pq_adc_topk
-
-        return pq_adc_topk(
-            df, id_col, vec_col, k, query_filter=query_filter, n=n
-        )
-    if choice["strategy"] == "brute":
-        return cosine_topk_bruteforce(df, id_col, vec_col, k, query_filter)
-    if choice["strategy"] == "ivf":
-        out = ivf_topk_pinned(
-            df, id_col, vec_col, k, centroids=centroids, nprobe=choice["nprobe"]
-        )
-        return out.filter(query_filter) if query_filter is not None else out
-    return lsh_topk_pinned(
-        df, id_col, vec_col, k,
-        n_tables=choice["n_tables"], bits=choice["bits"],
-        query_filter=query_filter,
-    )

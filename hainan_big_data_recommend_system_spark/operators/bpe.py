@@ -137,129 +137,6 @@ def bpe_train(
     return merges
 
 
-def _merge_word(syms: list[str], left: str, right: str) -> list[str]:
-    """Leftmost non-overlapping merge — exactly what the delimited-string
-    literal ``replace`` does on ``|left||right|``."""
-    out: list[str] = []
-    i = 0
-    n = len(syms)
-    while i < n:
-        if i + 1 < n and syms[i] == left and syms[i + 1] == right:
-            out.append(left + right)
-            i += 2
-        else:
-            out.append(syms[i])
-            i += 1
-    return out
-
-
-def bpe_train_local(
-    words: DataFrame,
-    word_col: str,
-    freq_col: str,
-    n_merges: int = 8,
-    max_vocab_rows: int = 5_000_000,
-) -> list[tuple[int, str, str, int]]:
-    """Vocabulary-scale BPE training (VERDICT r5 #2): same contract and
-    bit-identical output as :func:`bpe_train`, without 2 Spark jobs per
-    merge round.
-
-    The distributed factoring already collapsed the corpus into the
-    vocabulary-sized ``(word, freq)`` table — corpus-size-INDEPENDENT by
-    construction — so the merge loop itself is driver-local: one bounded
-    collect (guarded by ``max_vocab_rows``; a 5M-row word table is
-    ~100 MB — fine on any driver, and 100 TB of corpus does not grow it),
-    then incremental pair maintenance with a lazy-invalidation heap:
-
-    - pair counts are built once; each merge updates only the words that
-      CONTAIN the merged pair (tracked by an inverted index), applying
-      count deltas instead of recounting the table;
-    - the argmax pops a ``(-cnt, t1, t2)`` heap, skipping stale entries —
-      the same (count desc, then both tokens ascending) total order as
-      the Spark loop (UTF-8 byte order == code-point order, so Python
-      string comparison matches Spark's binary collation);
-    - merge application is leftmost non-overlapping, exactly the
-      delimited-string ``replace`` semantics.
-
-    ~1024 merges train in seconds where the per-round Spark loop would
-    schedule ~2048 jobs; the Spark loop remains as the oracle cross-check
-    (equivalence pinned in tests/test_bpe.py at overlapping n)."""
-    import heapq
-    from collections import Counter, defaultdict
-
-    n_bad = words.filter(F.col(word_col).contains(SEP)).count()
-    if n_bad:
-        raise ValueError(
-            f"{n_bad} words contain the symbol delimiter {SEP!r}; "
-            "strip or remap them before BPE training"
-        )
-    n_rows = words.count()
-    if n_rows > max_vocab_rows:
-        raise ValueError(
-            f"word table has {n_rows} rows (> max_vocab_rows="
-            f"{max_vocab_rows}); the driver-local merge loop is sized for "
-            "vocabulary-scale tables — raise the bound or fall back to "
-            "bpe_train"
-        )
-    rows = words.select(
-        F.col(word_col).alias("w"), F.col(freq_col).cast("long").alias("f")
-    ).collect()
-    vocab: list[tuple[list[str], int]] = [
-        (list(r["w"]), int(r["f"])) for r in rows
-    ]
-
-    def word_pairs(syms: list[str]) -> Counter:
-        return Counter(zip(syms, syms[1:]))
-
-    counts: Counter = Counter()
-    where: defaultdict = defaultdict(set)  # pair -> word indices
-    for wi, (syms, f) in enumerate(vocab):
-        for p, k in word_pairs(syms).items():
-            counts[p] += k * f
-            where[p].add(wi)
-    heap = [(-c, t1, t2) for (t1, t2), c in counts.items()]
-    heapq.heapify(heap)
-
-    merges: list[tuple[int, str, str, int]] = []
-    for step in range(1, n_merges + 1):
-        best = None
-        while heap:
-            negc, t1, t2 = heap[0]
-            if counts.get((t1, t2), 0) == -negc and -negc > 0:
-                best = (t1, t2, -negc)
-                break
-            heapq.heappop(heap)  # stale or zeroed entry
-        if best is None:
-            raise ValueError(
-                f"pair space exhausted after {step - 1} merges; "
-                f"lower n_merges (= {n_merges}) for this corpus"
-            )
-        left, right, cnt = best
-        merges.append((step, left, right, cnt))
-        for wi in sorted(where[(left, right)]):
-            syms, f = vocab[wi]
-            old = word_pairs(syms)
-            new_syms = _merge_word(syms, left, right)
-            new = word_pairs(new_syms)
-            vocab[wi] = (new_syms, f)
-            for p in old.keys() | new.keys():
-                d = new.get(p, 0) - old.get(p, 0)
-                if d == 0:
-                    continue
-                counts[p] += d * f
-                if counts[p] <= 0:
-                    counts.pop(p, None)
-                    where.pop(p, None)
-                else:
-                    if new.get(p, 0):
-                        where[p].add(wi)
-                    heapq.heappush(heap, (-counts[p], p[0], p[1]))
-                if new.get(p, 0) == 0 and p in where:
-                    where[p].discard(wi)
-        where.pop((left, right), None)
-    return merges
-
-
 def bpe_merge_table(
     spark: SparkSession,
     words: DataFrame,

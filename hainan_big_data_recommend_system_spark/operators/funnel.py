@@ -125,7 +125,7 @@ def funnel_summary(per_user: DataFrame, n_steps: int) -> DataFrame:
         "__prev", F.lag("users_reached").over(Window.orderBy("step_index"))
     )
     # exact integer `div`, not double `/`: double quotients can round
-    # across an integer at large counts (ADVICE r6 histogram_quantiles)
+    # across an integer at large counts
     return steps.select(
         "step_index",
         "users_reached",

@@ -721,7 +721,7 @@ def make_table_metadata(
     ``[{id, name, type}, ...]`` — recorded so readers can resolve
     manifest bounds keys and ``equality_ids`` back to column names.
     ``properties`` (round 12) is the spec's string-map table
-    properties block — the streaming sink's exactly-once txn
+    properties block — a ``foreachBatch`` writer's exactly-once txn
     watermarks live there and every metadata rewrite carries them
     forward.  ``snapshot_ts`` (round 14) carries each snapshot's
     spec ``timestamp-ms`` — the in-log age

@@ -205,19 +205,14 @@ def pq_adc_topk(
     scale: int = PQ_SCALE,
     sub_dim: int = PQ_SUB_DIM,
     vectors_per_block: int = 4096,
-    n: int | None = None,
 ) -> DataFrame:
     """Top-k neighbors by PQ asymmetric distance —
     ``(query_id, neighbor_id, adc_dist, rn)``, self-pairs excluded,
-    ascending exact-integer distance, ties broken on neighbor id.
-    Pass ``n`` (the non-null vector count) when the caller already knows
-    it — ``ann_topk_auto`` counted the corpus to pick the strategy, and
-    re-counting here would be a second full-scan driver job."""
+    ascending exact-integer distance, ties broken on neighbor id."""
     if codebooks is None:
         codebooks = PINNED_PQ_CODEBOOKS
     base = df.filter(F.col(vec_col).isNotNull())
-    if n is None:
-        n = base.count()
+    n = base.count()
     n_blocks = max(1, -(-n // vectors_per_block))
     cand = pq_encode(base, id_col, vec_col, codebooks, scale, sub_dim).select(
         "vid",

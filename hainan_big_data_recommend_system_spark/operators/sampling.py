@@ -46,38 +46,12 @@ def sample_k_per_group(
 
 def hash_uniform(key: Column, seed: str = "42") -> Column:
     """Deterministic uniform [0,1) from the row key: first 8 md5 hex chars
-    as an integer over 16⁸.  Same bits in Spark and DuckDB → stratified
+    as an integer over 16⁸.  Same bits in Spark and DuckDB → per-domain
     samples stay oracle-checkable, and task retries can never resample."""
     return (
         F.conv(F.substring(hash_rank(key, seed), 1, 8), 16, 10).cast("double")
         / F.lit(float(16**8))
     )
-
-
-def stratified_sample(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict[str, float],
-    key: Column,
-    seed: str = "42",
-) -> DataFrame:
-    """Per-stratum Bernoulli sample at exact, reproducible rates — the
-    class-rebalancing primitive of a training-data pipeline (down-weight
-    dominant classes, keep all of rare ones).
-
-    A row survives iff ``hash_uniform(key) < fractions[stratum]``; missing
-    strata default to 0 (dropped).  Unlike ``DataFrame.sampleBy`` the
-    decision is a pure function of (seed, key) — identical across engines,
-    retries, and partitionings.
-    """
-    u = hash_uniform(key, seed)
-    frac = None
-    for value, p in fractions.items():
-        cond = F.col(strata_col) == value
-        frac = F.when(cond, F.lit(p)) if frac is None else frac.when(cond, F.lit(p))
-    if frac is None:  # empty fractions: every stratum defaults to 0
-        return df.filter(F.lit(False))
-    return df.filter(u < frac.otherwise(F.lit(0.0)))
 
 
 def temperature_mixture_sample(

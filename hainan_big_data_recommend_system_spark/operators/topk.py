@@ -1,8 +1,7 @@
 """Window / ranking operators (SURVEY.md §2.5 W1–W5, §2.6 O1–O3).
 
-All four reference ranking idioms — top-k per query item (W1, ``num_best=100``
-`simility_books.py:62`), top-fraction per group (W2, top-10% similar users
-`guessLike_u_like.py:114-117`), most-recent-k per user (W3,
+The reference's ranking idioms — top-k per query item (W1, ``num_best=100``
+`simility_books.py:62`), most-recent-k per user (W3,
 `guessLike_u_like.py:189,203-204`), rank-by-rating (W4,
 `simility_books.py:91-93`) — are window functions over a partition key.
 
@@ -32,29 +31,3 @@ def topk_per_group(
     """W1/W3/W4: keep the top-``k`` rows per group, rank exposed as ``rank_col``."""
     w = Window.partitionBy(*partition_by).orderBy(*order_by)
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
-
-
-def top_fraction_per_group(
-    df: DataFrame,
-    partition_by: list[str],
-    order_by: list[Column],
-    fraction: float,
-    rank_col: str = "pr",
-) -> DataFrame:
-    """W2: keep the top ``fraction`` of each group (reference: top 10% most
-    similar users within the predicted cluster, `guessLike_u_like.py:114-117`).
-
-    Uses ``percent_rank`` so tied sort keys share a rank — the kept set is
-    deterministic even with ties.
-
-    Known deviation from the reference for SMALL groups: the top row of a
-    group has ``percent_rank = 0`` and is always kept, whereas the
-    reference's ``[:int(0.1*n)]`` truncation keeps zero rows when
-    ``n < 1/fraction``.  Keeping the best member of every group is the
-    deliberate choice (an empty recommendation set helps nobody); the
-    DuckDB oracle (`top_decile_per_segment`) pins the same semantics.
-    """
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return df.withColumn(rank_col, F.percent_rank().over(w)).filter(
-        F.col(rank_col) <= fraction
-    )

@@ -11,8 +11,7 @@ parquet tables.  Submodules register themselves on import:
   with its oracle (§3), plus the two ALS queries
 - :mod:`.dedup`        — exact/MinHash/SimHash/ngram/embedding dedup (extension)
 - :mod:`.textstats`    — lang-id, quality, token counts, fingerprints (extension)
-- :mod:`.streamq`      — windowed event aggregations (batch-oracled; streaming
-  execution itself is tested in tests/test_streaming.py)
+- :mod:`.streamq`      — the click/view temporal join (as-of + interval)
 
 Cross-engine determinism rules (every query follows these):
 

@@ -96,9 +96,9 @@ def q_funnel_user_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-step funnel summary with exact-basis-point conversions
-    (integer `div` on both engines — the histogram_quantiles ADVICE
-    class).  3 rows; the bounded 3-row lag window is the packing.py
-    discipline."""
+    (integer `div` on both engines — a double quotient can round across
+    an integer at large counts).  3 rows; the bounded 3-row lag window
+    is the packing.py discipline."""
     ev = load_table(spark, sf_dir, "events")
     per_user = funnel_steps(
         ev, "user_id", "ts", "event_type", _FUNNEL_STEPS,

@@ -324,9 +324,7 @@ _IVF_CENT_VALUES = ", ".join(
 def q_ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with the pinned offline-trained coarse quantizer
     (operators/ivf_centroids.py): integer-exact assignment + nprobe=2
-    probing + exact in-list scoring — fully oracle-checked, every stage.
-    The in-Spark KMeans-trained variant stays available as
-    `operators.ann.ivf_topk` with recall invariants in tests/test_ml.py."""
+    probing + exact in-list scoring — fully oracle-checked, every stage."""
     emb = load_table(spark, sf_dir, "embeddings")
     return ivf_topk_pinned(emb, "vec_id", "embedding", k=5, nprobe=2)
 
@@ -707,7 +705,7 @@ def q_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN family (vec_id % 4 = 0), top-5 ascending ADC distance.
 
     Promoted to the driver window in round 6 (the r5 verdict's #4):
-    this is the shape `choose_ann_strategy` deploys at scale; the
+    this is the FAISS deployment shape at scale; the
     demoted ``ann_topk_pq`` keeps its local oracle and its full-scan-ADC
     facet rides this row (same codebooks, same ADC kernel)."""
     from ..operators.pq import pq_ivf_adc_topk

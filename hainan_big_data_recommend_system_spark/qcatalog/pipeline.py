@@ -307,9 +307,8 @@ WHERE CAST(('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGIN
 """
 
 
-# Driver slot since round 5 (rotation: stratified_sample_events → EXTRA,
-# whose fixed-fraction facet this query strictly supersedes with
-# data-derived α-tempered rates).
+# Driver slot since round 5: data-derived α-tempered rates, a strict
+# superset of fixed per-stratum sampling fractions.
 @register("mixture_sample_temperature", _MIXTURE_SQL)
 def q_mixture_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled domain mixture (α = 0.5 reweighting over `lang`,

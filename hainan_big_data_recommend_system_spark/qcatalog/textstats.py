@@ -920,9 +920,9 @@ FROM t
 """
 
 
-# Driver slot since round 5 (rotation: nation_set_ops → EXTRA): the S14
-# completion — HTML → clean training text is the engine's share of the
-# reference's scrape pipeline, and the first stage of any web-crawl corpus.
+# The S14 completion — HTML → clean training text is the engine's share
+# of the reference's scrape pipeline, and the first stage of any web-crawl
+# corpus.
 @register_extra("html_extract_main", _HTML_ORACLE)  # extra since rotation #11: the HTML->text facet rides text_profile (driver) + scrape_extract (local)
 def q_html_extract_main(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HTML → training-text extraction (operators/html.html_extract_text)

@@ -2182,7 +2182,7 @@ def write_delta(
                 "every written row"
             )
     if not adds and mode == "append":
-        # an empty batch appends nothing — no version burned (the
+        # an empty batch appends nothing — no version burned (a
         # streaming writer's empty micro-batch path; a redelivery is
         # equally empty, so skipping the txn watermark stays safe)
         return {"version": None, "skipped": True, "n_files": 0,

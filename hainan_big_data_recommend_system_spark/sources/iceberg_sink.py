@@ -58,7 +58,7 @@ ZORDER-clustered), `read_changes_iceberg` serves the row-level feed
 between two snapshots, `rewrite_manifests_iceberg` consolidates the
 manifest list via the spec's per-entry sequence-number inheritance,
 ``write_iceberg(txn=...)`` records exactly-once watermarks in the
-spec's table properties (the streaming sink rides it), DELETE/UPDATE
+spec's table properties (a ``foreachBatch`` writer can ride it), DELETE/UPDATE
 compose the partition/stats/bloom pruning levers before scanning, and
 the retry loops carry logical-conflict checks.
 

@@ -8,11 +8,7 @@ reference's ``eval``) → ``foreachBatch``: a probe of the payload map built
 from the batch model tables at startup → KV sink, with the reference's
 hot-list fallback.
 
-The reference has no event-time semantics at all (arrival-order only) —
-watermarked tumbling/sliding/session windows are the M6 extension surface
-the driver's ``events`` table anticipates (SURVEY.md §2.10 last row).
-
-- :mod:`.events` — event source, payload parse, channel dispatch, windows;
+- :mod:`.events` — event source, payload parse, channel dispatch;
 - :mod:`.recommend` — the recommender: ``reco_assembly`` (M8§), the
   startup state built from it and the per-batch recommend step;
 - :mod:`.sinks` — ``foreachBatch`` KV writers with hot fallback.

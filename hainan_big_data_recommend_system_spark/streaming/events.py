@@ -1,4 +1,4 @@
-"""Event-stream source, payload parsing, dispatch, and windowed aggregates.
+"""Event-stream source, payload parsing and channel dispatch.
 
 Sources: in production a Kafka topic (`readStream.format("kafka")`); in the
 test harness a file source over parquet/json drops — same DataFrame surface
@@ -28,8 +28,6 @@ EVENT_SCHEMA = T.StructType(
 #: deployment swaps in `"userId BIGINT, bookIds ARRAY<BIGINT>"` here — the
 #: parse/dispatch machinery is schema-agnostic.
 PAYLOAD_SCHEMA = "k BIGINT"
-
-CHANNELS = ("u_like", "u_nlike", "u_first_select")
 
 
 def read_event_stream(
@@ -81,75 +79,3 @@ def dispatch_channels(df: DataFrame, mapping: dict[str, str] | None = None) -> D
     for k, v in mapping.items():
         expr = F.when(F.col("event_type") == k, v).otherwise(expr)
     return df.withColumn("channel", expr)
-
-
-def dedup_events(df: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Streaming exact dedup: at-least-once sources (Kafka redelivery,
-    file-source replays) are collapsed to exactly-once rows by ``event_id``
-    within the watermark horizon — state is bounded by
-    (watermark × arrival rate), not stream lifetime.  The streaming face of
-    the batch `dedup_exact` operator.
-
-    Rows with a NULL event_id are dropped up front: dedup keys compare
-    null-safe, so they would all collapse into ONE surviving row —
-    silently discarding every later distinct-but-unidentified event is
-    worse than rejecting records that violate the identity contract."""
-    return (
-        df.filter(F.col("event_id").isNotNull())
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-
-
-def tumbling_counts(
-    df: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked tumbling-window counts (extension surface; late rows
-    beyond the watermark are dropped, state is bounded)."""
-    return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("value_cents"),
-        )
-        .select(
-            F.col("w.start").alias("wstart"),
-            "event_type",
-            "n",
-            "value_cents",
-        )
-    )
-
-
-def sliding_counts(
-    df: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked sliding-window counts."""
-    return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("wstart"), "event_type", "n")
-    )
-
-
-def session_counts(
-    df: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-user session windows (gap-based), the stateful-op surface the
-    reference lacks entirely."""
-    return (
-        df.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "user_id",
-            "n",
-        )
-    )

@@ -8,34 +8,19 @@ writer must be idempotent (last-write-wins KV upserts are), which replaces
 the reference's sleep/reconnect/retry loop with the engine's own retry
 machinery.
 
-The test harness writer appends to a parquet dir keyed by epoch (so replays
-overwrite deterministically); a Redis/production writer plugs in the same
-interface without touching the query.
+The driver-side dict writer serves tests and the benchmark; a
+Redis/production writer plugs in the same interface without touching the
+query.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
 
 KVWriter = Callable[[DataFrame, int], None]
-
-
-def parquet_kv_writer(out_dir: str) -> KVWriter:
-    """Idempotent test-harness KV sink: one parquet partition per epoch,
-    overwritten on replay (exactly-once effect over at-least-once calls)."""
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"epoch={epoch_id}")
-            )
-        )
-
-    return write
 
 
 def memory_kv_writer(store: dict) -> KVWriter:
@@ -71,55 +56,3 @@ def start_kv_query(
     if available_now:
         q = q.trigger(availableNow=True)
     return q.start()
-
-
-def delta_table_writer(
-    table_dir: str,
-    app_id: str,
-    partition_by: list[str] | None = None,
-):
-    """EXACTLY-ONCE streaming → Delta (round 10): a ``foreachBatch``
-    writer that appends each micro-batch to a transactional Delta
-    table (sources/delta_sink.py) stamped with the protocol's ``txn``
-    action ``(appId=app_id, version=epoch_id)``.  ``foreachBatch`` is
-    at-least-once — after a restart Spark REDELIVERS the last
-    uncommitted batch — and the txn watermark is what turns that into
-    exactly-once: a redelivered epoch finds its (appId, version)
-    already recorded in the snapshot and skips without writing a row.
-    This is the same mechanism delta-io's own streaming sink uses
-    (PROTOCOL.md "Transaction Identifiers").
-
-    ``partition_by`` lands each batch in the table's Hive partition
-    layout (round 11) — the 100 TB shape: a streaming event feed
-    accretes into a date-partitioned lake table whose historical
-    partitions the per-batch appends never touch, so downstream range
-    scans keep partition-pruning against add.partitionValues."""
-    from ..sources.delta_sink import write_delta
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        write_delta(batch_df, table_dir, txn=(app_id, int(epoch_id)),
-                    partition_by=partition_by)
-
-    return write
-
-
-def iceberg_table_writer(
-    table_dir: str,
-    app_id: str,
-    partition_by: list[str] | None = None,
-):
-    """EXACTLY-ONCE streaming → Iceberg (round 12, VERDICT r11 What's
-    missing #4): the `delta_table_writer` twin for format #2.  Each
-    micro-batch appends as a new snapshot whose table properties
-    record the txn watermark ``txn.<app_id> = epoch_id``
-    (sources/iceberg_sink.write_iceberg); a redelivered epoch finds
-    its watermark already at-or-above and skips without writing a row
-    — the same discipline Iceberg's own streaming sink carries in
-    snapshot summary properties."""
-    from ..sources.iceberg_sink import write_iceberg
-
-    def write(batch_df: DataFrame, epoch_id: int) -> None:
-        write_iceberg(batch_df, table_dir, txn=(app_id, int(epoch_id)),
-                      partition_by=partition_by)
-
-    return write

@@ -50,13 +50,9 @@ ID_COLS = {
 
 QUERIES = [
     "hot_items",
-    "pricing_summary",
-    "sessionized_events",
-    "interval_click_view",
     "minhash_lsh_buckets",
     "dedup_components",
     "token_counts",
-    "sql_segment_summary",
     "text_profile",
     "stopword_profile",
     "minhash_verified_pairs",
@@ -100,12 +96,10 @@ QUERIES = [
     # corpus_pipeline 10x result in PLANS)
     "jpeg_progressive_meta",
     "url_canonical_dedup",
-    "decayed_hot_events",
     "gif_meta",
     "warc_corpus_scan",
     "archive_corpus_scan",
     "weighted_sample_docs",
-    "histogram_quantiles",
     "kn_bigram_lm_scores",
     "source_quality_report",
     # round-7: file-granularity container ingestion (fixed 8-shard
@@ -127,26 +121,20 @@ QUERIES = [
     # replica-texture caveat applies (near-dup output grows ~x100 on
     # duplicated text, like fuzzy_title_pairs): judge vs that baseline
     "ssjoin_prefix_pairs",
-    "anomalous_events",
     "pb_log_scan",
     "avro_container_scan",
     "event_transition_matrix",
     "event_interarrival_stats",
     "rfm_segments",
-    "event_value_percentiles_exact",
     "orders_cdc_apply",
     "readability_scores",
     "hashed_features",
     "data_quality_report",
     "frequent_event_paths",
     "customer_360",
-    "winsorized_event_stats",
     "sitemap_scan",
     "compressed_text_scan",
-    "shipping_latency_stats",
     "uuid7_time_scan",
-    "rolling_revenue_7d",
-    "order_day_streaks",
     "access_log_scan",
     # round-7 session-5: the lake-format surface
     "parquet_footer_scan",
@@ -158,18 +146,6 @@ QUERIES = [
     "delta_time_travel",
     "daily_revenue_locf",
     "delta_vacuum_plan",
-    "cumulative_unique_users",
-    "rolling_active_users_7d",
-    "pareto_orders",
-    "ab_test_contingency",
-    "capped_running_balance",
-    "business_days_to_ship",
-    "grouping_sets_revenue",
-    "yoy_weekly_revenue",
-    "array_ops_pipeline",
-    "debounced_events",
-    "unpivot_yearly_revenue",
-    "map_ops_pipeline",
     "parquet_page_scan",
 ]
 

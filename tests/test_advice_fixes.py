@@ -111,35 +111,3 @@ def test_ngram_diversity_degenerate_corpus_matches_oracle(spark, tmp_path):
         for r in con.execute(spec.oracle).fetchall()
     }
     assert got == want
-
-
-def test_histogram_quantiles_integer_bucket_at_large_range(spark, tmp_path):
-    """ADVICE r6 (medium): the Spark bucket expression must use exact
-    integer `div`, not double `/` — for cent ranges near 1e14 the double
-    quotient rounds across an integer (here 341 -> 342), silently
-    misassigning buckets and breaking the bit-exact cross-engine
-    guarantee.  The constants below are a verified counterexample:
-    (c * 1024) // rng == 341 but int((c * 1024) / rng) == 342."""
-    import duckdb
-    import pandas as pd
-
-    from hainan_big_data_recommend_system_spark.qcatalog import EXTRA_REGISTRY
-
-    c_mid = 33_398_437_500_001  # cents; rng = 1e14 + 3
-    c_max = 10**14 + 2
-    assert (c_mid * 1024) // (c_max + 1) != int((c_mid * 1024) / (c_max + 1))
-
-    sf = str(tmp_path)
-    pd.DataFrame(
-        {"value": [0.0, c_mid / 100.0, c_max / 100.0]}
-    ).to_parquet(f"{sf}/events.parquet", index=False)
-
-    spec = EXTRA_REGISTRY["histogram_quantiles"]
-    got = sorted(
-        (r["q"], r["n"], r["target_rank"], r["est_cents"])
-        for r in spec.fn(spark, sf).collect()
-    )
-    con = duckdb.connect()
-    con.execute(f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet'")
-    want = sorted(tuple(r) for r in con.execute(spec.oracle).fetchall())
-    assert got == want

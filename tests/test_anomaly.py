@@ -1,7 +1,8 @@
 """Exact-median / MAD semantics (operators/anomaly.py): lower-median
 tie handling, value-compression correctness vs a brute-force python
-median, and the strict k·MAD flag edge.  The composed event query is
-hash-oracled in tests/test_oracle.py (`anomalous_events`)."""
+median, and the strict k·MAD flag edge.  The queries that compose them
+(`customer_360`, `event_interarrival_stats`) are hash-oracled in
+tests/test_oracle.py."""
 
 from __future__ import annotations
 

@@ -96,70 +96,3 @@ def test_bpe_apply_nulls_pipe_bearing_docs(spark, tiny_words):
     }
     assert got[1] is not None
     assert got[2] is None  # un-tokenizable under the delimiter scheme
-
-
-def test_bpe_train_local_matches_spark_loop(spark, tiny_words, sf_dir):
-    """VERDICT r5 #3: the driver-local vocabulary-scale merge loop must
-    be BIT-identical to the per-round Spark loop — same pair counts,
-    same (count desc, t1 asc, t2 asc) tie-break, same greedy-overlap
-    merge semantics — on both the pinned fixture and a real corpus."""
-    from hainan_big_data_recommend_system_spark.catalog import load_table
-    from hainan_big_data_recommend_system_spark.operators.bpe import (
-        bpe_train_local,
-    )
-
-    assert bpe_train_local(tiny_words, "word", "freq", 2) == bpe_train(
-        tiny_words, "word", "freq", 2
-    )
-    # greedy-overlap parity ('aaa' merges to [aa, a], never [aa, aa])
-    w = spark.createDataFrame([Row(word="aaa", freq=5)])
-    assert bpe_train_local(w, "word", "freq", 2) == bpe_train(
-        w, "word", "freq", 2
-    )
-    # real corpus word table, overlapping n
-    docs = load_table(spark, sf_dir, "documents")
-    wc = word_counts(docs, "text").localCheckpoint(eager=True)
-    assert bpe_train_local(wc, "word", "freq", 8) == bpe_train(
-        wc, "word", "freq", 8
-    )
-
-
-def test_bpe_train_local_vocab_scale(spark, sf_dir):
-    """The point of the local loop: ~1024 merges in seconds (the Spark
-    loop schedules 2 jobs per merge — ~2k sequential jobs at this n).
-    Exhaustion inside the budget is acceptable on a tiny corpus; what is
-    NOT acceptable is minutes of wall or a non-monotone merge table."""
-    import time
-
-    from hainan_big_data_recommend_system_spark.catalog import load_table
-    from hainan_big_data_recommend_system_spark.operators.bpe import (
-        bpe_train_local,
-    )
-
-    wc = word_counts(
-        load_table(spark, sf_dir, "documents"), "text"
-    ).localCheckpoint(eager=True)
-    t0 = time.perf_counter()
-    try:
-        merges = bpe_train_local(wc, "word", "freq", n_merges=1024)
-    except ValueError as e:
-        assert "pair space exhausted" in str(e)
-        merges = []
-    wall = time.perf_counter() - t0
-    assert wall < 30, f"1024-merge local training took {wall:.1f}s"
-    if merges:
-        assert [m[0] for m in merges] == list(range(1, len(merges) + 1))
-        # pair counts never increase as merges consume the pair space
-        # in aggregate? not strictly monotone — but every count positive
-        assert all(m[3] > 0 for m in merges)
-
-
-def test_bpe_train_local_vocab_guard(spark, tiny_words):
-    import pytest as _pytest
-
-    from hainan_big_data_recommend_system_spark.operators.bpe import (
-        bpe_train_local,
-    )
-
-    with _pytest.raises(ValueError, match="max_vocab_rows"):
-        bpe_train_local(tiny_words, "word", "freq", 2, max_vocab_rows=1)

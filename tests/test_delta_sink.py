@@ -239,7 +239,7 @@ def test_optimize_conflict_on_concurrent_remove(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# txn idempotence + exactly-once streaming (round 10)
+# txn idempotence (round 10)
 # ---------------------------------------------------------------------------
 
 def test_txn_makes_commits_idempotent(spark, tmp_path):
@@ -301,102 +301,6 @@ def test_txn_watermark_survives_checkpoint(spark, tmp_path):
         make_last_checkpoint(3, len(ck)), ck, []
     )
     assert got["app_versions"] == full["app_versions"] == {"s": 3}
-
-
-def test_streaming_delta_sink_exactly_once(spark, tmp_path):
-    """Drive a real file-source stream into the Delta sink twice with
-    the SAME epochs (simulating post-restart redelivery): the second
-    pass must be a pure no-op."""
-    from hainan_big_data_recommend_system_spark.sources.delta_sink import (
-        snapshot,
-    )
-    from hainan_big_data_recommend_system_spark.streaming.sinks import (
-        delta_table_writer,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.range(0, 40).selectExpr("id").coalesce(1) \
-        .write.mode("overwrite").json(str(src))
-    tbl = str(tmp_path / "tbl")
-    writer = delta_table_writer(tbl, "stream-app")
-
-    def run(checkpoint):
-        stream = (
-            spark.readStream.schema("id LONG").json(str(src))
-        )
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .option("checkpointLocation", str(tmp_path / checkpoint))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run("ck1")
-    first = snapshot(tbl)
-    assert first["live_rows"] == 40
-    # fresh stream checkpoint → Spark redelivers epoch 0
-    run("ck2")
-    second = snapshot(tbl)
-    assert second["live_rows"] == 40  # txn watermark absorbed the replay
-    assert second["app_versions"] == {"stream-app": 0}
-
-
-def test_streaming_into_partitioned_delta_exactly_once(spark, tmp_path):
-    """Round 11 (VERDICT r10 #8): the streaming writer composes with
-    partition_by — each micro-batch lands in the table's Hive layout
-    with add.partitionValues stamped, the txn watermark still absorbs
-    a restart's redelivered epoch, and the landed table answers a
-    partition-constrained scan by opening only its partition's files
-    (the 100 TB event-lake shape)."""
-    from hainan_big_data_recommend_system_spark.operators.deltalog import (
-        prune_by_partition,
-    )
-    from hainan_big_data_recommend_system_spark.streaming.sinks import (
-        delta_table_writer,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    spark.range(0, 40).selectExpr(
-        "id", "CASE WHEN id % 2 = 0 THEN 'd1' ELSE 'd2' END AS day"
-    ).coalesce(1).write.mode("overwrite").json(str(src))
-    tbl = str(tmp_path / "tbl")
-    writer = delta_table_writer(tbl, "stream-app", partition_by=["day"])
-
-    def run(checkpoint):
-        stream = spark.readStream.schema("id LONG, day STRING").json(
-            str(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(writer)
-            .option("checkpointLocation", str(tmp_path / checkpoint))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run("ck1")
-    first = snapshot(tbl)
-    assert first["live_rows"] == 40
-    assert all(
-        set(v) == {"day"} for v in first["partition_values"].values()
-    )
-    # restart with a fresh stream checkpoint → epoch 0 redelivers,
-    # the txn watermark absorbs it — no duplicate partitions/files
-    run("ck2")
-    second = snapshot(tbl)
-    assert second["live_rows"] == 40
-    assert second["live"] == first["live"]
-    assert second["app_versions"] == {"stream-app": 0}
-    # the landed table partition-prunes like any sink-written table
-    pr = prune_by_partition(second, {"day": {"d1"}})
-    assert pr["n_kept"] < pr["n_kept"] + pr["n_skipped"]
-    assert all(
-        second["partition_values"][p]["day"] == "d1" for p in pr["kept"]
-    )
-    assert pr["rows_kept_max"] == 20
 
 
 def test_empty_batch_appends_are_noops(spark, tmp_path):

@@ -65,43 +65,6 @@ def test_cosine_bounds_and_topk_size(spark, sf_dir):
     assert out.filter(F.col("query_id") == F.col("neighbor_id")).count() == 0
 
 
-def test_ivf_recall_vs_bruteforce(spark, sf_dir):
-    """IVF is approximate by candidate pruning only: every score it emits is
-    exact, ranks are k-bounded, self-pairs excluded, and recall@5 against
-    the exact baseline must clear the (nlist=8, nprobe=2) geometry floor."""
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        cosine_topk_bruteforce,
-        ivf_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    exact = cosine_topk_bruteforce(emb, "vec_id", "embedding", k=5)
-    # same hyperparameters as the catalog query (sampled quantizer fit)
-    approx = ivf_topk(
-        emb, "vec_id", "embedding", k=5, nlist=8, nprobe=2,
-        max_iter=5, fit_fraction=0.25,
-    )
-
-    assert approx.filter(F.col("query_id") == F.col("neighbor_id")).count() == 0
-    assert approx.agg(F.max("rn")).collect()[0][0] <= 5
-
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "inner").count()
-    total = exact.count()
-    assert total > 0
-    recall = hits / total
-    assert recall >= 0.5, f"IVF recall@5 = {recall:.3f} < 0.5"
-
-    # IVF scores are exact: any (query, neighbor) it shares with brute
-    # force must carry the identical sim
-    mismatched = (
-        exact.select("query_id", "neighbor_id", F.col("sim").alias("s_exact"))
-        .join(approx, ["query_id", "neighbor_id"])
-        .filter(F.abs(F.col("sim") - F.col("s_exact")) > 0)
-        .count()
-    )
-    assert mismatched == 0
-
-
 def test_ivf_pinned_recall_vs_bruteforce(spark, sf_oracle_dir):
     """The pinned-quantizer IVF (the oracled catalog form) under the same
     invariants as the trained one: exact scores, k-bound, no self-pairs,
@@ -145,205 +108,3 @@ def test_cosine_symmetry(spark, sf_dir):
     joined = a.join(b, ["query_id", "neighbor_id"], "inner")
     bad = joined.filter(F.abs(F.col("sim") - F.col("sim_t")) > 1e-9).count()
     assert bad == 0
-
-
-def test_choose_ann_strategy_decision_table():
-    """VERDICT r4 #7: the PLANS §12 decision table as code — each row of
-    the measured table maps to the strategy the helper returns."""
-    import pytest as _pytest
-
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        choose_ann_strategy,
-    )
-    from hainan_big_data_recommend_system_spark.operators.lsh import derive_bits
-
-    # small corpus / ground-truth demands -> exact brute force
-    assert choose_ann_strategy(500)["strategy"] == "brute"
-    assert choose_ann_strategy(10**6, recall_target=0.95)["strategy"] == "brute"
-    # trained quantizer + target inside what probing buys -> IVF,
-    # nprobe scaled to the target (floor 2, the measured config)
-    ivf = choose_ann_strategy(10**6, has_quantizer=True, recall_target=0.4)
-    assert ivf == {"strategy": "ivf", "nprobe": 4}
-    assert (
-        choose_ann_strategy(10**6, True, 0.2)["nprobe"] == 2
-    )  # floor: measured 0.441 at nprobe=2
-    # no training stage available -> data-independent LSH with bits
-    # derived from n and tables as the recall knob
-    lsh = choose_ann_strategy(10**6, has_quantizer=False, recall_target=0.6)
-    assert lsh["strategy"] == "lsh"
-    assert lsh["bits"] == derive_bits(10**6)
-    assert lsh["n_tables"] == 16
-    assert choose_ann_strategy(10**6, False, 0.3)["n_tables"] == 4
-    # quantizer present but target above what probing reaches -> LSH
-    assert (
-        choose_ann_strategy(10**6, True, 0.7)["strategy"] == "lsh"
-    )
-    with _pytest.raises(ValueError, match="recall_target"):
-        choose_ann_strategy(1000, recall_target=0.0)
-    # memory budget below the raw float32 footprint -> PQ is the only
-    # regime that fits (16 B codes at the pinned M=16 geometry); targets
-    # above the measured PQ recall are refused, budgets below even the
-    # code size are refused
-    pq_default = choose_ann_strategy(10**6, max_bytes_per_vector=32)
-    assert pq_default["strategy"] == "pq"
-    # ADVICE r5: default target 0.6 exceeds the off-training floor 0.552
-    # -> the corpus-dependence must be surfaced in the result itself
-    assert pq_default["recall_estimate"] == 0.552
-    assert "off-training" in pq_default["warning"]
-    # at or below the off-training floor the gate clears everywhere
-    # measured: no warning
-    safe = choose_ann_strategy(10**6, max_bytes_per_vector=32, recall_target=0.5)
-    assert safe["strategy"] == "pq" and "warning" not in safe
-    assert (
-        choose_ann_strategy(500, max_bytes_per_vector=16)["strategy"] == "pq"
-    )  # memory outranks the brute-force row
-    with _pytest.raises(ValueError, match="measured PQ recall"):
-        choose_ann_strategy(10**6, max_bytes_per_vector=32, recall_target=0.8)
-    with _pytest.raises(ValueError, match="no strategy fits"):
-        choose_ann_strategy(10**6, max_bytes_per_vector=8)
-    # budget at or above raw size -> the memory clause is a no-op
-    assert (
-        choose_ann_strategy(500, max_bytes_per_vector=256)["strategy"]
-        == "brute"
-    )
-
-
-def test_ann_topk_auto_dispatch(spark, sf_dir):
-    """The one-interface dispatcher routes the smoke corpus (n=500) to
-    exact brute force, and forced-large n to LSH — results match the
-    directly-invoked operator bit for bit."""
-    from hainan_big_data_recommend_system_spark.catalog import load_table
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        ann_topk_auto,
-        cosine_topk_bruteforce,
-    )
-    from hainan_big_data_recommend_system_spark.operators.lsh import (
-        lsh_topk_pinned,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = F.col("query_id") % 4 == 0
-    auto = {tuple(r) for r in ann_topk_auto(
-        emb, "vec_id", "embedding", k=5, query_filter=probe
-    ).collect()}
-    exact = {tuple(r) for r in cosine_topk_bruteforce(
-        emb, "vec_id", "embedding", k=5, query_filter=probe
-    ).collect()}
-    assert auto == exact  # n=500 -> brute path, identical output
-
-    forced = {tuple(r) for r in ann_topk_auto(
-        emb, "vec_id", "embedding", k=5, query_filter=probe,
-        n=1_000_000,  # pretend scale: auto must take the LSH path
-    ).collect()}
-    lsh = {tuple(r) for r in lsh_topk_pinned(
-        emb, "vec_id", "embedding", k=5, n_tables=16, bits=15,
-        query_filter=probe,
-    ).collect()}
-    assert forced == lsh
-
-
-def test_ann_topk_auto_pq_dispatch(spark, sf_dir):
-    """A sub-raw memory budget routes through the PQ path — identical to
-    the directly-invoked pq_adc_topk bit for bit."""
-    from hainan_big_data_recommend_system_spark.catalog import load_table
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        ann_topk_auto,
-    )
-    from hainan_big_data_recommend_system_spark.operators.pq import pq_adc_topk
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = F.col("query_id") % 4 == 0
-    auto = {tuple(r) for r in ann_topk_auto(
-        emb, "vec_id", "embedding", k=5, query_filter=probe,
-        max_bytes_per_vector=16,
-    ).collect()}
-    direct = {tuple(r) for r in pq_adc_topk(
-        emb, "vec_id", "embedding", k=5, query_filter=probe
-    ).collect()}
-    assert auto == direct
-
-
-def test_ann_topk_auto_probes_real_dim(spark):
-    """The memory gate must compare the budget against THIS corpus's raw
-    footprint: a 32-dim corpus at 200 B/vector fits raw floats (128 B),
-    so auto must NOT route to PQ (whose codebooks demand 64 dims)."""
-    import pytest as _pytest
-    from pyspark.sql import Row
-
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        ann_topk_auto,
-    )
-
-    emb32 = spark.createDataFrame(
-        [Row(vec_id=i, embedding=[float(i % 7) / 7 + 0.1] * 32) for i in range(12)],
-        "vec_id long, embedding array<float>",
-    )
-    out = ann_topk_auto(
-        emb32, "vec_id", "embedding", k=2, max_bytes_per_vector=200
-    )
-    assert out.count() > 0  # brute path: runs fine on 32-dim vectors
-
-
-def test_choose_ann_strategy_ivfpq_refine_row():
-    """Round 7: memory-constrained + trained quantizer -> IVFPQ with
-    exact re-rank; nprobe scales to the target along the measured
-    off-training floors (0.432/0.712/0.893 at nprobe 2/4/8), and targets
-    above the full-probing floor are refused."""
-    import pytest as _pytest
-
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        choose_ann_strategy,
-    )
-
-    lo = choose_ann_strategy(
-        10**6, has_quantizer=True, recall_target=0.4, max_bytes_per_vector=32
-    )
-    assert lo == {
-        "strategy": "ivfpq_refine", "nprobe": 2, "refine_k": 20,
-        "recall_estimate": 0.432,
-    }
-    mid = choose_ann_strategy(
-        10**6, has_quantizer=True, recall_target=0.6, max_bytes_per_vector=32
-    )
-    assert mid["nprobe"] == 4 and mid["recall_estimate"] == 0.712
-    hi = choose_ann_strategy(
-        10**6, has_quantizer=True, recall_target=0.85, max_bytes_per_vector=32
-    )
-    assert hi["nprobe"] == 8
-    # the refine row lifts the old full-scan-PQ 0.75 ceiling...
-    assert hi["strategy"] == "ivfpq_refine"
-    # ...but not past the measured full-probing floor
-    with _pytest.raises(ValueError, match="ivfpq\\+refine floor"):
-        choose_ann_strategy(
-            10**6, has_quantizer=True, recall_target=0.95,
-            max_bytes_per_vector=32,
-        )
-    # without a quantizer the PQ full-scan row is unchanged
-    assert choose_ann_strategy(
-        10**6, has_quantizer=False, max_bytes_per_vector=32,
-        recall_target=0.5,
-    )["strategy"] == "pq"
-
-
-def test_ann_topk_auto_ivfpq_refine_dispatch(spark, sf_dir):
-    """Memory budget + quantizer routes through the refined path —
-    identical to the directly-invoked operator bit for bit."""
-    from hainan_big_data_recommend_system_spark.catalog import load_table
-    from hainan_big_data_recommend_system_spark.operators.ann import (
-        ann_topk_auto,
-    )
-    from hainan_big_data_recommend_system_spark.operators.pq import (
-        pq_ivf_adc_refined_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = F.col("query_id") % 4 == 0
-    auto = {tuple(r) for r in ann_topk_auto(
-        emb, "vec_id", "embedding", k=5, query_filter=probe,
-        has_quantizer=True, max_bytes_per_vector=32, recall_target=0.4,
-    ).collect()}
-    direct = {tuple(r) for r in pq_ivf_adc_refined_topk(
-        emb, "vec_id", "embedding", k=5, refine_k=20, nprobe=2,
-        query_filter=probe,
-    ).collect()}
-    assert auto == direct

@@ -1,10 +1,6 @@
-"""URL canonicalization (operators/urlnorm.py) edge cases + the decayed
-popularity integer-weight invariants (qcatalog/streamq.py round-6
-additions; their catalog queries are oracle-gated in test_oracle)."""
+"""URL canonicalization (operators/urlnorm.py) edge cases."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from hainan_big_data_recommend_system_spark.operators.urlnorm import canonical_url
 
@@ -51,27 +47,3 @@ def test_canonical_url_collapses_known_equivalents(spark):
         "http://a.b/x/?utm_ref=r&a=1&b=2",
     ]
     assert len(set(_canon(spark, variants))) == 1
-
-
-def test_decayed_weights_are_exact_powers_of_two(spark, tmp_path):
-    """Two events one half-life apart: the older weighs exactly half —
-    decayed_count_milli = 1500 at scale 1000."""
-    import pandas as pd
-
-    from hainan_big_data_recommend_system_spark.qcatalog import EXTRA_REGISTRY
-
-    sf = str(tmp_path)
-    ts0 = pd.Timestamp("2024-01-01")
-    pd.DataFrame(
-        {
-            "event_id": [1, 2],
-            "ts": [ts0, ts0 + pd.Timedelta(days=7)],
-            "user_id": [1, 1],
-            "event_type": ["click", "click"],
-            "value": [1.0, 1.0],
-            "props": ["{}", "{}"],
-        }
-    ).to_parquet(f"{sf}/events.parquet", index=False)
-    row = EXTRA_REGISTRY["decayed_hot_events"].fn(spark, sf).collect()[0]
-    assert row["kmax"] == 1
-    assert row["decayed_count_milli"] == 1500
